@@ -61,19 +61,17 @@ object TableIO {
 
   def write(df: DataFrame, table: String, mode: String = "overwrite",
       partitionBy: Seq[String] = Nil): Unit = {
-    // zstd by default (r8, guide §6): measured on the 300k-doc extraction
-    // output — 249 MB vs snappy's 337 MB at equal-or-better write wall
-    // (WriteProbe: zstd 10.23 s vs snappy 10.64 s min-of-2 at 8 cores);
-    // DuckDB reads zstd parquet natively. Overridable per deployment.
+    // zstd (r8, guide §6): measured on the 300k-doc extraction output —
+    // 249 MB vs snappy's 337 MB at equal-or-better write wall (zstd
+    // 10.23 s vs snappy 10.64 s min-of-2 at 8 cores; the benchmark's
+    // traced run reports the output size as `write.output_mib`); DuckDB
+    // reads zstd parquet natively. Parquet and ORC both take the codec.
     // Path-based (parquet/orc) only: a catalog format configures
     // compression through table properties, and the seam test's `json`
     // provider stand-in has no zstd codec.
     val w0: DataFrameWriter[org.apache.spark.sql.Row] =
       df.write.format(format).mode(mode)
-    val w =
-      if (pathBased) w0.option("compression", df.sparkSession.conf
-        .getOption("spark.graft.parquet.codec").getOrElse("zstd"))
-      else w0
+    val w = if (pathBased) w0.option("compression", "zstd") else w0
     val wp = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
     if (pathBased) wp.save(table) else wp.saveAsTable(table)
   }

@@ -166,7 +166,8 @@ object ExtractJob {
       // read-back (tiny: ≤ P lineage rows + quarantine rows) in ONE scan.
       // List ONLY the tag=1/tag=2 subtrees: discovering the whole table
       // would list the 0..P doc-data dirs too — pure driver-side serial
-      // cost repeated every wave (the Amdahl tail PhaseProbe measured).
+      // cost repeated every wave (part of the Amdahl tail the benchmark's
+      // traced run reports as `bookkeeping.s`).
       val back = TableIO.readSubtrees(spark, s"$outputPath/data",
           Seq(s"tag=$TagLineage", s"tag=$TagQuarantine"))
         .map(_.where(col("pid").isin(wave.map(Integer.valueOf): _*))

@@ -9,14 +9,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object AdaptiveShuffle {
 
-  /** Partition count for `rows` rows at `spark.graft.rowsPerPartition`
-    * rows per partition (default 1,000,000 — a few tens of MB of narrow
-    * rows per task, inside the guide §2.2 100 MB–1 GB band once join
-    * state is counted). Scales to thousands of partitions at corpus size
-    * and to 1 on the bench faces. */
-  def parts(spark: SparkSession, rows: Long): Int = {
-    val perPart = spark.conf.getOption("spark.graft.rowsPerPartition")
-      .map(_.toLong).getOrElse(1000000L)
+  /** Partition count for `rows` rows at 1,000,000 rows per partition (a
+    * few tens of MB of narrow rows per task, inside the guide §2.2
+    * 100 MB–1 GB band once join state is counted). Scales to thousands of
+    * partitions at corpus size and to 1 on the bench faces. */
+  def parts(rows: Long): Int = {
+    val perPart = 1000000L
     math.max(1L, (rows + perPart - 1) / perPart).min(200000L).toInt
   }
 
@@ -44,11 +42,12 @@ private[graft] object AdaptiveShuffle {
     //
     // Width is a QUARTER of the slots, not all of them: every task pays
     // ~15–40 ms of fixed CPU (codegen/encoder init + interpreted
-    // execution until JIT warms — tools/TaskCostProbe; 100–200 ms for
-    // wide-encoder doc kernels in QProf), so on a small input many short
-    // tasks burn more than they parallelize.
-    val maxBytes = df.sparkSession.conf
-      .getOption("spark.graft.spread.maxBytes").map(_.toLong).getOrElse(8L << 20)
+    // execution until JIT warms; measured at local[32], widest stage of
+    // 100k-row SQL vs typed stages at 32/8/4 partitions: SQL ≈ 15 ms/task,
+    // typed 18–39 ms/task — and 100–200 ms for wide-encoder doc kernels in
+    // the per-stage profile `tools/QueryTime` prints), so on a small input
+    // many short tasks burn more than they parallelize.
+    val maxBytes = 8L << 20
     val sizeEst =
       try df.queryExecution.optimizedPlan.stats.sizeInBytes
       catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }

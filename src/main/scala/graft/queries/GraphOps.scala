@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Round-8 shuffle doctrine (guide §2.2/§2.4): every iterative operator
   * here (a) derives its partition count from the MEASURED edge count
-  * (`spark.graft.graph.rowsPerPartition`, default 1M edge rows ≈ tens of
-  * MB per task — never a constant tuned to one box), (b) persists the
+  * (`AdaptiveShuffle.parts`: 1M edge rows ≈ tens of MB per task — never a
+  * core count tuned to one box), (b) persists the
   * edge table HASH-PARTITIONED on the per-round join key so the edge-sized
   * shuffle happens once per run instead of once per round, and (c) opens
   * AQE into cached-plan materialization
@@ -23,9 +23,6 @@ import org.apache.spark.sql.functions._
   * restored in a finally — callers see no conf drift.
   */
 object GraphOps {
-
-  private def adaptiveParts(spark: SparkSession, rows: Long): Int =
-    AdaptiveShuffle.parts(spark, rows)
 
   private type GraphConfScope = AdaptiveShuffle.Scope
 
@@ -97,7 +94,7 @@ object GraphOps {
         col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
         .persist()
       val nEdges = eRaw.count()
-      val p = adaptiveParts(spark, nEdges)
+      val p = AdaptiveShuffle.parts(nEdges)
       scope.pin(p)
       // W(u) = Σ out-weights rides EVERY edge row as a constant across
       // rounds — join it ONCE here instead of once per round (the r7 form
@@ -165,7 +162,7 @@ object GraphOps {
       val e = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst")).persist()
       val nEdges = e.count()
-      val p = adaptiveParts(spark, nEdges)
+      val p = AdaptiveShuffle.parts(nEdges)
       scope.pin(p)
       // canon feeds the orientation AND the closure join, deg feeds the
       // orientation twice plus the output, o self-joins — persist each or
@@ -209,7 +206,7 @@ object GraphOps {
       val eRaw = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst")).persist()
       val nEdges = eRaw.count() // materializes the edge build once; sizes p
-      val p = adaptiveParts(spark, nEdges)
+      val p = AdaptiveShuffle.parts(nEdges)
       scope.pin(p)
       // Edge table hash-partitioned on src ONCE: the per-round rank join
       // reuses this partitioning every round, so the only per-round

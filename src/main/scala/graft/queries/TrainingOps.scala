@@ -692,7 +692,7 @@ object TrainingOps {
       // materialized blocks) and size every loop shuffle from the measured
       // edge count (guide §2.2; 2·|pairs| + |nodes| rows is the closed
       // neighborhood's upper bound)
-      scope.pin(AdaptiveShuffle.parts(spark, 2L * e.count()))
+      scope.pin(AdaptiveShuffle.parts(2L * e.count()))
       // both directions plus a self-loop per node: the hook join over this
       // table sees the CLOSED neighborhood, so the loop body is one join +
       // one agg — no per-round union (unioning a checkpointed table with its
@@ -858,8 +858,8 @@ object TrainingOps {
     // eager-truncate before the self-join: both candidate sides reference
     // the bucketing kernel + cap pipeline, and the typed hyperplane map's
     // broadcast/closure otherwise rides every task of every consumer
-    // (QProf: task-deser dominated the three 32-task stages) — the
-    // minhashPairs truncation rationale
+    // (QueryTime's stage profile: task-deser dominated the three 32-task
+    // stages) — the minhashPairs truncation rationale
     val e =
       (if (maxBucket > 0) dropHotGroups(e0, Seq("bucket"), maxBucket)
       else e0).localCheckpoint(true)
@@ -2211,7 +2211,7 @@ object TrainingOps {
     try {
       // pin INSIDE the try: a failing count action must still restore the
       // session confs (the Scope contract)
-      scope.pin(AdaptiveShuffle.parts(spark, vocab.count()))
+      scope.pin(AdaptiveShuffle.parts(vocab.count()))
       var it = 1
       var continue = true
       while (it <= nMerges && continue) {

@@ -29,16 +29,10 @@ import graft.queries.TrainingOps
   * smallest rung, an exact two-sided exceptAll.
   *
   * Env: BUDGETSCALE_SIZES (csv, default "250000,1000000,4000000"),
-  * BUDGETSCALE_SOURCES (default 4), BUDGETSCALE_CPUS (default 32),
-  * BUDGETSCALE_REPS (default 3, min taken, formulations interleaved).
+  * BUDGETSCALE_SOURCES (default 4), BUDGETSCALE_REPS (default 3, min
+  * taken, formulations interleaved), SPARK_GRAFT_CPUS.
   */
 object BudgetScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
 
   /** Deterministic pre-scored base: ratio uniform over the 10⁴ 4-dp grid
     * (the parameter bound the group table is sized by), tokens 5..40. */
@@ -59,16 +53,10 @@ object BudgetScale {
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("BUDGETSCALE_SIZES", "250000,1000000,4000000")
-      .split(",").map(_.trim.toLong).toSeq
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("BUDGETSCALE_SIZES", "250000,1000000,4000000")
     val nSources = sys.env.getOrElse("BUDGETSCALE_SOURCES", "4").toInt
-    val cpus = sys.env.getOrElse("BUDGETSCALE_CPUS", "32").toInt
     val reps = sys.env.getOrElse("BUDGETSCALE_REPS", "3").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // warm both codepaths so the smallest size isn't charged JVM/codegen
     val warm = base(spark, 20000, nSources).cache(); warm.count()
@@ -80,17 +68,9 @@ object BudgetScale {
       val b = base(spark, n, nSources).cache(); b.count()
       // ~half the per-source token mass: E[tokens] = 22.5 per doc
       val budget = 22L * n / (nSources.toLong * 2L)
-      var twoCk: (Long, Long, Long) = null
-      var nvCk: (Long, Long, Long) = null
-      var twoSec = Double.MaxValue
-      var nvSec = Double.MaxValue
-      // interleave formulations so a steal wave hits both equally
-      (1 to reps).foreach { _ =>
-        val (c1, s1) = time(checksum(TrainingOps.budgetSelectNaiveFromBase(b, budget)))
-        nvCk = c1; nvSec = math.min(nvSec, s1)
-        val (c2, s2) = time(checksum(TrainingOps.budgetSelectFromBase(b, budget)))
-        twoCk = c2; twoSec = math.min(twoSec, s2)
-      }
+      val Seq((nvCk, nvSec), (twoCk, twoSec)) = Probe.minOf(reps)(
+        () => checksum(TrainingOps.budgetSelectNaiveFromBase(b, budget)),
+        () => checksum(TrainingOps.budgetSelectFromBase(b, budget)))
       require(twoCk == nvCk,
         s"parity broke at n=$n: two-phase $twoCk vs naive $nvCk")
       if (n == sizes.min) {
@@ -107,9 +87,7 @@ object BudgetScale {
     }
     val (n0, nv0, tw0) = rows.head
     val (n1, nv1, tw1) = rows.last
-    val g = math.log(n1.toDouble / n0)
-    println(f"BUDGETSCALE alpha naive=${math.log(nv1 / nv0) / g}%.2f " +
-      f"two_phase=${math.log(tw1 / tw0) / g}%.2f (sizes ${n0}->${n1}, 1.0=linear)")
-    spark.stop()
+    println(s"BUDGETSCALE alpha naive=${Probe.alpha(n0, n1, nv0, nv1)} " +
+      s"two_phase=${Probe.alpha(n0, n1, tw0, tw1)} (sizes ${n0}->${n1}, 1.0=linear)")
   }
 }

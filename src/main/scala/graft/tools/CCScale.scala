@@ -20,16 +20,10 @@ import graft.queries.TrainingOps
   *    (LSH components are band-cliques). Rounds stay O(1); exact
   *    invariant: n/5 components, each labelled by its minimum member.
   *
-  * Env: CCSCALE_SIZES (csv, default "10000,100000"),
-  * CCSCALE_CPUS (default 32).
+  * Env: CCSCALE_SIZES (csv, default "10000,100000"), SPARK_GRAFT_CPUS.
   */
 object CCScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Probe.time
 
   def chain(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
@@ -46,14 +40,8 @@ object CCScale {
     }.toDF("doc_a", "doc_b")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("CCSCALE_SIZES", "10000,100000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("CCSCALE_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("CCSCALE_SIZES", "10000,100000")
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.connectedComponents(spark, chain(spark, 500)).count()
@@ -80,13 +68,10 @@ object CCScale {
     if (rows.size >= 2) {
       val (n0, _, cs0, _, ls0) = rows.head
       val (n1, _, cs1, _, ls1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"CCSCALE growth n=$n0->$n1: chain_sec_alpha=${alpha(cs0, cs1)} " +
         s"cliques_sec_alpha=${alpha(ls0, ls1)} (1.0 = linear; chain carries " +
         "a log-factor from rounds, cliques should be ~flat-to-linear)")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.TrainingOps
@@ -28,47 +27,20 @@ import graft.queries.TrainingOps
   * false positives — the measured check of both Bloom guarantees).
   *
   * Env: CONTAMSCALE_SIZES (csv, default "5000,20000,50000"),
-  * CONTAMSCALE_CPUS (default 32).
+  * SPARK_GRAFT_CPUS.
   */
 object ContamScale {
+  import Probe.time
 
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
+  /** (eval docs, summed overlap, contaminated docs) of a check's output. */
+  private def agg3(df: DataFrame): (Long, Long, Long) = {
+    val r = df.agg(count(lit(1)), sum(col("n_overlap")),
+      sum(when(col("contaminated"), 1L).otherwise(0L))).collect()(0)
+    (r.getLong(0), r.getLong(1), r.getLong(2))
   }
 
-  /** Cumulative shuffle-WRITE bytes across completed stages — the
-    * cluster-scale cost a single-box wall clock hides (local tmpfs shuffle
-    * is nearly free here; on a real cluster exchanged bytes cross the
-    * network). Listener events are async: callers settle briefly after the
-    * timed action before reading a delta. */
-  private final class ShuffleBytes extends SparkListener {
-    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
-      bytes.addAndGet(ev.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-  }
-
-  private def timeWithShuffle[T](spark: SparkSession)(body: => T): (T, Double, Long) = {
-    val l = new ShuffleBytes
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val t0 = System.nanoTime()
-      val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(800) // let the async listener bus drain stage events
-      (r, sec, l.bytes.get())
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("CONTAMSCALE_SIZES", "5000,20000,50000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("CONTAMSCALE_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("CONTAMSCALE_SIZES", "5000,20000,50000")
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.contaminationCheck(spark, DedupScale.corpus(spark, 2000)).count()
@@ -77,14 +49,7 @@ object ContamScale {
     val rows = sizes.map { n =>
       val docs = DedupScale.corpus(spark, n).cache()
       docs.count()
-      val (contam, cSec) = time {
-        val r = TrainingOps.contaminationCheck(spark, docs)
-          .agg(count(lit(1)).as("eval_docs"),
-            sum(col("n_overlap")).as("overlap_sum"),
-            sum(when(col("contaminated"), 1L).otherwise(0L)).as("contaminated_docs"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
+      val (contam, cSec) = time(agg3(TrainingOps.contaminationCheck(spark, docs)))
       val (flagged, rSec) = time(
         TrainingOps.repetitionStats(spark, docs).where(col("flagged")).count())
       // Bloom pre-filter face (T30): same aggregate must come back
@@ -96,14 +61,8 @@ object ContamScale {
       // configuration than the path being timed); the audit's own train
       // build is materialized once and reused for sizing, Bloom, and count
       val (gramN, evalMod, fpp) = (8, 20, 0.01)
-      val (bloom, bSec) = time {
-        val r = TrainingOps.contaminationCheckBloom(spark, docs, gramN, evalMod, fpp)
-          .agg(count(lit(1)).as("eval_docs"),
-            sum(col("n_overlap")).as("overlap_sum"),
-            sum(when(col("contaminated"), 1L).otherwise(0L)).as("contaminated_docs"))
-          .collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
+      val (bloom, bSec) = time(agg3(
+        TrainingOps.contaminationCheckBloom(spark, docs, gramN, evalMod, fpp)))
       val parity = bloom == contam
       val evalG = TrainingOps.gramsOf(spark,
         docs.where(pmod(col("doc_id").cast("long"), lit(evalMod)) === 0),
@@ -136,9 +95,7 @@ object ContamScale {
     if (rows.size >= 2) {
       val (n0, e0, cs0, rs0) = rows.head
       val (n1, e1, cs1, rs1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"CONTAMSCALE growth n=$n0->$n1: " +
         s"eval_docs_alpha=${alpha(e0.toDouble, e1.toDouble)} " +
         s"contam_sec_alpha=${alpha(cs0, cs1)} " +
@@ -146,7 +103,6 @@ object ContamScale {
     }
 
     prodShape(spark)
-    spark.stop()
   }
 
   /** One doc of 40 unique-vocab words; `plantOf` maps a doc index to the
@@ -159,14 +115,11 @@ object ContamScale {
     spark.range(0L, n).map { i =>
       val p = plantOf(i)
       val text =
-        if (p >= 0) (0 until 40).map(w => vocabWord(s"plant$p:$w")).mkString(" ")
-        else (0 until 40).map(w => vocabWord(s"$keyPrefix$i:$w")).mkString(" ")
+        if (p >= 0) (0 until 40).map(w => DedupScale.vocabWord(s"plant$p:$w")).mkString(" ")
+        else (0 until 40).map(w => DedupScale.vocabWord(s"$keyPrefix$i:$w")).mkString(" ")
       (i, text)
     }.toDF("doc_id", "text")
   }
-
-  private def vocabWord(key: String): String =
-    s"w${math.floorMod(scala.util.hashing.MurmurHash3.stringHash(key, 9001), 5000)}"
 
   /** Production-decontamination measurements for the T30 Bloom face — the
     * two regimes the operator scaladoc claims, with overlap ≪ 1% (every
@@ -211,8 +164,7 @@ object ContamScale {
     val fpp = 0.01
 
     // --- scenario A: fixed ~2.5k-doc eval slice, train grown
-    val aSizes = sys.env.getOrElse("CONTAMSCALE_FIXED_EVAL_SIZES", "50000,200000,500000")
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
+    val aSizes = Probe.sizes("CONTAMSCALE_FIXED_EVAL_SIZES", "50000,200000,500000")
     for (n <- aSizes) {
       val evalMod = math.max(2L, n / 2500L).toInt
       // every 250th eval doc copies its train neighbor (doc_id + 1)
@@ -224,11 +176,6 @@ object ContamScale {
         else -1L
       }.cache()
       docs.count()
-      def agg3(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.agg(count(lit(1)), sum(col("n_overlap")),
-          sum(when(col("contaminated"), 1L).otherwise(0L))).collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
       val (plain, pSec) = time(agg3(
         TrainingOps.contaminationCheck(spark, docs, 8, evalMod, hashGrams = true)))
       val (bloom, bSec) = time(agg3(
@@ -240,22 +187,24 @@ object ContamScale {
     }
 
     // --- scenario B: fixed large reference-gram table, corpus sweep grown
-    val bSizes = sys.env.getOrElse("CONTAMSCALE_SWEEP_SIZES", "100000,400000")
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
+    val bSizes = Probe.sizes("CONTAMSCALE_SWEEP_SIZES", "100000,400000")
     if (bSizes.isEmpty) return
     val refDocs = sys.env.getOrElse("CONTAMSCALE_REF_DOCS", "250000").toLong
     val ref = synthDocs(spark, refDocs, "r")(i => if (i % 250 == 0) i / 250 else -1L)
     val refGrams = TrainingOps.gramsOf(spark, ref, 8, hashed = true)
       .select(col("g")).distinct().localCheckpoint(true)
     val refGramCount = refGrams.count()
+    // shuffle-WRITE bytes are the cluster-scale cost a single-box wall
+    // clock hides (local tmpfs shuffle is nearly free here; on a real
+    // cluster exchanged bytes cross the network)
+    val tally = new Probe.Tally(spark)
     // the per-snapshot Bloom artifact: built ONCE, reused by every sweep
     // (its tree-agg exchanges one ~10 MB partial per partition — a
     // cluster-width cost, constant in corpus size)
-    val (bloom, buildSec, buildShuf) =
-      timeWithShuffle(spark)(TrainingOps.trainGramBloom(refGrams, fpp))
+    val (bloom, buildSec, build) = tally.measure(TrainingOps.trainGramBloom(refGrams, fpp))
     println(f"CONTAMPROD_BLOOM_BUILD ref_grams=$refGramCount%d fpp=$fpp%.2f " +
       f"bits=${bloom.bitSize()}%d build_sec=$buildSec%.1f " +
-      f"build_shuffle_mb=${buildShuf / 1048576}%d")
+      f"build_shuffle_mb=${build.shuffleWriteB / 1048576}%d")
     for (n <- bSizes) {
       // every 250th corpus doc copies a reference doc (plant ids cycle
       // through the reference's planted texts)
@@ -264,28 +213,23 @@ object ContamScale {
         if (i % 250 == 0) (i / 250) % nPlants else -1L
       }.cache()
       corpus.count()
-      def agg3(df: org.apache.spark.sql.DataFrame) = {
-        val r = df.agg(count(lit(1)), sum(col("n_overlap")),
-          sum(when(col("contaminated"), 1L).otherwise(0L))).collect()(0)
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      }
       for (regime <- Seq("broadcastable", "oversize")) {
         val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         if (regime == "oversize")
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try {
           // evalMod=1: EVERY corpus doc is checked (the sweep direction)
-          val (plain, pSec, pShuf) = timeWithShuffle(spark)(agg3(
+          val (plain, pSec, pw) = tally.measure(agg3(
             TrainingOps.contaminationFromTrainGrams(
               spark, corpus, refGrams, 8, evalMod = 1, hashGrams = true)))
-          val (bl, bSec, bShuf) = timeWithShuffle(spark)(agg3(
+          val (bl, bSec, bw) = tally.measure(agg3(
             TrainingOps.contaminationBloomPrebuilt(
               spark, corpus, refGrams, bloom, 8, evalMod = 1)))
           println(f"CONTAMPROD_B regime=$regime%s ref_grams=$refGramCount%d " +
             f"corpus_docs=$n%d contaminated=${plain._3}%d " +
             f"plain_sec=$pSec%.1f bloom_sec=$bSec%.1f " +
-            f"plain_shuffle_mb=${pShuf / 1048576}%d " +
-            f"bloom_shuffle_mb=${bShuf / 1048576}%d parity=${plain == bl}%b")
+            f"plain_shuffle_mb=${pw.shuffleWriteB / 1048576}%d " +
+            f"bloom_shuffle_mb=${bw.shuffleWriteB / 1048576}%d parity=${plain == bl}%b")
         } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       }
       // join-input reduction audit: corpus grams admitted by the Bloom

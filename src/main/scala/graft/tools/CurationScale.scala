@@ -1,9 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -40,11 +36,11 @@ import graft.queries.TrainingOps
   * resolution on top is pair-family agnostic (OpsSpec pins it).
   *
   * Env knobs: CURATION_DOCS (1000000), CURATION_PARTS (512),
-  * CURATION_CPUS (32).
+  * SPARK_GRAFT_CPUS.
   *
   * Each stage prints, besides its wall clock, the summed task
-  * `executorCpuTime` (cpu=) and `executorRunTime` (run=) from a TaskEnd
-  * listener. Host steal is never credited to task CPU — it inflates only
+  * `executorCpuTime` (cpu=) and `executorRunTime` (run=) from the probes'
+  * tally listener. Host steal is never credited to task CPU — it inflates only
   * wall and run — so the cross-SIZE cpu ratio measures the job's work
   * growth steal-robustly, and run/cpu per stage exposes each stage's wave
   * exposure. (A boot-wide system-time pathology — see CLAUDE.md — inflates
@@ -53,209 +49,154 @@ import graft.queries.TrainingOps
   */
 object CurationScale {
 
-  /** Sums task executorCpuTime/executorRunTime across all completed tasks.
-    * TaskEnd events are delivered asynchronously after the action returns,
-    * so readers go through settle(), which waits for the counters to stop
-    * moving (3 consecutive quiet 100 ms polls, 5 s bound) — the private
-    * listenerBus.waitUntilEmpty is not reachable from this package.
-    */
-  private final class CpuTally extends SparkListener {
-    private val cpuNs = new AtomicLong(0L)
-    private val runMs = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) { cpuNs.addAndGet(m.executorCpuTime); runMs.addAndGet(m.executorRunTime) }
-    }
-    /** (cpu sec, run sec) once the async event stream has drained. */
-    def settle(): (Double, Double) = {
-      var last = (cpuNs.get, runMs.get)
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 5000) {
-        Thread.sleep(100); waited += 100
-        val now = (cpuNs.get, runMs.get)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      (last._1 / 1e9, last._2 / 1e3)
-    }
-  }
+  // shuffle spill on memory-backed storage, like the bench working set:
+  // on a real cluster per-executor local disks scale with the cluster,
+  // while this box's one root disk (17 GB free) is the fixed resource
+  // the probe must not be throttled by (the 1M contamination join's
+  // string-gram spill exhausted it — see hashGrams)
+  def main(args: Array[String]): Unit =
+    Probe.withTmpDir("graftcuration")(base => Probe.withSpark(localDir = Some(base))(run(_, base)))
 
-  private var tally: CpuTally = _
-
-  /** (result, wall sec, task-cpu sec, task-run sec) for one stage. */
-  private def time[T](body: => T): (T, Double, Double, Double) = {
-    val (cpu0, run0) = tally.settle()
-    val t0 = System.nanoTime()
-    val r = body
-    val wall = (System.nanoTime() - t0) / 1e9
-    val (cpu1, run1) = tally.settle()
-    (r, wall, cpu1 - cpu0, run1 - run0)
-  }
-
-  def main(args: Array[String]): Unit = {
+  private def run(spark: SparkSession, base: String): Unit = {
     val nDocs = sys.env.getOrElse("CURATION_DOCS", "1000000").toLong
     val parts = sys.env.getOrElse("CURATION_PARTS", "512").toInt
-    val cpus = sys.env.getOrElse("CURATION_CPUS", "32").toInt
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shuffle spill on memory-backed storage, like the bench working set:
-      // on a real cluster per-executor local disks scale with the cluster,
-      // while this box's one root disk (17 GB free) is the fixed resource
-      // the probe must not be throttled by (the 1M contamination join's
-      // string-gram spill exhausted it — see hashGrams)
-      .config("spark.local.dir",
-        if (Files.isDirectory(shm)) Files.createTempDirectory(shm, "graftlocal").toString
-        else System.getProperty("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    tally = new CpuTally
-    spark.sparkContext.addSparkListener(tally)
-    val base = (if (Files.isDirectory(shm)) Files.createTempDirectory(shm, "graftcuration")
-      else Files.createTempDirectory("graftcuration")).toString
-    try {
-      CorpusWriter.write(spark, nDocs, s"$base/in", parts) // setup, untimed
-
-      // stage 1: extraction (the north-rule job)
-      val (rep, s1, c1, r1) = time(ExtractJob.run(spark, s"$base/in", s"$base/ex", "cur", parts))
-      require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
-      println(f"CURATION stage=extract sec=$s1%.1f cpu=$c1%.1f run=$r1%.1f out=${rep.docsOut}")
-
-      // stage 2: document text + quality gate (narrow + pushed filter),
-      // then the deterministic dup plant: ids d9…/d8… (numerically and
-      // lexicographically above every original, so the min-survivor rule
-      // always keeps the original) carrying an exact copy / a copy with a
-      // 6-token tail (shingle-set Jaccard ≈ 0.9 at ~100-word docs)
-      val texts = CurationJob.docText(ExtractJob.readSpans(spark, s"$base/ex").toDF())
-      val (_, s2, c2, r2) = time {
-        val q = CurationJob.qualityGate(texts)
-        val idNum = substring(col("doc_id"), 2, 18).cast("long")
-        val exactClones = q.where(pmod(idNum, lit(50)) === 0)
-          .select(concat(lit("d9"), substring(col("doc_id"), 2, 18)).as("doc_id"),
-            col("text"))
-        val nearClones = q.where(pmod(idNum, lit(50)) === 1)
-          .select(concat(lit("d8"), substring(col("doc_id"), 2, 18)).as("doc_id"),
-            concat(col("text"), lit(" qv wq zx near dup tail marker")).as("text"))
-        // contamination plant: new EVAL-slice docs (id ≡ 0 mod 20, d7…
-        // range) whose first 8 words are copied verbatim from a TRAIN doc
-        // (source id % 50 == 2 is never ≡ 0 mod 20) and whose tail is
-        // unique (contains the source id as a token) — each must register
-        // exactly as contaminated at stage 5, while its Jaccard to the
-        // source (~6 shared trigrams) is far below every dedup threshold
-        val contamClones = q.where(pmod(idNum, lit(50)) === 2)
-          .select(concat(lit("d"),
-              (lit(70000000000L) + idNum * 20).cast("string")).as("doc_id"),
-            concat(substring_index(col("text"), " ", 8),
-              lit(" contamination probe filler "), col("doc_id")).as("text"))
-        TableIO.write(q.union(exactClones).union(nearClones).union(contamClones),
-          s"$base/texts")
-      }
-      val textsT = TableIO.read(spark, s"$base/texts")
-      val nWithPlant = textsT.count()
-      val nPlantExact = textsT.where(col("doc_id").startsWith("d9")).count()
-      val nPlantNear = textsT.where(col("doc_id").startsWith("d8")).count()
-      val nPlantContam = textsT.where(col("doc_id").startsWith("d7")).count()
-      val nQuality = nWithPlant - nPlantExact - nPlantNear - nPlantContam
-      println(f"CURATION stage=quality sec=$s2%.1f cpu=$c2%.1f run=$r2%.1f out=$nQuality " +
-        f"(plant_exact=$nPlantExact plant_near=$nPlantNear plant_contam=$nPlantContam)")
-
-      // stage 3: exact dedup (one hash-groupBy shuffle) — must drop
-      // exactly the planted exact clones on this corpus
-      val (_, s3, c3, r3) = time(TableIO.write(
-        CurationJob.dedup(TableIO.read(spark, s"$base/texts")), s"$base/curated"))
-      val nCurated = TableIO.read(spark, s"$base/curated").count()
-      println(f"CURATION stage=exact_dedup sec=$s3%.1f cpu=$c3%.1f run=$r3%.1f out=$nCurated " +
-        f"(dropped=${nWithPlant - nCurated} expected=$nPlantExact)")
-
-      // stage 4: near-dup cluster resolution — minhash-LSH candidate pairs
-      // (estimated sim ≥ 0.5; planted tails sit at ≈ 0.9 where the 16×4
-      // band recall is ≈ 1.0) → connected components → drop non-minimum
-      // members
-      val curNum = TableIO.read(spark, s"$base/curated")
-        .select(substring(col("doc_id"), 2, 18).cast("long").as("doc_id"), col("text"))
-      val (_, s4, c4, r4) = time(TableIO.write(
-        TrainingOps.connectedComponents(spark,
-            TrainingOps.minhashPairs(spark, curNum, minSim = 0.5)
-              .select(col("doc_a"), col("doc_b")))
-          .select(col("node").as("doc_id"), col("comp").as("component")),
-        s"$base/clusters"))
-      val clusters = TableIO.read(spark, s"$base/clusters")
-      val members = clusters.count()
-      val comps = clusters.select("component").distinct().count()
-      val dropped = members - comps
-      val nSurvive = nCurated - dropped
-      println(f"CURATION stage=neardup_cc sec=$s4%.1f cpu=$c4%.1f run=$r4%.1f out=$nSurvive " +
-        f"(cluster_members=$members clusters=$comps dropped=$dropped " +
-        f"expected=$nPlantNear recall=${dropped.toDouble / math.max(1, nPlantNear)}%.3f)")
-
-      // stage 5: contamination check over the near-dup survivors
-      val survivors = curNum.join(
-        clusters.where(col("doc_id") =!= col("component")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      val (_, s5, c5, r5) = time(TableIO.write(
-        TrainingOps.contaminationCheck(spark, survivors, hashGrams = true),
-        s"$base/contam"))
-      val contam = TableIO.read(spark, s"$base/contam")
-      val nEval = contam.count()
-      val nContaminated = contam.where(col("contaminated")).count()
-      println(f"CURATION stage=contamination sec=$s5%.1f cpu=$c5%.1f run=$r5%.1f eval=$nEval " +
-        f"contaminated=$nContaminated expected=$nPlantContam")
-
-      // stage 6: unigram-LM perplexity gate (T28) over the decontaminated
-      // corpus — contaminated eval docs drop, the rest score against the
-      // corpus's own unigram distribution. A fixed nats/token threshold is
-      // a property of a particular corpus (the graded query pins 3.5 on
-      // the testdata vocabulary; this generator's murmur vocab sits much
-      // higher), so the composed pipeline does what CCNet does: score,
-      // then cut the worst tail — here the exact p99 of the score
-      val decontam = survivors.join(
-        contam.where(col("contaminated")).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      val (_, s6, c6, r6) = time(TableIO.write(
-        TrainingOps.unigramLogProb(decontam), s"$base/scored"))
-      val scored = TableIO.read(spark, s"$base/scored")
-      val nScored = scored.count()
-      val cut = scored.agg(expr("percentile(avg_neg_logprob, 0.99)"))
-        .collect()(0).getDouble(0)
-      val nFlagged = scored.where(col("avg_neg_logprob") > cut).count()
-      println(f"CURATION stage=perplexity sec=$s6%.1f cpu=$c6%.1f run=$r6%.1f scored=$nScored " +
-        f"p99_cut=$cut%.4f flagged=$nFlagged")
-
-      // stage 7: greedy sequence packing (T29) of the kept corpus into
-      // 512-token context windows — the step that turns curated documents
-      // into training samples; fill = token mass / window capacity across
-      // the packed bins (oversize docs overflow a bin of their own)
-      val kept = decontam.join(
-        scored.where(col("avg_neg_logprob") > cut).select("doc_id"),
-        Seq("doc_id"), "left_anti")
-      val (_, s7, c7, r7) = time(TableIO.write(
-        TrainingOps.sequencePack(spark, kept, capacity = 512,
-          nShards = math.max(64, parts)), s"$base/packed"))
-      val p = TableIO.read(spark, s"$base/packed")
-        .agg(count(lit(1)).as("docs"),
-          countDistinct(col("shard"), col("bin")).as("bins"),
-          sum(col("n_tok")).as("tokens")).collect()(0)
-      val fill = p.getLong(2).toDouble / (p.getLong(1) * 512.0)
-      println(f"CURATION stage=seq_pack sec=$s7%.1f cpu=$c7%.1f run=$r7%.1f docs=${p.getLong(0)} " +
-        f"windows=${p.getLong(1)} tokens=${p.getLong(2)} fill=$fill%.3f")
-
-      val total = s1 + s2 + s3 + s4 + s5 + s6 + s7
-      val cpuTotal = c1 + c2 + c3 + c4 + c5 + c6 + c7
-      println(f"CURATION total docs=$nDocs parts=$parts cpus=$cpus " +
-        f"sec=$total%.1f cpu=$cpuTotal%.1f docs_per_sec=${nDocs / total}%.0f " +
-        f"quality_ratio=${nQuality.toDouble / nDocs}%.4f " +
-        f"exact_drop=${nWithPlant - nCurated} neardup_drop=$dropped " +
-        f"contam_drop=$nContaminated ppl_drop=$nFlagged windows=${p.getLong(1)}")
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        Files.walk(java.nio.file.Paths.get(base)).iterator().asScala
-          .toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-      spark.stop()
+    val tally = new Probe.Tally(spark)
+    /** (result, wall sec, task-cpu sec, task-run sec) for one stage. */
+    def time[T](body: => T): (T, Double, Double, Double) = {
+      val (r, wall, w) = tally.measure(body)
+      (r, wall, w.cpuSec, w.runSec)
     }
+    CorpusWriter.write(spark, nDocs, s"$base/in", parts) // setup, untimed
+
+    // stage 1: extraction (the north-rule job)
+    val (rep, s1, c1, r1) = time(ExtractJob.run(spark, s"$base/in", s"$base/ex", "cur", parts))
+    require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
+    println(f"CURATION stage=extract sec=$s1%.1f cpu=$c1%.1f run=$r1%.1f out=${rep.docsOut}")
+
+    // stage 2: document text + quality gate (narrow + pushed filter),
+    // then the deterministic dup plant: ids d9…/d8… (numerically and
+    // lexicographically above every original, so the min-survivor rule
+    // always keeps the original) carrying an exact copy / a copy with a
+    // 6-token tail (shingle-set Jaccard ≈ 0.9 at ~100-word docs)
+    val texts = CurationJob.docText(ExtractJob.readSpans(spark, s"$base/ex").toDF())
+    val (_, s2, c2, r2) = time {
+      val q = CurationJob.qualityGate(texts)
+      val idNum = substring(col("doc_id"), 2, 18).cast("long")
+      val exactClones = q.where(pmod(idNum, lit(50)) === 0)
+        .select(concat(lit("d9"), substring(col("doc_id"), 2, 18)).as("doc_id"),
+          col("text"))
+      val nearClones = q.where(pmod(idNum, lit(50)) === 1)
+        .select(concat(lit("d8"), substring(col("doc_id"), 2, 18)).as("doc_id"),
+          concat(col("text"), lit(" qv wq zx near dup tail marker")).as("text"))
+      // contamination plant: new EVAL-slice docs (id ≡ 0 mod 20, d7…
+      // range) whose first 8 words are copied verbatim from a TRAIN doc
+      // (source id % 50 == 2 is never ≡ 0 mod 20) and whose tail is
+      // unique (contains the source id as a token) — each must register
+      // exactly as contaminated at stage 5, while its Jaccard to the
+      // source (~6 shared trigrams) is far below every dedup threshold
+      val contamClones = q.where(pmod(idNum, lit(50)) === 2)
+        .select(concat(lit("d"),
+            (lit(70000000000L) + idNum * 20).cast("string")).as("doc_id"),
+          concat(substring_index(col("text"), " ", 8),
+            lit(" contamination probe filler "), col("doc_id")).as("text"))
+      TableIO.write(q.union(exactClones).union(nearClones).union(contamClones),
+        s"$base/texts")
+    }
+    val textsT = TableIO.read(spark, s"$base/texts")
+    val nWithPlant = textsT.count()
+    val nPlantExact = textsT.where(col("doc_id").startsWith("d9")).count()
+    val nPlantNear = textsT.where(col("doc_id").startsWith("d8")).count()
+    val nPlantContam = textsT.where(col("doc_id").startsWith("d7")).count()
+    val nQuality = nWithPlant - nPlantExact - nPlantNear - nPlantContam
+    println(f"CURATION stage=quality sec=$s2%.1f cpu=$c2%.1f run=$r2%.1f out=$nQuality " +
+      f"(plant_exact=$nPlantExact plant_near=$nPlantNear plant_contam=$nPlantContam)")
+
+    // stage 3: exact dedup (one hash-groupBy shuffle) — must drop
+    // exactly the planted exact clones on this corpus
+    val (_, s3, c3, r3) = time(TableIO.write(
+      CurationJob.dedup(TableIO.read(spark, s"$base/texts")), s"$base/curated"))
+    val nCurated = TableIO.read(spark, s"$base/curated").count()
+    println(f"CURATION stage=exact_dedup sec=$s3%.1f cpu=$c3%.1f run=$r3%.1f out=$nCurated " +
+      f"(dropped=${nWithPlant - nCurated} expected=$nPlantExact)")
+
+    // stage 4: near-dup cluster resolution — minhash-LSH candidate pairs
+    // (estimated sim ≥ 0.5; planted tails sit at ≈ 0.9 where the 16×4
+    // band recall is ≈ 1.0) → connected components → drop non-minimum
+    // members
+    val curNum = TableIO.read(spark, s"$base/curated")
+      .select(substring(col("doc_id"), 2, 18).cast("long").as("doc_id"), col("text"))
+    val (_, s4, c4, r4) = time(TableIO.write(
+      TrainingOps.connectedComponents(spark,
+          TrainingOps.minhashPairs(spark, curNum, minSim = 0.5)
+            .select(col("doc_a"), col("doc_b")))
+        .select(col("node").as("doc_id"), col("comp").as("component")),
+      s"$base/clusters"))
+    val clusters = TableIO.read(spark, s"$base/clusters")
+    val members = clusters.count()
+    val comps = clusters.select("component").distinct().count()
+    val dropped = members - comps
+    val nSurvive = nCurated - dropped
+    println(f"CURATION stage=neardup_cc sec=$s4%.1f cpu=$c4%.1f run=$r4%.1f out=$nSurvive " +
+      f"(cluster_members=$members clusters=$comps dropped=$dropped " +
+      f"expected=$nPlantNear recall=${dropped.toDouble / math.max(1, nPlantNear)}%.3f)")
+
+    // stage 5: contamination check over the near-dup survivors
+    val survivors = curNum.join(
+      clusters.where(col("doc_id") =!= col("component")).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val (_, s5, c5, r5) = time(TableIO.write(
+      TrainingOps.contaminationCheck(spark, survivors, hashGrams = true),
+      s"$base/contam"))
+    val contam = TableIO.read(spark, s"$base/contam")
+    val nEval = contam.count()
+    val nContaminated = contam.where(col("contaminated")).count()
+    println(f"CURATION stage=contamination sec=$s5%.1f cpu=$c5%.1f run=$r5%.1f eval=$nEval " +
+      f"contaminated=$nContaminated expected=$nPlantContam")
+
+    // stage 6: unigram-LM perplexity gate (T28) over the decontaminated
+    // corpus — contaminated eval docs drop, the rest score against the
+    // corpus's own unigram distribution. A fixed nats/token threshold is
+    // a property of a particular corpus (the graded query pins 3.5 on
+    // the testdata vocabulary; this generator's murmur vocab sits much
+    // higher), so the composed pipeline does what CCNet does: score,
+    // then cut the worst tail — here the exact p99 of the score
+    val decontam = survivors.join(
+      contam.where(col("contaminated")).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val (_, s6, c6, r6) = time(TableIO.write(
+      TrainingOps.unigramLogProb(decontam), s"$base/scored"))
+    val scored = TableIO.read(spark, s"$base/scored")
+    val nScored = scored.count()
+    val cut = scored.agg(expr("percentile(avg_neg_logprob, 0.99)"))
+      .collect()(0).getDouble(0)
+    val nFlagged = scored.where(col("avg_neg_logprob") > cut).count()
+    println(f"CURATION stage=perplexity sec=$s6%.1f cpu=$c6%.1f run=$r6%.1f scored=$nScored " +
+      f"p99_cut=$cut%.4f flagged=$nFlagged")
+
+    // stage 7: greedy sequence packing (T29) of the kept corpus into
+    // 512-token context windows — the step that turns curated documents
+    // into training samples; fill = token mass / window capacity across
+    // the packed bins (oversize docs overflow a bin of their own)
+    val kept = decontam.join(
+      scored.where(col("avg_neg_logprob") > cut).select("doc_id"),
+      Seq("doc_id"), "left_anti")
+    val (_, s7, c7, r7) = time(TableIO.write(
+      TrainingOps.sequencePack(spark, kept, capacity = 512,
+        nShards = math.max(64, parts)), s"$base/packed"))
+    val p = TableIO.read(spark, s"$base/packed")
+      .agg(count(lit(1)).as("docs"),
+        countDistinct(col("shard"), col("bin")).as("bins"),
+        sum(col("n_tok")).as("tokens")).collect()(0)
+    val fill = p.getLong(2).toDouble / (p.getLong(1) * 512.0)
+    println(f"CURATION stage=seq_pack sec=$s7%.1f cpu=$c7%.1f run=$r7%.1f docs=${p.getLong(0)} " +
+      f"windows=${p.getLong(1)} tokens=${p.getLong(2)} fill=$fill%.3f")
+
+    val total = s1 + s2 + s3 + s4 + s5 + s6 + s7
+    val cpuTotal = c1 + c2 + c3 + c4 + c5 + c6 + c7
+    println(f"CURATION total docs=$nDocs parts=$parts cpus=${Probe.cpus} " +
+      f"sec=$total%.1f cpu=$cpuTotal%.1f docs_per_sec=${nDocs / total}%.0f " +
+      f"quality_ratio=${nQuality.toDouble / nDocs}%.4f " +
+      f"exact_drop=${nWithPlant - nCurated} neardup_drop=$dropped " +
+      f"contam_drop=$nContaminated ppl_drop=$nFlagged windows=${p.getLong(1)}")
   }
 }

@@ -22,23 +22,17 @@ import graft.queries.TrainingOps
   *
   * Env: DEDUPSCALE_SIZES (csv, default "5000,20000,50000"),
   * DEDUPSCALE_CAP (default 200 — must stay < 5% of the smallest size so
-  * the mega-cluster is dropped at every probe size),
-  * DEDUPSCALE_CPUS (default 32).
+  * the mega-cluster is dropped at every probe size), SPARK_GRAFT_CPUS.
   */
 object DedupScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Probe.time
 
   // vocab draw MUST be murmur, not FNV-1a: an FNV state difference from a
   // differing prefix propagates near-affinely through a shared suffix, so
   // mod a small vocab two clusters' word sequences come out correlated
   // (observed: identical 30-word tails across clusters) — murmur's
   // avalanche finalization kills the structure
-  private def vocabWord(key: String): String =
+  private[tools] def vocabWord(key: String): String =
     s"w${math.floorMod(scala.util.hashing.MurmurHash3.stringHash(key, 9001), 5000)}"
 
   def corpus(spark: SparkSession, n: Long): DataFrame = {
@@ -59,17 +53,11 @@ object DedupScale {
     }.toDF("doc_id", "text")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("DEDUPSCALE_SIZES", "5000,20000,50000")
-      .split(",").map(_.trim.toLong).toSeq
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("DEDUPSCALE_SIZES", "5000,20000,50000")
     // default cap 200 < 5%·min(size): the mega-cluster is dropped at EVERY
     // probe size, so the growth curve measures the capped regime throughout
     val cap = sys.env.getOrElse("DEDUPSCALE_CAP", "200").toInt
-    val cpus = sys.env.getOrElse("DEDUPSCALE_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.minhashPairs(spark, corpus(spark, 2000), minSim = 0.5, maxBucket = cap).count()
@@ -93,18 +81,12 @@ object DedupScale {
     if (rows.size >= 2) {
       val (n0, mh0, ms0, ng0, ns0) = rows.head
       val (n1, mh1, ms1, ng1, ns1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      // a zero head count (aggressive cap / high threshold leaves no pairs
-      // at the smallest size) has no growth exponent — print n/a, not the
-      // NaN/Infinity a log of 0 would produce
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"DEDUPSCALE growth n=$n0->$n1: " +
         s"minhash_pairs_alpha=${alpha(mh0.toDouble, mh1.toDouble)} " +
         s"minhash_sec_alpha=${alpha(ms0, ms1)} " +
         s"ngram_pairs_alpha=${alpha(ng0.toDouble, ng1.toDouble)} " +
         s"ngram_sec_alpha=${alpha(ns0, ns1)} (1.0 = linear, 2.0 = quadratic)")
     }
-    spark.stop()
   }
 }

@@ -33,15 +33,10 @@ import graft.queries.TrainingOps
   * ≈ the cap and ordinary buckets start dropping; measured: 87 buckets
   * dropped, pair growth bent to α=0.67. That is the production tuning
   * rule this probe documents: nPlanes ≳ log2(n/cap) + margin),
-  * EMBEDSCALE_CPUS (32).
+  * SPARK_GRAFT_CPUS.
   */
 object EmbedScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Probe.time
 
   private def comp(key: String): Float =
     (MurmurHash3.stringHash(key, 40503).toDouble / Int.MaxValue).toFloat
@@ -64,16 +59,10 @@ object EmbedScale {
     }.toDF("vec_id", "embedding")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("EMBEDSCALE_SIZES", "5000,20000,50000")
-      .split(",").map(_.trim.toLong).toSeq
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("EMBEDSCALE_SIZES", "5000,20000,50000")
     val cap = sys.env.getOrElse("EMBEDSCALE_CAP", "200").toInt
     val planes = sys.env.getOrElse("EMBEDSCALE_PLANES", "12").toInt
-    val cpus = sys.env.getOrElse("EMBEDSCALE_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.embedCosinePairsLsh(spark, corpus(spark, 2000),
@@ -99,9 +88,7 @@ object EmbedScale {
     if (rows.size >= 2) {
       val (n0, p0, ls0, is0) = rows.head
       val (n1, p1, ls1, is1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"EMBEDSCALE growth n=$n0->$n1: " +
         s"lsh_pairs_alpha=${alpha(p0.toDouble, p1.toDouble)} " +
         s"lsh_sec_alpha=${alpha(ls0, ls1)} " +
@@ -135,9 +122,7 @@ object EmbedScale {
     if (semRows.size >= 2) {
       val (n0, p0, s0) = semRows.head
       val (n1, p1, s1) = semRows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"SEMDEDUP growth n=$n0->$n1: " +
         s"pairs_alpha=${alpha(p0.toDouble, p1.toDouble)} " +
         s"sec_alpha=${alpha(s0, s1)} (pairs 1.0 = linear; sec model = 1.5 at nCells=√n)")
@@ -187,6 +172,5 @@ object EmbedScale {
         f"recall_at_5=$r%.3f")
     }
     big.unpersist()
-    spark.stop()
   }
 }

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off wide kernel-vs-golden equality sweep (bigger than the committed
   * 300-doc query and 2000-doc job test). Dev tool. */
 object GoldenSweep {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
     val n = sys.env.getOrElse("SWEEP_DOCS", "20000").toLong
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.gen.SpanGen
     val kernel = spark.range(0L, n)
@@ -26,6 +21,5 @@ object GoldenSweep {
           col("k_spans") =!= col("g_spans"), 1L).otherwise(0L)).as("n_mismatches"))
       .collect().head
     println(s"SWEEP docs=${r.getLong(0)} mismatches=${r.getLong(1)}")
-    spark.stop()
   }
 }

@@ -22,15 +22,10 @@ import graft.queries.GraphOps
   *    per-role counts, equal to a two-scalar reference recurrence.
   *
   * Env: GRAPHSCALE_SIZES (csv node counts, default "100000,400000"),
-  * GRAPHSCALE_CPUS (default 32), GRAPHSCALE_ITERS (default 4).
+  * GRAPHSCALE_ITERS (default 4), SPARK_GRAFT_CPUS.
   */
 object GraphScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Probe.time
 
   def chainEdges(spark: SparkSession, n: Long): DataFrame = {
     import spark.implicits._
@@ -85,15 +80,9 @@ object GraphScale {
     (hub, leaf)
   }
 
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("GRAPHSCALE_SIZES", "100000,400000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("GRAPHSCALE_CPUS", "32").toInt
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("GRAPHSCALE_SIZES", "100000,400000")
     val iters = sys.env.getOrElse("GRAPHSCALE_ITERS", "4").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
@@ -163,15 +152,12 @@ object GraphScale {
     if (rows.size >= 2) {
       val (n0, c0, s0, ct0, st0) = rows.head
       val (n1, c1, s1, ct1, st1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"GRAPHSCALE growth n=$n0->$n1: chain_sec_alpha=${alpha(c0, c1)} " +
         s"star_sec_alpha=${alpha(s0, s1)} clique_tri_alpha=${alpha(ct0, ct1)} " +
         s"star_tri_alpha=${alpha(st0, st1)} (1.0 = linear in nodes~edges; " +
         "PR rounds are FIXED and triangle wedge volume is per-node-bounded " +
         "on both families, so any α > 1 is shuffle overhead, not algorithm)")
     }
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,17 +25,12 @@ import graft.queries.TrainingOps
   * == incremental pairs.
   *
   * Env: INCRSCALE_STORE (default 200000), INCRSCALE_BATCHES (csv,
-  * default "5000,20000,80000"), INCRSCALE_CPUS (default 32).
+  * default "5000,20000,80000"), SPARK_GRAFT_CPUS.
   * Working set on /dev/shm like Bench (single-disk writeback is not the
   * cluster bottleneck being modeled).
   */
 object IncrementalScale {
-
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
+  import Probe.time
 
   // two independent murmur seeds combined into a 64-bit draw: a SINGLE
   // 32-bit murmur state birthday-collides across ~1e5+ doc-key prefixes
@@ -76,21 +69,14 @@ object IncrementalScale {
     }.toDF("doc_id", "text")
   }
 
-  def main(args: Array[String]): Unit = {
-    val storeN = sys.env.getOrElse("INCRSCALE_STORE", "200000").toLong
-    val batches = sys.env.getOrElse("INCRSCALE_BATCHES", "5000,20000,80000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("INCRSCALE_CPUS", "32").toInt
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = (if (Files.isDirectory(shm)) Files.createTempDirectory(shm, "graftincr")
-      else Files.createTempDirectory("graftincr")).toFile
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.local.dir", base.getAbsolutePath)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit =
+    Probe.withTmpDir("graftincr")(base => Probe.withSpark(localDir = Some(base))(run(_, base)))
 
-    val sigPath = s"${base.getAbsolutePath}/store_sigs"
+  private def run(spark: SparkSession, base: String): Unit = {
+    val storeN = sys.env.getOrElse("INCRSCALE_STORE", "200000").toLong
+    val batches = Probe.sizes("INCRSCALE_BATCHES", "5000,20000,80000")
+
+    val sigPath = s"$base/store_sigs"
     val (_, buildSec) = time {
       TableIO.write(
         TrainingOps.minhashSignatures(spark, storeDocs(spark, storeN)), sigPath)
@@ -134,9 +120,7 @@ object IncrementalScale {
     if (rows.size >= 2) {
       val (b0, i0, f0) = rows.head
       val (b1, i1, f1) = rows.last
-      val r = math.log(b1.toDouble / b0)
-      def alpha(a: Double, c: Double): String =
-        if (a <= 0 || c <= 0 || r == 0) "n/a" else f"${math.log(c / a) / r}%.2f"
+      val alpha = Probe.alpha(b0, b1, _, _)
       println(s"INCRSCALE growth b=$b0->$b1: incr_sec_alpha=${alpha(i0, i1)} " +
         s"full_sec_alpha=${alpha(f0, f1)} (alpha is vs BATCH size; " +
         s"full re-dedup cost is corpus-dominated so its alpha reads ~0 — " +
@@ -149,10 +133,9 @@ object IncrementalScale {
     // scans/bands the stored signatures (narrow columnar work, no
     // shingling) — its growth in storeN is the scan, not the compute.
     val bFix = sys.env.getOrElse("INCRSCALE_FIXED_BATCH", "5000").toLong
-    val storeSizes = sys.env.getOrElse("INCRSCALE_STORES", "100000,200000,400000")
-      .split(",").map(_.trim.toLong).toSeq
+    val storeSizes = Probe.sizes("INCRSCALE_STORES", "100000,200000,400000")
     val rowsB = storeSizes.map { sN =>
-      val sp = s"${base.getAbsolutePath}/store_sigs_$sN"
+      val sp = s"$base/store_sigs_$sN"
       val (_, bld) = time {
         TableIO.write(TrainingOps.minhashSignatures(spark, storeDocs(spark, sN)), sp)
       }
@@ -175,9 +158,7 @@ object IncrementalScale {
     if (rowsB.size >= 2) {
       val (s0, i0, f0) = rowsB.head
       val (s1, i1, f1) = rowsB.last
-      val r = math.log(s1.toDouble / s0)
-      def alpha(a: Double, c: Double): String =
-        if (a <= 0 || c <= 0 || r == 0) "n/a" else f"${math.log(c / a) / r}%.2f"
+      val alpha = Probe.alpha(s0, s1, _, _)
       println(s"INCRSCALE growth store=$s0->$s1 (b=$bFix fixed): " +
         s"incr_sec_alpha=${alpha(i0, i1)} full_sec_alpha=${alpha(f0, f1)} " +
         s"(1.0 = linear in STORE size)")
@@ -221,8 +202,8 @@ object IncrementalScale {
       // snapshots ARE parquet tables; leaving them as lazy generators
       // would re-pay the synthetic text() per scan and charge the
       // multi-scan refresh path for generator recompute, not real work
-      val v1Path = s"${base.getAbsolutePath}/refresh_v1"
-      val v2Path = s"${base.getAbsolutePath}/refresh_v2"
+      val v1Path = s"$base/refresh_v1"
+      val v2Path = s"$base/refresh_v2"
       TableIO.write(v1, v1Path)
       TableIO.write(v2docs.unionAll(adds).withColumn("source", lit("s")), v2Path)
       val v1t = TableIO.read(spark, v1Path)
@@ -265,12 +246,5 @@ object IncrementalScale {
         f"speedup=${fullSec2 / refreshSec}%.1f " +
         f"(removed=$nRem changed=$nCh admitted=$deltaAdmitted)")
     }
-
-    spark.stop()
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete()
-    }
-    rm(base)
   }
 }

@@ -1,22 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints `explain("formatted")` for selected queries so plan properties
   * (filter/column pushdown into parquet, broadcast joins, whole-stage
   * codegen spans, single-exchange extraction) can be audited. Dev tool.
   *
   * Usage: runMain graft.tools.Plans [queryName ...]  (default: audit set)
+  * Runs at a fixed local[4], so a plan's partition counts do not depend on
+  * the machine that printed it.
   */
 object Plans {
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = Probe.withSpark(4) { spark =>
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
 
     val names =
       if (args.nonEmpty) args.toSeq
@@ -31,6 +25,5 @@ object Plans {
         case None => println(s"===== PLAN $n: no such query =====")
       }
     }
-    spark.stop()
   }
 }

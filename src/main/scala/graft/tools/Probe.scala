@@ -1,0 +1,138 @@
+package graft.tools
+
+import java.nio.file.{Files, Paths}
+
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.SparkSession
+
+/** The harness every dev probe in `graft.tools` shares: one session
+  * builder, wall timing, interleaved min-of-reps, the log-log growth
+  * exponent, a tmpfs working dir, and one listener tallying stages and
+  * jobs.
+  *
+  * Env: SPARK_GRAFT_CPUS (local slots and shuffle width; default the
+  * machine's core count).
+  */
+object Probe {
+
+  val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** Runs `body` on a `local[slots]` session with as many shuffle
+    * partitions as slots, stopped when `body` ends. `localDir`, when
+    * given, holds the session's shuffle and spill files. */
+  def withSpark[T](slots: Int = cpus, localDir: Option[String] = None)(body: SparkSession => T): T = {
+    val b = SparkSession.builder().master(s"local[$slots]")
+      .config("spark.sql.shuffle.partitions", slots.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val spark = localDir.fold(b)(b.config("spark.local.dir", _)).getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try body(spark) finally spark.stop()
+  }
+
+  /** Comma-separated sizes from env `key`, else from `default`. */
+  def sizes(key: String, default: String): Seq[Long] =
+    sys.env.getOrElse(key, default).split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
+
+  /** `body`'s result and its wall seconds. */
+  def time[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Runs every body `reps` times, interleaved so a host slowdown hits all
+    * of them alike; per body, its last result and its minimum seconds. */
+  def minOf[T](reps: Int)(bodies: (() => T)*): Seq[(T, Double)] = {
+    val runs = (1 to reps).map(_ => bodies.map(b => time(b())))
+    bodies.indices.map(i => (runs.last(i)._1, runs.map(_(i)._2).min))
+  }
+
+  /** Growth exponent of a cost going `a` → `b` while the size goes `n0` →
+    * `n1` (1.00 = linear, 2.00 = quadratic). A zero cost (no pairs at the
+    * smallest size, say) has no exponent: "n/a", not a NaN or Infinity. */
+  def alpha(n0: Double, n1: Double, a: Double, b: Double): String =
+    if (a <= 0 || b <= 0 || n0 <= 0 || n1 == n0) "n/a"
+    else f"${math.log(b / a) / math.log(n1 / n0)}%.2f"
+
+  /** Runs `body` in a fresh directory, deleted with its contents when
+    * `body` ends. The directory is on tmpfs (/dev/shm) when the host has
+    * one, like the Bench working set: one local disk's writeback is not
+    * the cluster cost the probes model. */
+  def withTmpDir[T](prefix: String)(body: String => T): T = {
+    val shm = Paths.get("/dev/shm")
+    val dir = if (Files.isDirectory(shm)) Files.createTempDirectory(shm, prefix)
+      else Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally scala.util.Try(Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists))
+  }
+
+  /** One completed stage's summed task metrics. */
+  final case class Stage(id: Int, name: String, tasks: Int, runMs: Long, cpuNs: Long,
+      deserMs: Long, gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long)
+
+  /** One job: description, wall seconds and the stages credited to it (a
+    * stage several jobs list goes to the last one that registered it). */
+  final case class Job(id: Int, desc: String, sec: Double, stages: Seq[Stage])
+
+  /** The jobs and stages one measured body ran. */
+  final case class Window(jobs: Seq[Job], stages: Seq[Stage]) {
+    def tasks: Int = stages.map(_.tasks).sum
+    def cpuSec: Double = stages.map(_.cpuNs).sum / 1e9
+    def runSec: Double = stages.map(_.runMs).sum / 1e3
+    def shuffleReadB: Long = stages.map(_.shuffleReadB).sum
+    def shuffleWriteB: Long = stages.map(_.shuffleWriteB).sum
+  }
+
+  /** The probes' one listener, attached to `spark` on construction. Task
+    * CPU never includes host steal, which inflates only wall and run time,
+    * so a cpu ratio across sizes reads work growth steal-robustly. */
+  final class Tally(spark: SparkSession) extends SparkListener {
+    private val sc = spark.sparkContext
+    private val stages = mutable.LinkedHashMap.empty[Int, Stage]
+    private val jobs = mutable.LinkedHashMap.empty[Int, (String, Long, Long)]
+    private val owner = mutable.HashMap.empty[Int, Int]
+    sc.addSparkListener(this)
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+      jobs(e.jobId) = (desc, e.time, e.time)
+      e.stageIds.foreach(owner(_) = e.jobId)
+    }
+
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobs.get(e.jobId).foreach(j => jobs(e.jobId) = j.copy(_3 = e.time))
+    }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val si = e.stageInfo
+      val m = si.taskMetrics
+      if (m != null)
+        stages(si.stageId) = Stage(si.stageId, si.name, si.numTasks, m.executorRunTime,
+          m.executorCpuTime, m.executorDeserializeTime, m.jvmGCTime,
+          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
+    }
+
+    /** `body`'s result, wall seconds, and the jobs and stages it ran. The
+      * listener bus is drained before and after, so the window holds
+      * exactly `body`'s events. */
+    def measure[T](body: => T): (T, Double, Window) = {
+      GraftBus.drain(sc)
+      synchronized { stages.clear(); jobs.clear(); owner.clear() }
+      val (r, sec) = time(body)
+      GraftBus.drain(sc)
+      synchronized {
+        val js = jobs.toSeq.map { case (id, (desc, t0, t1)) =>
+          Job(id, desc, (t1 - t0) / 1e3, stages.values.filter(s => owner.get(s.id).contains(id)).toSeq)
+        }
+        (r, sec, Window(js, stages.values.toSeq))
+      }
+    }
+  }
+}

@@ -1,6 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
 import java.util.concurrent.{Executors, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
@@ -10,23 +9,13 @@ import graft.job.ExtractJob
 import graft.kernel.Extractor
 
 /** Diagnoses where N→4N scaling is lost: raw JVM thread scaling of the
-  * kernel, Spark kernel-only stage scaling, and full-job scaling.
-  * Prints PROBE lines. Dev tool, not part of the driver contract. */
+  * kernel against full-job scaling.
+  * Prints PROBE lines. Dev tool, not part of the driver contract.
+  * Env: PROBE_DOCS, PROBE_PARTS, PROBE_RAW, PROBE_RAW_DOCS, PROBE_LEVELS,
+  * PROBE_REPS. */
 object ScaleProbe {
 
-  private def time[T](body: => T): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
-
-  private def session(cpus: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def time(body: => Any): Double = Probe.time(body)._2
 
   // raw thread scaling: extract the same docs on a fixed thread pool
   private def rawKernel(threads: Int, docsPerThread: Int): Double = {
@@ -58,8 +47,7 @@ object ScaleProbe {
 
     // ---- raw JVM scaling (includes generation cost, same per doc)
     rawKernel(8, 500) // warm JIT
-    val rawLevels = sys.env.getOrElse("PROBE_RAW", "8,32")
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+    val rawLevels = Probe.sizes("PROBE_RAW", "8,32").map(_.toInt)
     val rawDocs = sys.env.getOrElse("PROBE_RAW_DOCS", "20000").toInt
     val raws = rawLevels.map { th =>
       val ts = (1 to 3).map(_ => rawKernel(th, rawDocs / th)).sorted
@@ -69,40 +57,30 @@ object ScaleProbe {
     for (n <- rawLevels; if raws.contains(n) && raws.contains(n * 4))
       println(f"PROBE raw efficiency $n->${n * 4}: ${raws(n) / raws(n * 4) / 4}%.3f")
 
-    val base = Files.createTempDirectory("scaleprobe").toString
-    var spark = session(32)
-    CorpusWriter.write(spark, nDocs, s"$base/corpus", parts)
+    Probe.withTmpDir("scaleprobe")(base => jobLevels(base, nDocs, parts))
+  }
 
-    def kernelOnly(s: SparkSession): Double = {
-      import s.implicits._
-      import org.apache.spark.sql.functions._
-      time {
-        s.read.parquet(s"$base/corpus")
-          .repartition(parts, col("doc_id"), lit(graft.core.Spec.Salt))
-          .as[graft.core.Doc]
-          .mapPartitions(_.map(d => Extractor.extractDoc(d).spans.size.toLong))
-          .reduce(_ + _)
-      }
-    }
+  private def jobLevels(base: String, nDocs: Long, parts: Int): Unit = {
     def fullJob(s: SparkSession, tag: String): Double =
       time(ExtractJob.run(s, s"$base/corpus", s"$base/out_$tag", tag, parts))
 
     // deep-warm the shared JVM so later levels aren't flattered
-    fullJob(spark, "deep1"); fullJob(spark, "deep2")
-    spark.stop()
+    Probe.withSpark() { spark =>
+      CorpusWriter.write(spark, nDocs, s"$base/corpus", parts)
+      fullJob(spark, "deep1"); fullJob(spark, "deep2")
+    }
 
-    val levels = sys.env.getOrElse("PROBE_LEVELS", "4,8,16,32")
-      .split(",").map(_.trim).filter(_.nonEmpty).map(_.toInt).toSeq
+    val levels = Probe.sizes("PROBE_LEVELS", "4,8,16,32").map(_.toInt)
     if (levels.isEmpty) return
     val reps = sys.env.getOrElse("PROBE_REPS", "3").toInt
     def sync(): Unit = { // flush dirty pages so writeback stalls don't land randomly
       new ProcessBuilder("sync").inheritIO().start().waitFor()
     }
     val times = levels.map { c =>
-      val s = session(c)
-      fullJob(s, s"w$c"); sync()
-      val ts = (1 to reps).map { r => val t = fullJob(s, s"m$c$r"); sync(); t }.sorted
-      s.stop()
+      val ts = Probe.withSpark(c) { s =>
+        fullJob(s, s"w$c"); sync()
+        (1 to reps).map { r => val t = fullJob(s, s"m$c$r"); sync(); t }.sorted
+      }
       val med = ts(ts.length / 2)
       println(f"PROBE full-job @ local[$c]: median=$med%.2fs all=${ts.map(t => f"$t%.2f").mkString(",")} (${nDocs / med}%.0f docs/s)")
       c -> med

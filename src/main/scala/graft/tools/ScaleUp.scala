@@ -1,51 +1,30 @@
 package graft.tools
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.SparkSession
-
 import graft.gen.CorpusWriter
 import graft.job.ExtractJob
 
 /** Large-corpus flat-cost validation: run the extraction job once at a
   * configurable corpus size / partition count / core count and print
-  * docs/sec (min of reps). Dev tool backing BASELINE.md's scale-up row. */
+  * docs/sec (min of reps). Dev tool backing BASELINE.md's scale-up row.
+  * Env: SCALEUP_DOCS, SCALEUP_PARTS, SCALEUP_REPS, SPARK_GRAFT_CPUS. */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val nDocs = sys.env.getOrElse("SCALEUP_DOCS", "1000000").toLong
     val parts = sys.env.getOrElse("SCALEUP_PARTS", "512").toInt
-    val cpus = sys.env.getOrElse("SCALEUP_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SCALEUP_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = (if (Files.isDirectory(shm)) Files.createTempDirectory(shm, "graftscaleup")
-      else Files.createTempDirectory("graftscaleup")).toString
-    try {
-      CorpusWriter.write(spark, nDocs, s"$base/in", parts)
-      ExtractJob.run(spark, s"$base/in", s"$base/warm", "w", parts) // warm
-      val secs = (1 to reps).map { r =>
-        val t0 = System.nanoTime()
-        val rep = ExtractJob.run(spark, s"$base/in", s"$base/out$r", s"m$r", parts)
-        val t = (System.nanoTime() - t0) / 1e9
-        require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
-        println(f"SCALEUP rep $r: $t%.1f s")
-        t
+    Probe.withTmpDir("graftscaleup") { base =>
+      Probe.withSpark() { spark =>
+        CorpusWriter.write(spark, nDocs, s"$base/in", parts)
+        ExtractJob.run(spark, s"$base/in", s"$base/warm", "w", parts) // warm
+        val secs = (1 to reps).map { r =>
+          val (rep, t) = Probe.time(ExtractJob.run(spark, s"$base/in", s"$base/out$r", s"m$r", parts))
+          require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
+          println(f"SCALEUP rep $r: $t%.1f s")
+          t
+        }
+        println(f"SCALEUP docs=$nDocs parts=$parts cpus=${Probe.cpus} sec=${secs.min}%.1f " +
+          f"docs_per_sec=${nDocs / secs.min}%.0f")
       }
-      println(f"SCALEUP docs=$nDocs parts=$parts cpus=$cpus sec=${secs.min}%.1f " +
-        f"docs_per_sec=${nDocs / secs.min}%.0f")
-    } finally {
-      try {
-        import scala.jdk.CollectionConverters._
-        Files.walk(java.nio.file.Paths.get(base)).iterator().asScala
-          .toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
-      spark.stop()
     }
   }
 }

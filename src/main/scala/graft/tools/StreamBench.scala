@@ -1,7 +1,5 @@
 package graft.tools
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -26,29 +24,21 @@ import graft.streaming.StreamExtract
   * thing under test). Backs BASELINE.md's streaming-at-scale note.
   *
   * Env: STREAMBENCH_DOCS (300000), STREAMBENCH_PARTS (128),
-  * STREAMBENCH_DELTA (10000), STREAMBENCH_CPUS (32).
+  * STREAMBENCH_DELTA (10000), SPARK_GRAFT_CPUS.
   */
 object StreamBench {
 
-  private def time[T](body: => T): Double = {
-    val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-  }
+  private def time(body: => Any): Double = Probe.time(body)._2
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit =
+    Probe.withTmpDir("graftstream")(base => Probe.withSpark()(run(_, base)))
+
+  private def run(spark: SparkSession, base: String): Unit = {
     val nDocs = sys.env.getOrElse("STREAMBENCH_DOCS", "300000").toLong
     val parts = sys.env.getOrElse("STREAMBENCH_PARTS", "128").toInt
     val delta = sys.env.getOrElse("STREAMBENCH_DELTA", "10000").toLong
-    val cpus = sys.env.getOrElse("STREAMBENCH_CPUS", "32").toInt
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = (if (Files.isDirectory(shm)) Files.createTempDirectory(shm, "graftstream")
-      else Files.createTempDirectory("graftstream")).toString
     val corpus = s"$base/corpus"
     CorpusWriter.write(spark, nDocs, corpus, parts)
 
@@ -99,13 +89,6 @@ object StreamBench {
     // exactly-once restart where dropping the delta's duplicates REQUIRES
     // the reloaded state (the dup originals drained before the restart)
     statefulDedup(spark, base, nDocs, parts, delta)
-
-    try {
-      import scala.jdk.CollectionConverters._
-      Files.walk(java.nio.file.Paths.get(base)).iterator().asScala
-        .toSeq.reverse.foreach(p => Files.deleteIfExists(p))
-    } catch { case _: Throwable => () }
-    spark.stop()
   }
 
   private def statefulDedup(spark: SparkSession, base: String, nDocs: Long,

@@ -33,25 +33,13 @@ import graft.queries.TrainingOps
   * the corpus grows 10× (only the vocab-agg scan grows).
   *
   * Env: SUBSTRSCALE_SIZES (csv, default "5000,20000,50000"),
-  * SUBSTRSCALE_CPUS (default 32).
+  * SPARK_GRAFT_CPUS.
   */
 object SubstrScale {
+  import Probe.time
 
-  private def time[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sizes = sys.env.getOrElse("SUBSTRSCALE_SIZES", "5000,20000,50000")
-      .split(",").map(_.trim.toLong).toSeq
-    val cpus = sys.env.getOrElse("SUBSTRSCALE_CPUS", "32").toInt
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  def main(args: Array[String]): Unit = Probe.withSpark() { spark =>
+    val sizes = Probe.sizes("SUBSTRSCALE_SIZES", "5000,20000,50000")
 
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.substringDupStats(spark, DedupScale.corpus(spark, 2000),
@@ -96,13 +84,10 @@ object SubstrScale {
     if (rows.size >= 2) {
       val (n0, s0, d0, b0) = rows.head
       val (n1, s1, d1, b1) = rows.last
-      val r = math.log(n1.toDouble / n0)
-      def alpha(a: Double, b: Double): String =
-        if (a <= 0 || b <= 0 || r == 0) "n/a" else f"${math.log(b / a) / r}%.2f"
+      val alpha = Probe.alpha(n0, n1, _, _)
       println(s"SUBSTRSCALE growth n=$n0->$n1: substr_sec_alpha=${alpha(s0, s1)} " +
         s"dsir_sec_alpha=${alpha(d0, d1)} bpe_sec_alpha=${alpha(b0, b1)} " +
         s"(1.0 = linear; flagged/dup-token counts asserted exact at every size)")
     }
-    spark.stop()
   }
 }
