@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.{Materialize, TableIO}
 import graft.gen.SpanGen
 import graft.kernel.{Chunker, Extractor}
 import graft.multimodal.MediaOps
@@ -24,7 +25,7 @@ object SparkEntry {
   /** Materialized extraction output for the kernel-fed queries' oracles:
     * the 300-doc generated corpus extracted once, spans EXPLODED to scalar
     * rows (doc_id, seq, kind, text) and stored in the warehouse
-    * (marker-gated — one build per warehouse, Materialize.onceAt). DuckDB
+    * (marker-gated — one build per warehouse, Materialize.store). DuckDB
     * cannot replay the kernel, but it CAN replay every aggregation /
     * linking / chunking computation downstream of it — so dumping the
     * kernel's deterministic output puts those formerly rows-only queries
@@ -62,53 +63,58 @@ object SparkEntry {
   private lazy val goldenFingerprint: String =
     extractorFingerprint(graft.golden.GoldenExtractor.extract)
 
-  /** Shared dump shape for the two extractor stores: spans exploded to
-    * scalar (doc_id, seq, kind, text, media_ref, offset) rows — ALL span
-    * fields, so row-set equality of two stores is exactly struct-sequence
-    * equality of the extractor outputs (the j5 verification join's
-    * contract; the downstream linking/chunking oracles read only
-    * kind/text/seq and are unaffected by the extra columns). */
+  /** Shared dump shape for the two extractor stores: `extract` over the
+    * 300-doc generated corpus, spans exploded to scalar (doc_id, seq,
+    * kind, text, media_ref, offset) rows — ALL span fields, so row-set
+    * equality of two stores is exactly struct-sequence equality of the
+    * extractor outputs (the j5 verification join's contract; the
+    * downstream linking/chunking oracles read only kind/text/seq and are
+    * unaffected by the extra columns). */
   private def spanScalarStore(s: SparkSession, name: String, tag: String,
-      extracted: => DataFrame): String = {
-    val loc = graft.core.Materialize.warehousePath(s, name)
+      extract: graft.core.Doc => graft.core.Doc): String = {
+    import s.implicits._
     // repartition(1): the 300-doc scalar dump is ~160 KB — without it the
     // 32-way extraction parallelism writes 32 tiny files and every store
     // consumer (the linking/graph/ex_* queries) pays a 32-task scan
     // (guide §6 small-files); extraction itself stays parallel upstream
     // of the single-writer exchange. Tag carries the layout so stores
     // written by earlier rounds rebuild.
-    graft.core.Materialize.onceAt(s, loc, s"$tag:c1") {
-      graft.core.TableIO.write(
-        extracted.select(col("doc_id"),
-            posexplode_outer(col("spans")).as(Seq("seq", "s")))
-          .select(col("doc_id"), col("seq").cast("long").as("seq"),
-            col("s.kind").as("kind"), col("s.text").as("text"),
-            col("s.media_ref").as("media_ref"),
-            col("s.offset").cast("long").as("offset"))
-          .repartition(1),
-        loc.toString)
+    Materialize.store(s, name, s"$tag:c1") {
+      s.range(0L, 300L).map(i => extract(SpanGen.genDoc(SpanGen.docId(i)))).toDF()
+        .select(col("doc_id"), posexplode_outer(col("spans")).as(Seq("seq", "s")))
+        .select(col("doc_id"), col("seq").cast("long").as("seq"),
+          col("s.kind").as("kind"), col("s.text").as("text"),
+          col("s.media_ref").as("media_ref"),
+          col("s.offset").cast("long").as("offset"))
+        .repartition(1)
     }
-    loc.toString
   }
 
-  private def extractSpansStore(s: SparkSession): String = {
-    import s.implicits._
+  /** The corpus's MinHash signature table (k = 64), built once per source
+    * dir — the one store dd_minhash_stored and the incremental faces
+    * share, so the tag cannot drift between them. */
+  private def minhashSigStore(s: SparkSession, d: String): String =
+    Materialize.store(s, "graft_minhash_sigs", s"minhash_sigs:k64:$d")(
+      TrainingOps.minhashSignatures(s, t(s, d, "documents")))
+
+  /** The corpus's n = 3 shingle table, built once per source dir — the one
+    * store the n-gram pair, cluster and split faces share. */
+  private def shingleStore(s: SparkSession, d: String): String =
+    Materialize.store(s, "graft_ngram_shingles", s"ngram_shingles:n3:$d")(
+      TrainingOps.ngramShingles(s, t(s, d, "documents")))
+
+  private def extractSpansStore(s: SparkSession): String =
     spanScalarStore(s, "graft_extract_spans", s"gen:300:k$kernelFingerprint",
-      s.range(0L, 300L)
-        .map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i)))).toDF())
-  }
+      Extractor.extractDoc)
 
   /** The golden (independent, regex-engine) extractor's output over the
     * same 300-doc corpus, dumped to the same scalar shape. Exists ONLY so
     * `j5_golden_compare` — the kernel-vs-golden verification join — can be
     * replayed by DuckDB over the two stores (VERDICT r5 #4); the golden
     * IMPLEMENTATION stays independent, only its output is materialized. */
-  private def goldenSpansStore(s: SparkSession): String = {
-    import s.implicits._
+  private def goldenSpansStore(s: SparkSession): String =
     spanScalarStore(s, "graft_golden_spans", s"gen:300:g$goldenFingerprint",
-      s.range(0L, 300L)
-        .map(i => graft.golden.GoldenExtractor.extract(SpanGen.genDoc(SpanGen.docId(i)))).toDF())
-  }
+      graft.golden.GoldenExtractor.extract)
 
   /** Flagship: the extraction pipeline on a generated interleaved corpus —
     * per-kind span histogram. Driver smoke-checks rows>0 on sf0.001. */
@@ -573,19 +579,13 @@ object SparkEntry {
     // dd_minhash_pairs (the result is identical by construction; OpsSpec
     // pins it, and this makes the driver's hash gate pin it too). Fixed
     // warehouse location (no RNG/tempdir — engine-path determinism); the
-    // write is marker-gated (Materialize.onceAt) so explain-only consumers
+    // write is marker-gated (Materialize.store) so explain-only consumers
     // (tools/Plans) and repeated bench reps don't re-run the signature job
     // at every DataFrame construction — round-4 ADVICE #1.
-    "dd_minhash_stored" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_minhash_sigs")
-      graft.core.Materialize.onceAt(s, loc, s"minhash_sigs:k64:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.minhashSignatures(s, t(s, d, "documents")), loc.toString)
-      }
+    "dd_minhash_stored" -> ((s, d) =>
       TrainingOps.minhashPairsFromSignatures(
-        s, graft.core.TableIO.read(s, loc.toString), minSim = 0.05)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+        s, TableIO.read(s, minhashSigStore(s, d)), minSim = 0.05)
+        .orderBy(col("doc_a"), col("doc_b"))),
     // incremental near-dup (T41): the daily-ingest posture — the batch
     // (doc_id % 10 == 0) is shingled fresh and joined against the SAME
     // marker-materialized signature store as dd_minhash_stored, filtered
@@ -593,33 +593,22 @@ object SparkEntry {
     // slice of the corpus store IS the store-only signature table); the
     // bucket join is cross-set (new ⋈ store), never store×store
     "dd_incremental_pairs" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_minhash_sigs")
-      graft.core.Materialize.onceAt(s, loc, s"minhash_sigs:k64:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.minhashSignatures(s, t(s, d, "documents")), loc.toString)
-      }
-      val newDocs = t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) === 0)
-      val store = graft.core.TableIO.read(s, loc.toString)
+      val store = TableIO.read(s, minhashSigStore(s, d))
         .where(pmod(col("doc_id"), lit(10)) =!= 0)
+      val newDocs = t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) === 0)
       TrainingOps.minhashPairsAgainstStore(s,
-          TrainingOps.minhashSignatures(s, newDocs).localCheckpoint(true),
+          Materialize.truncate(TrainingOps.minhashSignatures(s, newDocs)),
           store, minSim = 0.05)
         .orderBy(col("doc_new"), col("doc_store"))
     }),
     // admission face: new-batch docs with no near-dup in the store
-    "dd_incremental_admit" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_minhash_sigs")
-      graft.core.Materialize.onceAt(s, loc, s"minhash_sigs:k64:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.minhashSignatures(s, t(s, d, "documents")), loc.toString)
-      }
+    "dd_incremental_admit" -> ((s, d) =>
       TrainingOps.incrementalAdmit(s,
           t(s, d, "documents").where(pmod(col("doc_id"), lit(10)) === 0),
-          graft.core.TableIO.read(s, loc.toString)
+          TableIO.read(s, minhashSigStore(s, d))
             .where(pmod(col("doc_id"), lit(10)) =!= 0),
           minSim = 0.05)
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     "dd_simhash_pairs" -> ((s, d) => TrainingOps.simhashPairs(s, t(s, d, "documents"), maxHamming = 8)
       .orderBy(col("doc_a"), col("doc_b"))),
 
@@ -628,13 +617,9 @@ object SparkEntry {
     // (marker-gated), banded pair generation over the store; shares
     // dd_simhash_pairs' oracle by construction
     "dd_simhash_stored" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_simhash_fps")
-      graft.core.Materialize.onceAt(s, loc, s"simhash_fps:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.simhashFingerprints(s, t(s, d, "documents")), loc.toString)
-      }
-      TrainingOps.simhashPairsFromFingerprints(
-        s, graft.core.TableIO.read(s, loc.toString), maxHamming = 8)
+      val loc = Materialize.store(s, "graft_simhash_fps", s"simhash_fps:$d")(
+        TrainingOps.simhashFingerprints(s, t(s, d, "documents")))
+      TrainingOps.simhashPairsFromFingerprints(s, TableIO.read(s, loc), maxHamming = 8)
         .orderBy(col("doc_a"), col("doc_b"))
     }),
     "dd_ngram_jaccard" -> ((s, d) => TrainingOps.ngramJaccardPairs(s, t(s, d, "documents"), minJaccard = 0.02)
@@ -651,16 +636,10 @@ object SparkEntry {
     // over the store — the lazy plan references the shingle stage up to 4×
     // (df probe, join-back, sizes, posting lists); the stored path scans
     // parquet instead. Same oracle as dd_ngram_jaccard by construction.
-    "dd_ngram_stored" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_ngram_shingles")
-      graft.core.Materialize.onceAt(s, loc, s"ngram_shingles:n3:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.ngramShingles(s, t(s, d, "documents")), loc.toString)
-      }
+    "dd_ngram_stored" -> ((s, d) =>
       TrainingOps.ngramJaccardFromShingles(
-        s, graft.core.TableIO.read(s, loc.toString), minJaccard = 0.02)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
+        s, TableIO.read(s, shingleStore(s, d)), minJaccard = 0.02)
+        .orderBy(col("doc_a"), col("doc_b"))),
     // pairs → DECISIONS: connected components over the n-gram-Jaccard pair
     // graph (hooked min-label + pointer jump, fixpoint-checked) — the
     // cluster-membership table a dedup pipeline drops against (component =
@@ -673,34 +652,22 @@ object SparkEntry {
     // contract as sim_ann_ivf's Lloyd step); the returned plan is a scan of
     // the converged label checkpoint, so explain-only consumers pay the
     // iteration, not a re-run per downstream action.
-    "dd_neardup_clusters" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_ngram_shingles")
-      graft.core.Materialize.onceAt(s, loc, s"ngram_shingles:n3:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.ngramShingles(s, t(s, d, "documents")), loc.toString)
-      }
+    "dd_neardup_clusters" -> ((s, d) =>
       TrainingOps.connectedComponents(s,
           TrainingOps.ngramJaccardFromShingles(
-            s, graft.core.TableIO.read(s, loc.toString), minJaccard = 0.5)
+            s, TableIO.read(s, shingleStore(s, d)), minJaccard = 0.5)
             .select(col("doc_a"), col("doc_b")))
         .select(col("node").as("doc_id"), col("comp").as("component"))
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     // leakage-free split (T40): every near-dup component co-splits via its
     // canonical member's content hash (pairs from the SAME marker-gated
     // shingle store as dd_neardup_clusters); singletons = splitAssign
-    "ta_cluster_split" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_ngram_shingles")
-      graft.core.Materialize.onceAt(s, loc, s"ngram_shingles:n3:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.ngramShingles(s, t(s, d, "documents")), loc.toString)
-      }
+    "ta_cluster_split" -> ((s, d) =>
       TrainingOps.clusterSplit(s, t(s, d, "documents"),
           TrainingOps.ngramJaccardFromShingles(
-            s, graft.core.TableIO.read(s, loc.toString), minJaccard = 0.5)
+            s, TableIO.read(s, shingleStore(s, d)), minJaccard = 0.5)
             .select(col("doc_a"), col("doc_b")))
-        .orderBy(col("doc_id"))
-    }),
+        .orderBy(col("doc_id"))),
     "dd_embed_cosine" -> ((s, d) => TrainingOps.embedCosinePairs(s, t(s, d, "embeddings"), minSim = 0.4)
       .orderBy(col("vec_a"), col("vec_b"))),
     "dd_embed_lsh" -> ((s, d) => TrainingOps.embedCosinePairsLsh(s, t(s, d, "embeddings"), minSim = 0.4)
@@ -871,14 +838,10 @@ object SparkEntry {
       // hashed-gram store since r8 (tag bumped so a string-gram store from
       // an earlier round rebuilds): the stored artifact is the scale form —
       // 8 bytes/gram on disk and through every eval-side join
-      val loc = graft.core.Materialize.warehousePath(s, "graft_train_grams")
-      graft.core.Materialize.onceAt(s, loc, s"train_grams:n8:m20:h:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.contaminationTrainGrams(s, t(s, d, "documents"),
-            hashGrams = true), loc.toString)
-      }
+      val loc = Materialize.store(s, "graft_train_grams", s"train_grams:n8:m20:h:$d")(
+        TrainingOps.contaminationTrainGrams(s, t(s, d, "documents"), hashGrams = true))
       TrainingOps.contaminationFromTrainGrams(s, t(s, d, "documents"),
-        graft.core.TableIO.read(s, loc.toString), hashGrams = true)
+        TableIO.read(s, loc), hashGrams = true)
         .orderBy(col("doc_id"))
     }),
     // exact top-k token frequencies (TakeOrderedAndProject — k rows ever
@@ -897,16 +860,13 @@ object SparkEntry {
     // Laplace floor (count 1). Completes the stored-table quintet with
     // dd_{minhash,simhash,ngram}_stored + ta_contamination_stored.
     "ta_perplexity_heldout" -> ((s, d) => {
-      val loc = graft.core.Materialize.warehousePath(s, "graft_unigram_vocab")
-      graft.core.Materialize.onceAt(s, loc, s"unigram_vocab:m20:$d") {
-        graft.core.TableIO.write(
-          TrainingOps.unigramVocab(t(s, d, "documents")
-            .where(pmod(col("doc_id").cast("long"), lit(20)) =!= 0)), loc.toString)
-      }
+      val loc = Materialize.store(s, "graft_unigram_vocab", s"unigram_vocab:m20:$d")(
+        TrainingOps.unigramVocab(t(s, d, "documents")
+          .where(pmod(col("doc_id").cast("long"), lit(20)) =!= 0)))
       TrainingOps.unigramLogProbFromVocab(s,
           t(s, d, "documents")
             .where(pmod(col("doc_id").cast("long"), lit(20)) === 0),
-          graft.core.TableIO.read(s, loc.toString))
+          TableIO.read(s, loc))
         .orderBy(col("doc_id"))
     }),
     // greedy sample packing into 512-token context windows, 64 shards

@@ -3,9 +3,14 @@ package graft.core
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Build-once guard for derived tables (signature stores, bucketed fact
+/** The materialization seams: build-once warehouse tables ([[store]]) and
+  * eager lineage cuts ([[truncate]], reclaimed by [[release]]).
+  *
+  * Build-once guard for derived tables (signature stores, bucketed fact
   * copies): a `_graft_src` marker inside the table location records the
   * source tag the table was built from, and a matching marker skips the
   * build entirely. This is the production materialize-once seam made
@@ -67,6 +72,58 @@ object Materialize {
       if (fs.exists(marker)) fs.delete(marker, false)
       if (!fs.rename(tmp, marker)) sys.error(s"marker rename failed: $tmp -> $marker")
       true
+    }
+  }
+
+  /** The build-once warehouse table `name`: `build` is written through
+    * [[TableIO.write]] unless the marker already carries `tag` ([[onceAt]]).
+    * Returns the location, not a read — a caller that only needs the store
+    * to exist lists no files. */
+  def store(spark: SparkSession, name: String, tag: String)(build: => DataFrame): String = {
+    val loc = warehousePath(spark, name)
+    onceAt(spark, loc, tag)(TableIO.write(build, loc.toString))
+    loc.toString
+  }
+
+  /** Eager lineage cut: materializes `ds` now and returns a scan of the
+    * materialized rows, so the plan and the task lineage stop growing
+    * (iterative loops) and a subtree several consumers reference runs
+    * once (column pruning makes those references canonically unequal, so
+    * neither CSE nor exchange reuse collapses them).
+    *
+    * The mode follows Spark's own deployment setting: with
+    * `sparkContext.getCheckpointDir` set (distributed storage on a
+    * cluster) this is a reliable `checkpoint`, otherwise a
+    * `localCheckpoint`. Under executor loss, local checkpoint blocks die
+    * with the executor and the job FAILS (never silently corrupts —
+    * inputs are deterministic, there is no partial recompute), while
+    * reliable checkpoints survive and the lost partitions re-read from
+    * storage. Both modes are row-identical; local is the single-box
+    * default because it skips the write-to-storage round trip. A cut that
+    * lives as long as a lazy result (the pair faces' kernel cuts) is never
+    * [[release]]d — `spark.cleaner.referenceTracking.cleanCheckpoints`
+    * reclaims its reliable files. */
+  def truncate[T](ds: Dataset[T]): Dataset[T] =
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) ds.checkpoint(eager = true)
+    else ds.localCheckpoint(eager = true)
+
+  /** Reclaims a [[truncate]]d table (or a projection of one) once nothing
+    * reads it any more. `Dataset.unpersist()` frees neither kind of cut: a
+    * local cut's blocks belong to the checkpointed RDD under the plan, not
+    * to the cache manager, and a reliable cut's FILES stay on storage — an
+    * iterative loop would keep one full copy per round. */
+  def release(ds: Dataset[_]): Unit = {
+    val cut = ds.queryExecution.logical match {
+      case l: LogicalRDD => Some(l.rdd)
+      case Project(_, l: LogicalRDD) => Some(l.rdd)
+      case _ => None
+    }
+    for (rdd <- cut) {
+      rdd.unpersist(blocking = false)
+      rdd.getCheckpointFile.foreach { f =>
+        val p = new Path(f)
+        p.getFileSystem(ds.sparkSession.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
   }
 }

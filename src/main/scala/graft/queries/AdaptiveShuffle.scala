@@ -55,24 +55,34 @@ private[graft] object AdaptiveShuffle {
     if (sizeEst <= maxBytes) df.repartition(target) else df
   }
 
-  /** Scoped session confs for an iterative op: from construction, AQE may
+  private val pinLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, java.util.concurrent.locks.ReentrantLock]())
+
+  /** Scoped session confs for an iterative op: inside `body`, AQE may
     * re-partition cached plans (`canChangeCachedPlanOutputPartitioning` —
     * helper caches get sized by data instead of inheriting
-    * `spark.sql.shuffle.partitions` map-side); `pin(p)` pins the shuffle
-    * partition count once the edge/pair count is measured. `restore()`
-    * (call in a finally) puts both confs back — every eager action runs
-    * inside the scope and the returned DataFrames are
-    * checkpoint-truncated, so no lazy work escapes it. */
-  final class Scope(spark: SparkSession) {
-    private val kShuf = "spark.sql.shuffle.partitions"
-    private val kCache = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    private val oldShuf = spark.conf.getOption(kShuf)
-    private val oldCache = spark.conf.getOption(kCache)
-    spark.conf.set(kCache, "true")
-    def pin(p: Int): Unit = spark.conf.set(kShuf, p.toString)
-    def restore(): Unit = {
-      oldShuf.fold(spark.conf.unset(kShuf))(spark.conf.set(kShuf, _))
-      oldCache.fold(spark.conf.unset(kCache))(spark.conf.set(kCache, _))
-    }
+    * `spark.sql.shuffle.partitions` map-side), and `pin(p)` pins the
+    * shuffle partition count once the edge/pair count is measured. Both
+    * confs are put back when `body` ends — every eager action runs inside
+    * the block and the returned DataFrames are checkpoint-truncated, so no
+    * lazy work escapes it. Blocks on one session serialize on a reentrant
+    * per-session lock held from save to restore, so two iterative queries
+    * cannot save each other's pin and leave the session pinned. */
+  def pinned[T](spark: SparkSession)(body: (Int => Unit) => T): T = {
+    val kShuf = "spark.sql.shuffle.partitions"
+    val kCache = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    val lock = pinLocks.computeIfAbsent(spark,
+      _ => new java.util.concurrent.locks.ReentrantLock())
+    lock.lock()
+    try {
+      val oldShuf = spark.conf.getOption(kShuf)
+      val oldCache = spark.conf.getOption(kCache)
+      spark.conf.set(kCache, "true")
+      try body(p => spark.conf.set(kShuf, p.toString))
+      finally {
+        oldShuf.fold(spark.conf.unset(kShuf))(spark.conf.set(kShuf, _))
+        oldCache.fold(spark.conf.unset(kCache))(spark.conf.set(kCache, _))
+      }
+    } finally lock.unlock()
   }
 }

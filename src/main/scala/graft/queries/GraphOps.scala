@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 /** Graph centrality over the extraction's entity graph.
   *
   * Reference behavior: openfoia renders the entity co-occurrence graph as
@@ -24,8 +26,6 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  private type GraphConfScope = AdaptiveShuffle.Scope
-
   /** PageRank in EXACT integer arithmetic, damping 0.85, fixed iteration
     * count. Ranks are scaled to 1e9 "rank units"; every division is a
     * `floor` over magnitudes far below 2^53, so double division is exact
@@ -42,8 +42,8 @@ object GraphOps {
     * table against out-degrees (narrow floor projection), ONE edge join +
     * map-side-combinable sum shuffled on dst, ONE left join back to the
     * node table. Edges and degrees are computed once and persisted; the
-    * rank lineage is truncated every `cpEvery` rounds (localCheckpoint —
-    * the [[TrainingOps.connectedComponents]] plan-size doctrine), so the
+    * rank lineage is truncated every `cpEvery` rounds (`Materialize.truncate`
+    * — the [[TrainingOps.connectedComponents]] plan-size doctrine), so the
     * plan stays bounded at any iteration count.
     *
     * `edges` must be DISTINCT directed (src, dst) string pairs — pass
@@ -88,14 +88,13 @@ object GraphOps {
       cpEvery: Int = 8): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(cpEvery > 0, s"cpEvery must be > 0, got $cpEvery")
-    val scope = new GraphConfScope(spark)
-    try {
+    AdaptiveShuffle.pinned(spark) { pin =>
       val eRaw = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
         .persist()
       val nEdges = eRaw.count()
       val p = AdaptiveShuffle.parts(nEdges)
-      scope.pin(p)
+      pin(p)
       // W(u) = Σ out-weights rides EVERY edge row as a constant across
       // rounds — join it ONCE here instead of once per round (the r7 form
       // re-joined wtot inside the loop: one extra node-sized join and its
@@ -109,32 +108,27 @@ object GraphOps {
       eRaw.unpersist() // e and nodes are materialized now — drop the raw copy
       if (n == 0) {
         e.unpersist(); nodes.unpersist()
-        return nodes.select(col("node"), lit(0L).as("rank_units"))
+        nodes.select(col("node"), lit(0L).as("rank_units"))
+      } else {
+        val wtot = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
+        val ew = e.join(wtot, "src")
+          .select(col("src"), col("dst"), col("w"), col("wt")).persist()
+        val base = math.floor(1.5e8 / n).toLong
+        val out = iterate(nodes.select(col("node"),
+            lit(math.floor(1e9 / n).toLong).as("r")), iters, cpEvery) { ranks =>
+          val contrib = ew
+            .join(ranks.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
+            .select(col("dst"),
+              floor(col("r").cast("double") * col("w") / col("wt")).as("s"))
+            .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
+          nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
+            .select(col("node"), (lit(base) +
+              floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
+        }
+        e.unpersist(); nodes.unpersist(); ew.unpersist()
+        out
       }
-      val wtot = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
-      val ew = e.join(wtot, "src")
-        .select(col("src"), col("dst"), col("w"), col("wt")).persist()
-      val base = math.floor(1.5e8 / n).toLong
-      var ranks = nodes.select(col("node"),
-        lit(math.floor(1e9 / n).toLong).as("r"))
-      var i = 0
-      while (i < iters) {
-        val contrib = ew
-          .join(ranks.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
-          .select(col("dst"),
-            floor(col("r").cast("double") * col("w") / col("wt")).as("s"))
-          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
-        val next = nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-          .select(col("node"), (lit(base) +
-            floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
-        ranks = if ((i + 1) % cpEvery == 0) next.localCheckpoint(true) else next
-        i += 1
-      }
-      val out = ranks.select(col("node"), col("r").cast("long").as("rank_units"))
-        .localCheckpoint(true)
-      e.unpersist(); nodes.unpersist(); ew.unpersist()
-      out
-    } finally scope.restore()
+    }
   }
 
   /** Per-node triangle counts + degree via the degree-ordered
@@ -157,13 +151,12 @@ object GraphOps {
     // persist the INPUT edge build first: canon and deg both consume it,
     // and without this the upstream build (e.g. the co-mention self-join)
     // re-executed once per consumer — measured 2× on the bench face
-    val scope = new GraphConfScope(spark)
-    try {
+    AdaptiveShuffle.pinned(spark) { pin =>
       val e = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst")).persist()
       val nEdges = e.count()
       val p = AdaptiveShuffle.parts(nEdges)
-      scope.pin(p)
+      pin(p)
       // canon feeds the orientation AND the closure join, deg feeds the
       // orientation twice plus the output, o self-joins — persist each or
       // the edge scan re-executes once per consumer
@@ -188,26 +181,24 @@ object GraphOps {
         .select(explode(array(col("u"), col("v1"), col("v2"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("triangles"))
       // eager-truncate, then release the helpers (the pageRank doctrine)
-      val out = deg.join(perNode, Seq("node"), "left")
+      val out = Materialize.truncate(deg.join(perNode, Seq("node"), "left")
         .select(col("node"), col("d").cast("long").as("degree"),
-          coalesce(col("triangles"), lit(0L)).cast("long").as("triangles"))
-        .localCheckpoint(true)
+          coalesce(col("triangles"), lit(0L)).cast("long").as("triangles")))
       e.unpersist(); canon.unpersist(); deg.unpersist(); o.unpersist()
       out
-    } finally scope.restore()
+    }
   }
 
   private def run(spark: SparkSession, edges: DataFrame, iters: Int,
       cpEvery: Int, seedPred: Option[Column]): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(cpEvery > 0, s"cpEvery must be > 0, got $cpEvery")
-    val scope = new GraphConfScope(spark)
-    try {
+    AdaptiveShuffle.pinned(spark) { pin =>
       val eRaw = edges.select(col("src").cast("string").as("src"),
         col("dst").cast("string").as("dst")).persist()
       val nEdges = eRaw.count() // materializes the edge build once; sizes p
       val p = AdaptiveShuffle.parts(nEdges)
-      scope.pin(p)
+      pin(p)
       // Edge table hash-partitioned on src ONCE: the per-round rank join
       // reuses this partitioning every round, so the only per-round
       // exchange left is the fundamental contribution reduce on dst
@@ -224,42 +215,57 @@ object GraphOps {
       if (n == 0) {
         e.unpersist(); nodes.unpersist()
         require(seedPred.isEmpty, "pageRankSeeded: no seed node is in the graph")
-        return nodes.select(col("node"), lit(0L).as("rank_units"))
+        nodes.select(col("node"), lit(0L).as("rank_units"))
+      } else {
+        // deg inherits e's (src, p) partitioning — a complete per-partition
+        // aggregation, zero exchange (all out-edges of a node co-reside)
+        val deg = e.groupBy(col("src").as("node"))
+          .agg(count(lit(1)).as("od")).persist()
+        // ⌊SCALE/|S|⌋ start mass and ⌊(1-d)·SCALE/|S|⌋ per-round teleport,
+        // landing on seeds only (uniform PageRank: every node is a seed)
+        val r0 = math.floor(1e9 / n).toLong
+        val base = math.floor(1.5e8 / n).toLong
+        val out = iterate(nodes.select(col("node"),
+            when(isSeed, lit(r0)).otherwise(lit(0L)).as("r")), iters, cpEvery) { ranks =>
+          // shuffle_hash hints: build the hash map on the node-sized side
+          // and STREAM the edge side — a sort-merge join would re-sort the
+          // edge partitions every round (guide §3.1)
+          val shares = ranks.join(deg.hint("shuffle_hash"), "node")
+            .select(col("node"), floor(col("r").cast("double") / col("od")).as("s"))
+          val contrib = e.join(shares.withColumnRenamed("node", "src")
+              .hint("shuffle_hash"), "src")
+            .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
+          nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
+            .select(col("node"), (when(isSeed, lit(base)).otherwise(lit(0L)) +
+              floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
+        }
+        e.unpersist(); nodes.unpersist(); deg.unpersist()
+        out
       }
-      // deg inherits e's (src, p) partitioning — a complete per-partition
-      // aggregation, zero exchange (all out-edges of a node co-reside)
-      val deg = e.groupBy(col("src").as("node"))
-        .agg(count(lit(1)).as("od")).persist()
-      // ⌊SCALE/|S|⌋ start mass and ⌊(1-d)·SCALE/|S|⌋ per-round teleport,
-      // landing on seeds only (uniform PageRank: every node is a seed)
-      val r0 = math.floor(1e9 / n).toLong
-      val base = math.floor(1.5e8 / n).toLong
-      var ranks = nodes.select(col("node"),
-        when(isSeed, lit(r0)).otherwise(lit(0L)).as("r"))
-      var i = 0
-      while (i < iters) {
-        // shuffle_hash hints: build the hash map on the node-sized side
-        // and STREAM the edge side — a sort-merge join would re-sort the
-        // edge partitions every round (guide §3.1)
-        val shares = ranks.join(deg.hint("shuffle_hash"), "node")
-          .select(col("node"), floor(col("r").cast("double") / col("od")).as("s"))
-        val contrib = e.join(shares.withColumnRenamed("node", "src")
-            .hint("shuffle_hash"), "src")
-          .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
-        val next = nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-          .select(col("node"), (when(isSeed, lit(base)).otherwise(lit(0L)) +
-            floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
-        ranks = if ((i + 1) % cpEvery == 0) next.localCheckpoint(true) else next
-        i += 1
+    }
+  }
+
+  /** `iters` rounds of `step` over the (node, r) rank table, truncated
+    * every `cpEvery` rounds; returns (node, rank_units) eagerly truncated
+    * so the caller can release its helper tables NOW (the round-6 ADVICE
+    * reclaim doctrine) — node-sized, so the extra materialization is O(N)
+    * rows. Each superseded cut is released once the next one is
+    * materialized. */
+  private def iterate(r0: DataFrame, iters: Int, cpEvery: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var ranks = r0
+    var cut: Option[DataFrame] = None
+    for (i <- 1 to iters) {
+      ranks = step(ranks)
+      if (i % cpEvery == 0) {
+        ranks = Materialize.truncate(ranks)
+        cut.foreach(Materialize.release)
+        cut = Some(ranks)
       }
-      // eager-truncate the result so the helper tables can be released NOW
-      // (the round-6 ADVICE reclaim doctrine); node-sized, so the extra
-      // materialization is O(N) rows, and the CC localCheckpoint
-      // executor-loss caveat applies (fail-retry, never silent corruption)
-      val out = ranks.select(col("node"), col("r").cast("long").as("rank_units"))
-        .localCheckpoint(true)
-      e.unpersist(); nodes.unpersist(); deg.unpersist()
-      out
-    } finally scope.restore()
+    }
+    val out = Materialize.truncate(
+      ranks.select(col("node"), col("r").cast("long").as("rank_units")))
+    cut.foreach(Materialize.release)
+    out
   }
 }

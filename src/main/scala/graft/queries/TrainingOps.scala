@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
+
 import scala.util.hashing.MurmurHash3
 
 /** Large-scale training-data pipeline operators over the `documents` and
@@ -250,7 +252,7 @@ object TrainingOps {
     // the materialize-once STORED face (dd_minhash_stored) is the
     // production path; this keeps the lazy face's kernel single-pass too.
     minhashPairsFromSignatures(spark,
-      minhashSignatures(spark, docs, k).localCheckpoint(true),
+      Materialize.truncate(minhashSignatures(spark, docs, k)),
       k, bands, minSim, maxBucket)
 
   /** The MinHash signature table (doc_id, sig) — the materialization seam:
@@ -366,7 +368,7 @@ object TrainingOps {
     // batch-side signature kernel eager-truncated (see [[minhashPairs]]);
     // the store side is already a materialized table
     val pairs = minhashPairsAgainstStore(spark,
-      minhashSignatures(spark, newDocs, k).localCheckpoint(true),
+      Materialize.truncate(minhashSignatures(spark, newDocs, k)),
       storeSigs, k, bands, minSim, maxBucket)
     newDocs.select(col("doc_id").cast("long").as("doc_id"))
       .join(pairs.select(col("doc_new").as("doc_id")), Seq("doc_id"), "left_anti")
@@ -390,7 +392,7 @@ object TrainingOps {
     // [[minhashPairs]] (the chunk explode + self-join reference it from
     // differently-pruned subtrees)
     simhashPairsFromFingerprints(spark,
-      simhashFingerprints(spark, docs).localCheckpoint(true),
+      Materialize.truncate(simhashFingerprints(spark, docs)),
       maxHamming, maxBucket)
 
   /** The SimHash fingerprint table (doc_id, fp) — same materialization seam
@@ -453,13 +455,13 @@ object TrainingOps {
     // collapse the re-runs (see [[minhashPairs]]; the stored face
     // dd_ngram_stored is the corpus-scale path)
     ngramJaccardFromShingles(spark,
-      ngramShingles(spark, docs, n).localCheckpoint(true), minJaccard, maxDf)
+      Materialize.truncate(ngramShingles(spark, docs, n)), minJaccard, maxDf)
 
   /** Lazy single-query face of [[ngramContainmentFromShingles]] (T52). */
   def ngramContainmentPairs(spark: SparkSession, docs: DataFrame,
       n: Int = 3, minContainment: Double = 0.5, maxDf: Int = 10000): DataFrame =
     ngramContainmentFromShingles(spark,
-      ngramShingles(spark, docs, n).localCheckpoint(true),
+      Materialize.truncate(ngramShingles(spark, docs, n)),
       minContainment, maxDf)
 
   /** The exploded shingle table (doc_id, sh) — the n-gram family's
@@ -553,7 +555,7 @@ object TrainingOps {
         // counts the checkpoint directly instead of exploding the
         // collect_list a second time (the r7 form ran the posting-list
         // aggregation once per consumer).
-        val keptRows = dropHotGroups(shAll, Seq("sh"), maxDf).localCheckpoint(true)
+        val keptRows = Materialize.truncate(dropHotGroups(shAll, Seq("sh"), maxDf))
         val nShuf = spark.sessionState.conf.numShufflePartitions
         val kept = keptRows.repartition(nShuf, col("sh"))
           .groupBy(col("sh"))
@@ -616,83 +618,44 @@ object TrainingOps {
     * Scale: per round, one shuffle for the groupBy-min (map-side partial
     * agg — state per node, never per edge) and one equi-join shuffle for
     * the jump; the edge table is persisted once and reused every round.
-    * Each round's label table goes through an EAGER `localCheckpoint`, the
-    * iterative-algorithm requirement: persist alone caches row data but
+    * Each round's label table goes through an EAGER `Materialize.truncate`,
+    * the iterative-algorithm requirement: persist alone caches row data but
     * leaves the logical plan growing geometrically (each round embeds the
     * previous round's plan ~4×; by round ~7 even rendering the plan string
     * OOMs the driver), while the checkpoint truncates both the plan and
-    * the RDD lineage to a scan of the materialized blocks. On a cluster
-    * where executor loss must not kill the job, pass
-    * `reliableCheckpoint = true` (with `setCheckpointDir` on distributed
-    * storage) — block loss under localCheckpoint fails the job (never
-    * silently corrupts: inputs are deterministic, there is no partial
-    * recompute). The RESULT stays materialized (the iterative norm)
-    * — production callers write it to a table when done.
+    * the RDD lineage to a scan of the materialized blocks — reliable
+    * (executor-loss safe) wherever a checkpoint dir is set, and each
+    * superseded round is released. The RESULT stays materialized (the
+    * iterative norm) — production callers write it to a table when done.
     *
     * `pairs`: first two columns are the edge endpoints (any castable-to-
     * long type); extra columns (similarity scores) are ignored. Nodes with
     * no edges never appear in `pairs` and so are absent from the output —
     * singletons are their own survivor by definition. */
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
-      maxIter: Int = 25, reliableCheckpoint: Boolean = false): DataFrame =
-    connectedComponentsIter(spark, pairs, maxIter, reliableCheckpoint)._1
+      maxIter: Int = 25): DataFrame =
+    connectedComponentsIter(spark, pairs, maxIter)._1
 
   /** [[connectedComponents]] plus the observed round count (the scale
-    * probes report rounds-vs-n to back the O(log n) claim).
-    *
-    * `reliableCheckpoint = true` swaps every per-round truncation from
-    * executor-local `localCheckpoint` to reliable `checkpoint()` against
-    * `spark.sparkContext.getCheckpointDir` (the caller must have called
-    * `setCheckpointDir` — distributed storage on a real cluster): under
-    * executor loss, local checkpoint blocks die with the executor and the
-    * job FAILS (never silently corrupts — inputs are deterministic, there
-    * is no partial recompute), while reliable checkpoints survive and the
-    * lost partitions re-read from storage. Both modes are row-identical
-    * (OpsSpec pins it); local is the single-box/bench default because it
-    * skips the write-to-storage round trip each round. */
+    * probes report rounds-vs-n to back the O(log n) claim). */
   private[graft] def connectedComponentsIter(spark: SparkSession,
-      pairs: DataFrame, maxIter: Int = 25,
-      reliableCheckpoint: Boolean = false): (DataFrame, Int) = {
+      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
     require(pairs.columns.length >= 2,
       s"pairs needs >= 2 columns (edge endpoints); got ${pairs.columns.mkString(", ")}")
-    if (reliableCheckpoint)
-      require(spark.sparkContext.getCheckpointDir.isDefined,
-        "reliableCheckpoint=true needs spark.sparkContext.setCheckpointDir " +
-          "(distributed storage on a cluster) before calling")
-    // eager in both modes: the fixpoint loop needs each round MATERIALIZED
-    // before the next round's plan is built (plan truncation is the point)
-    def ckpt(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(eager = true)
-      else df.localCheckpoint(eager = true)
-    // reliable-mode hygiene: unpersist() drops only the CACHED blocks of a
-    // checkpoint()ed table — the checkpoint FILES stay on disk, so a long
-    // run would accumulate one full label-table copy per round. Once the
-    // next round is materialized, the previous round's files are dead
-    // weight; delete them (localCheckpoint blocks are reclaimed by
-    // unpersist itself, so local mode needs nothing here).
-    def dropCheckpointFiles(df: DataFrame): Unit =
-      if (reliableCheckpoint) df.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.getCheckpointFile.foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-          }
-        case _ => ()
-      }
     val Array(ca, cb) = pairs.columns.take(2)
-    val scope = new AdaptiveShuffle.Scope(spark)
-    try {
+    AdaptiveShuffle.pinned(spark) { pin =>
       // checkpoint the edge list FIRST: `pairs` is typically the output of a
       // whole candidate-generation pipeline (shingle → index → join), and it
       // appears in four union branches of the expanded edge table below — a
       // lazy reference would recompute that pipeline once per branch (4× the
       // pair cost, measured on the n-gram path before this landed)
-      val e = ckpt(pairs.select(col(ca).cast("long").as("u"), col(cb).cast("long").as("v")))
+      val e = Materialize.truncate(
+        pairs.select(col(ca).cast("long").as("u"), col(cb).cast("long").as("v")))
       // the checkpoint is materialized — count it (cheap scan of the
       // materialized blocks) and size every loop shuffle from the measured
       // edge count (guide §2.2; 2·|pairs| + |nodes| rows is the closed
       // neighborhood's upper bound)
-      scope.pin(AdaptiveShuffle.parts(2L * e.count()))
+      pin(AdaptiveShuffle.parts(2L * e.count()))
       // both directions plus a self-loop per node: the hook join over this
       // table sees the CLOSED neighborhood, so the loop body is one join +
       // one agg — no per-round union (unioning a checkpointed table with its
@@ -707,7 +670,7 @@ object TrainingOps {
         .repartition(col("v"))
         .persist()
 
-      var labelsCk = ckpt(undLoop.select(col("u").as("node")).distinct()
+      var labelsCk = Materialize.truncate(undLoop.select(col("u").as("node")).distinct()
         .select(col("node"), col("node").as("comp")))
       var labels = labelsCk
       var it = 0
@@ -733,24 +696,22 @@ object TrainingOps {
           .select(col("u").as("node"), col("comp"), col("prev"))
         // jump: comp := comp's comp (labels are node ids, so every comp
         // resolves; left join guards the root, whose comp is itself)
-        val jumped = ckpt(hooked.as("x")
+        val jumped = Materialize.truncate(hooked.as("x")
           .join(hooked.select(col("node").as("rn"), col("comp").as("rc"))
             .as("r").hint("shuffle_hash"),
             col("x.comp") === col("rn"), "left")
           .select(col("x.node").as("node"),
             coalesce(col("rc"), col("x.comp")).as("comp"), col("x.prev").as("prev")))
         changed = jumped.where(col("comp") =!= col("prev")).count()
-        labelsCk.unpersist()
-        dropCheckpointFiles(labelsCk)
+        Materialize.release(labelsCk)
         labelsCk = jumped
         labels = jumped.select(col("node"), col("comp"))
         it += 1
       }
       undLoop.unpersist()
-      e.unpersist() // the returned labels live on their own checkpoint
-      dropCheckpointFiles(e) // labels scan only the final round's files
+      Materialize.release(e) // the returned labels live on their own checkpoint
       (labels, it)
-    } finally scope.restore()
+    }
   }
 
   /** Near-dup cluster membership: connected components over the exact
@@ -860,9 +821,8 @@ object TrainingOps {
     // broadcast/closure otherwise rides every task of every consumer
     // (QueryTime's stage profile: task-deser dominated the three 32-task
     // stages) — the minhashPairs truncation rationale
-    val e =
-      (if (maxBucket > 0) dropHotGroups(e0, Seq("bucket"), maxBucket)
-      else e0).localCheckpoint(true)
+    val e = Materialize.truncate(
+      if (maxBucket > 0) dropHotGroups(e0, Seq("bucket"), maxBucket) else e0)
     val cands = e.as("a").join(e.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
@@ -1547,7 +1507,7 @@ object TrainingOps {
     * + fpp false positives — at 100 TB with a benchmark-sized overlap the
     * join input drops by ~99%. No false negatives (Bloom guarantee), and
     * the exact join removes the false positives, so the output is exact.
-    * The train-gram table is eagerly localCheckpointed: it feeds three
+    * The train-gram table is eagerly truncated: it feeds three
     * consumers (count for sizing, the Bloom build, the exact join) and a
     * lazy plan would re-shingle the train corpus per consumer.
     *
@@ -1563,10 +1523,10 @@ object TrainingOps {
     // delegate (count, Bloom build, exact join) — materialize it ONCE
     // here; the delegate deliberately does not checkpoint, so a stored
     // table passed to it is never pointlessly copied
-    val trainG = contaminationTrainGrams(spark, docs, n, evalMod, hashGrams = true)
-      .localCheckpoint(true)
+    val trainG = Materialize.truncate(
+      contaminationTrainGrams(spark, docs, n, evalMod, hashGrams = true))
     val result = contaminationBloomFromTrainGrams(spark, docs, trainG, n, evalMod, fpp)
-    trainG.unpersist()
+    Materialize.release(trainG)
     result
   }
 
@@ -1635,7 +1595,7 @@ object TrainingOps {
     // gram-sized copy; groupBy-collect_list over millions of doc keys fell
     // back to sort-based ObjectHashAggregate — a full sort of the gram
     // stream.)
-    val perDoc = docs
+    val perDoc = Materialize.truncate(docs
       .where(pmod(col("doc_id").cast("long"), lit(evalMod)) === 0)
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
@@ -1649,22 +1609,20 @@ object TrainingOps {
           }
           (id, sh.size.toLong, adm.result())
         }
-      }.toDF("doc_id", "n_grams", "cand")
-      .localCheckpoint(true)
+      }.toDF("doc_id", "n_grams", "cand"))
     val overlap = perDoc.select(col("doc_id"), explode(col("cand")).as("g"))
       .join(trainG.select(col("g")), Seq("g"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
-    val result = perDoc.select(col("doc_id"), col("n_grams"))
+    val result = Materialize.truncate(perDoc.select(col("doc_id"), col("n_grams"))
       .join(overlap, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
       .select(col("doc_id"), col("n_grams"), col("n_overlap"),
         (floor(col("n_overlap").cast("double") / col("n_grams") * 1e4 + 0.5) / 1e4)
           .as("overlap_ratio"),
-        (col("n_overlap") > 0).as("contaminated"))
-      .localCheckpoint(true)
+        (col("n_overlap") > 0).as("contaminated")))
     bbf.destroy()
-    perDoc.unpersist()
+    Materialize.release(perDoc)
     result
   }
 
@@ -1923,7 +1881,7 @@ object TrainingOps {
     // join-back read it with different column pruning, so exchange reuse
     // does not collapse the two flatMap runs (the minhashPairs rationale);
     // a repeated-sweep caller still materializes via TableIO instead
-    val occ = windowOccurrences(spark, docs, n, hashWindows).localCheckpoint(true)
+    val occ = Materialize.truncate(windowOccurrences(spark, docs, n, hashWindows))
     val dup = occ.groupBy(col("g"))
       .agg(min(col("doc_id")).as("w_min"), countDistinct(col("doc_id")).as("w_docs"))
       .where(col("w_docs") >= 2)
@@ -2190,28 +2148,24 @@ object TrainingOps {
     import spark.implicits._
     require(nMerges >= 1)
     val Sep = "\u0001"
-    var vocab = AdaptiveShuffle.spread(docs.select(col("text")))
+    // CHECKPOINT, not persist: persist caches row data but leaves the
+    // serialized task lineage growing one .map closure per merge — by
+    // merge 4 every task deserializes the whole chain (measured: task-deser
+    // dominating the loop stages). The checkpoint truncates lineage each
+    // round (the connectedComponents doctrine).
+    var vocab = Materialize.truncate(AdaptiveShuffle.spread(docs.select(col("text")))
       .select(explode(split(lower(col("text")), "\\s+")).as("w"))
       .where(col("w") =!= "")
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
       .as[(String, Long)]
-      .map { case (w, f) => (w.map(c => s"$c$Sep").mkString, f) }
-      // LOCAL CHECKPOINT, not persist: persist caches row data but leaves
-      // the serialized task lineage growing one .map closure per merge —
-      // by merge 4 every task deserializes the whole chain (measured:
-      // task-deser dominating the loop stages). The checkpoint truncates
-      // lineage each round (the connectedComponents doctrine).
-      .localCheckpoint(true)
+      .map { case (w, f) => (w.map(c => s"$c$Sep").mkString, f) })
     // pin every loop shuffle to the MEASURED vocab size (guide §2.2 — the
     // pair agg and replace map run over a vocab-sized table, not the
     // corpus; at bench scale that is 1 partition instead of the session's
     // 32)
-    val scope = new AdaptiveShuffle.Scope(spark)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
-    try {
-      // pin INSIDE the try: a failing count action must still restore the
-      // session confs (the Scope contract)
-      scope.pin(AdaptiveShuffle.parts(vocab.count()))
+    try AdaptiveShuffle.pinned(spark) { pin =>
+      pin(AdaptiveShuffle.parts(vocab.count()))
       var it = 1
       var continue = true
       while (it <= nMerges && continue) {
@@ -2227,14 +2181,13 @@ object TrainingOps {
           val (l, r, cnt) = (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
           merges += ((it, l, r, cnt))
           val prev = vocab
-          vocab = vocab.map { case (enc, f) =>
-              (enc.replace(s"$l$Sep$r$Sep", s"$l$r$Sep"), f) }
-            .localCheckpoint(true)
-          prev.unpersist()
+          vocab = Materialize.truncate(vocab.map { case (enc, f) =>
+            (enc.replace(s"$l$Sep$r$Sep", s"$l$r$Sep"), f) })
+          Materialize.release(prev)
           it += 1
         }
       }
-    } finally { vocab.unpersist(); scope.restore() }
+    } finally Materialize.release(vocab)
     spark.createDataFrame(merges.toSeq).toDF("iter", "l", "r", "n")
   }
 
@@ -2398,12 +2351,11 @@ object TrainingOps {
     // pruning, so without this the corpus explode+hash runs twice (the
     // minhashPairs truncation rationale); the table is ≤ docs×buckets
     // rows — the smallest full-corpus representation in the operator
-    val docB = AdaptiveShuffle.spread(base.select(col("doc_id"), col("text")))
+    val docB = Materialize.truncate(AdaptiveShuffle.spread(base.select(col("doc_id"), col("text")))
       .select(col("doc_id"), explode(split(lower(col("text")), "\\s+")).as("tok"))
       .where(col("tok") =!= "")
       .select(col("doc_id"), pmod(expr("fnv1a64(tok)"), lit(buckets.toLong)).as("b"))
-      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("doc_id"), col("b")).agg(count(lit(1)).as("c")))
     val train = base.where(pmod(col("doc_id"), lit(holdMod.toLong)) =!= 0)
       .select(col("doc_id"), col("label"))
     val classB = docB.join(train, Seq("doc_id"))
@@ -2468,10 +2420,9 @@ object TrainingOps {
     // eager-truncate at the distinct-score table (tiny): the bucket
     // subtotal branch and the rank join both consume `g`, and without the
     // checkpoint the entire NB classifier pipeline upstream runs twice
-    val g = h.groupBy(col("score"))
+    val g = Materialize.truncate(h.groupBy(col("score"))
       .agg(count(lit(1)).as("n"), sum(col("c")).as("np"))
-      .withColumn("bkt", floor(col("score")).cast("long"))
-      .localCheckpoint(true)
+      .withColumn("bkt", floor(col("score")).cast("long")))
     val bt = g.groupBy(col("bkt")).agg(sum(col("n")).as("bn"))
     // buckets-sized prefix (the T38 broadcast-group-prefix face); the
     // unpartitioned window runs over ≤ score-range rows, never the corpus

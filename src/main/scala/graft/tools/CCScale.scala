@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.queries.TrainingOps
 
 /** Connected-components volume probe: rounds + wall time for
@@ -15,10 +16,10 @@ import graft.queries.TrainingOps
   *  - CHAIN: one path 0-1-2-…-(n-1) — the diameter-maximal worst case.
   *    Plain min-propagation needs n rounds; hooked-min + pointer jump
   *    roughly doubles the labelled distance per round, so rounds ≈ log₂ n.
-  *    Exact invariant: every node lands in component 0.
+  *    Exact invariant (required): every node lands in component 0.
   *  - CLUSTERS: n/5 disjoint 5-cliques — the realistic near-dup shape
-  *    (LSH components are band-cliques). Rounds stay O(1); exact
-  *    invariant: n/5 components, each labelled by its minimum member.
+  *    (LSH components are band-cliques). Rounds stay O(1); required:
+  *    n/5 components, each labelled by its minimum member.
   *
   * Env: CCSCALE_SIZES (csv, default "10000,100000"), SPARK_GRAFT_CPUS.
   */
@@ -50,18 +51,21 @@ object CCScale {
       val ((chainLbl, chainRounds), chainSec) =
         time(TrainingOps.connectedComponentsIter(spark, chain(spark, n)))
       val chainBad = chainLbl.where(col("comp") =!= 0L).count()
-      chainLbl.unpersist()
+      Materialize.release(chainLbl)
 
       val ((clLbl, clRounds), clSec) =
         time(TrainingOps.connectedComponentsIter(spark, cliques(spark, n)))
       val nComps = clLbl.select(col("comp")).distinct().count()
       val clBad = clLbl.where(col("comp") =!= (col("node") - pmod(col("node"), lit(5L)))).count()
-      clLbl.unpersist()
+      Materialize.release(clLbl)
 
       println(f"CCSCALE n=$n%d chain_rounds=$chainRounds chain_sec=$chainSec%.1f " +
         f"chain_mislabeled=$chainBad cliques_rounds=$clRounds cliques_sec=$clSec%.1f " +
         f"cliques_components=$nComps (expect ${n / 5}) cliques_mislabeled=$clBad " +
         f"log2n=${(math.log(n.toDouble) / math.log(2))}%.1f")
+      require(chainBad == 0, s"chain n=$n: $chainBad nodes not labelled 0")
+      require(clBad == 0, s"cliques n=$n: $clBad nodes not labelled by their clique minimum")
+      require(nComps == n / 5, s"cliques n=$n: $nComps components, expected ${n / 5}")
       (n, chainRounds, chainSec, clRounds, clSec)
     }
 

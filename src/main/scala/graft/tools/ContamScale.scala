@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Materialize
 import graft.queries.TrainingOps
 
 /** Contamination-check + repetition-filter volume probe, the T23/T24
@@ -64,12 +65,12 @@ object ContamScale {
       val (bloom, bSec) = time(agg3(
         TrainingOps.contaminationCheckBloom(spark, docs, gramN, evalMod, fpp)))
       val parity = bloom == contam
-      val evalG = TrainingOps.gramsOf(spark,
+      val evalG = Materialize.truncate(TrainingOps.gramsOf(spark,
         docs.where(pmod(col("doc_id").cast("long"), lit(evalMod)) === 0),
-        gramN, hashed = true).localCheckpoint(true)
+        gramN, hashed = true))
       val evalGrams = evalG.count()
-      val trainG = TrainingOps.contaminationTrainGrams(spark, docs,
-        gramN, evalMod, hashGrams = true).localCheckpoint(true)
+      val trainG = Materialize.truncate(TrainingOps.contaminationTrainGrams(spark, docs,
+        gramN, evalMod, hashGrams = true))
       val bf = trainG.stat.bloomFilter("g", math.max(trainG.count(), 1L), fpp)
       val bbf = spark.sparkContext.broadcast(bf)
       val candidates = {
@@ -80,8 +81,8 @@ object ContamScale {
       // tables each iteration — release them or block-manager memory grows
       // with every rung of the size ladder
       bbf.destroy()
-      evalG.unpersist()
-      trainG.unpersist()
+      Materialize.release(evalG)
+      Materialize.release(trainG)
       docs.unpersist()
       println(f"CONTAMSCALE n=$n%d eval_docs=${contam._1}%d " +
         f"overlap_sum=${contam._2}%d contaminated=${contam._3}%d contam_sec=$cSec%.1f " +
@@ -89,6 +90,7 @@ object ContamScale {
         f"bloom_sec=$bSec%.1f bloom_parity=$parity%b " +
         f"eval_grams=$evalGrams%d bloom_candidates=$candidates%d " +
         f"join_input_kept=${candidates.toDouble / math.max(evalGrams, 1)}%.3f")
+      require(parity, s"Bloom face $bloom != exact path $contam at n=$n")
       (n, contam._1, cSec, rSec)
     }
 
@@ -184,6 +186,7 @@ object ContamScale {
       println(f"CONTAMPROD_A train_docs=${n - plain._1}%d eval_docs=${plain._1}%d " +
         f"contaminated=${plain._3}%d plain_sec=$pSec%.1f bloom_sec=$bSec%.1f " +
         f"parity=${plain == bloom}%b")
+      require(plain == bloom, s"CONTAMPROD_A Bloom face $bloom != plain $plain at n=$n")
     }
 
     // --- scenario B: fixed large reference-gram table, corpus sweep grown
@@ -191,8 +194,8 @@ object ContamScale {
     if (bSizes.isEmpty) return
     val refDocs = sys.env.getOrElse("CONTAMSCALE_REF_DOCS", "250000").toLong
     val ref = synthDocs(spark, refDocs, "r")(i => if (i % 250 == 0) i / 250 else -1L)
-    val refGrams = TrainingOps.gramsOf(spark, ref, 8, hashed = true)
-      .select(col("g")).distinct().localCheckpoint(true)
+    val refGrams = Materialize.truncate(TrainingOps.gramsOf(spark, ref, 8, hashed = true)
+      .select(col("g")).distinct())
     val refGramCount = refGrams.count()
     // shuffle-WRITE bytes are the cluster-scale cost a single-box wall
     // clock hides (local tmpfs shuffle is nearly free here; on a real
@@ -230,22 +233,23 @@ object ContamScale {
             f"plain_sec=$pSec%.1f bloom_sec=$bSec%.1f " +
             f"plain_shuffle_mb=${pw.shuffleWriteB / 1048576}%d " +
             f"bloom_shuffle_mb=${bw.shuffleWriteB / 1048576}%d parity=${plain == bl}%b")
+          require(plain == bl,
+            s"CONTAMPROD_B regime=$regime Bloom face $bl != plain $plain at n=$n")
         } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       }
       // join-input reduction audit: corpus grams admitted by the Bloom
       val bbf = spark.sparkContext.broadcast(bloom)
-      val corpusG = TrainingOps.gramsOf(spark, corpus, 8, hashed = true)
-        .localCheckpoint(true)
+      val corpusG = Materialize.truncate(TrainingOps.gramsOf(spark, corpus, 8, hashed = true))
       val corpusGrams = corpusG.count()
       val admitted = corpusG.as[(Long, Long)]
         .filter(r => bbf.value.mightContainLong(r._2)).count()
       bbf.destroy()
-      corpusG.unpersist()
+      Materialize.release(corpusG)
       corpus.unpersist()
       println(f"CONTAMPROD_B_AUDIT corpus_docs=$n%d corpus_grams=$corpusGrams%d " +
         f"admitted=$admitted%d " +
         f"join_input_kept=${admitted.toDouble / math.max(corpusGrams, 1)}%.4f")
     }
-    refGrams.unpersist()
+    Materialize.release(refGrams)
   }
 }

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.core.TableIO
+import graft.core.{Materialize, TableIO}
 import graft.gen.CorpusWriter
 import graft.job.{CurationJob, ExtractJob}
 import graft.queries.TrainingOps
@@ -80,7 +80,9 @@ object CurationScale {
     // 6-token tail (shingle-set Jaccard ≈ 0.9 at ~100-word docs)
     val texts = CurationJob.docText(ExtractJob.readSpans(spark, s"$base/ex").toDF())
     val (_, s2, c2, r2) = time {
-      val q = CurationJob.qualityGate(texts)
+      // truncated once: the plant unions four branches over `q`, and a lazy
+      // `q` re-ran spans scan, docText and the gate per branch (cpu= ×4)
+      val q = Materialize.truncate(CurationJob.qualityGate(texts))
       val idNum = substring(col("doc_id"), 2, 18).cast("long")
       val exactClones = q.where(pmod(idNum, lit(50)) === 0)
         .select(concat(lit("d9"), substring(col("doc_id"), 2, 18)).as("doc_id"),
@@ -101,6 +103,7 @@ object CurationScale {
             lit(" contamination probe filler "), col("doc_id")).as("text"))
       TableIO.write(q.union(exactClones).union(nearClones).union(contamClones),
         s"$base/texts")
+      Materialize.release(q)
     }
     val textsT = TableIO.read(spark, s"$base/texts")
     val nWithPlant = textsT.count()
