@@ -37,28 +37,6 @@ object TableIO {
     if (pathBased) r.load(table) else r.table(table)
   }
 
-  /** Read only the given partition SUBTREES of a partitioned table,
-    * keeping partition-column discovery via `basePath`. File listing then
-    * touches only those subtrees — for a (tag, pid)-partitioned extraction
-    * output, reading tag=1 skips the (much larger) tag=0 doc-data listing
-    * entirely. Subtrees that don't exist yet (e.g. an empty quarantine) are
-    * silently skipped; returns None if none exist. Path-based formats only
-    * (catalog tables prune partitions from predicates instead). */
-  def readSubtrees(spark: SparkSession, table: String,
-      subtrees: Seq[String]): Option[DataFrame] = {
-    require(pathBased, "readSubtrees is a path-layout optimization")
-    // Existence resolves through the Hadoop FileSystem of the path's scheme
-    // (file:/, hdfs:, s3a:, …) — a plain java.io.File probe silently
-    // returns false for any non-local URI, which would make callers see an
-    // empty read-back and checkpoint written data as docs_in=0.
-    val hconf = spark.sessionState.newHadoopConf()
-    val present = subtrees.map(s => new org.apache.hadoop.fs.Path(s"$table/$s"))
-      .filter(p => p.getFileSystem(hconf).exists(p))
-      .map(_.toString)
-    if (present.isEmpty) None
-    else Some(spark.read.format(format).option("basePath", table).load(present: _*))
-  }
-
   def write(df: DataFrame, table: String, mode: String = "overwrite",
       partitionBy: Seq[String] = Nil): Unit = {
     // zstd (r8, guide §6): measured on the 300k-doc extraction output —
@@ -72,7 +50,12 @@ object TableIO {
     val w0: DataFrameWriter[org.apache.spark.sql.Row] =
       df.write.format(format).mode(mode)
     val w = if (pathBased) w0.option("compression", "zstd") else w0
-    val wp = if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
+    // a partitioned path write overwrites only the partitions it writes;
+    // the option scopes that to this write instead of the session conf
+    val wp =
+      if (partitionBy.isEmpty) w
+      else if (pathBased) w.option("partitionOverwriteMode", "dynamic").partitionBy(partitionBy: _*)
+      else w.partitionBy(partitionBy: _*)
     if (pathBased) wp.save(table) else wp.saveAsTable(table)
   }
 }

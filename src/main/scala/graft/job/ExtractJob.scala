@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Checksums, Doc, LineageRow, Spec, TableIO}
@@ -10,19 +10,29 @@ import graft.kernel.Extractor
   *
   * {{{
   * parquet scan (pruned to doc_id+spans)
-  *   → salted hash repartition on doc_id           [the only shuffle]
+  *   → salted hash repartition on doc_id into `width` tasks [the only shuffle]
   *   → typed mapPartitions kernel (Doc => Doc), per-logical-pid lineage
-  *   → single tagged write: spans (tag=0) + lineage (tag=1) + quarantine
-  *     (tag=2), dynamic-partition-overwritten by (tag, pid)
-  *   → driver: lineage read-back (tiny) → per-pid manifests
+  *     trailer rows (tag=1)
+  *   → observe: collect_list(tag=1 lineage structs), count_if(tag=2)
+  *   → filter tag≠1 → single write: spans (tag=0) + quarantine (tag=2),
+  *     dynamic-partition-overwritten by (tag, pid)
+  *   → driver: observed lineage → per-pid manifests (no read-back)
   * }}}
   *
   * Logical partition `pid = pmod(murmur3Hash(doc_id, Spec.Salt), P)` is a
   * pure function of doc_id, so resume (skip manifested pids) and task retry
-  * are idempotent. Lineage is grouped by *logical* pid inside each task, so
-  * correctness does not depend on the physical placement AQE/exchange picks
-  * — a pid's rows always co-locate in exactly one task, but a task may hold
-  * several pids.
+  * are idempotent. The shuffle width is the smallest divisor of P that is
+  * at least twice the default parallelism (else P): the exchange puts a doc
+  * in `pmod(murmur3Hash(doc_id, Salt), width)` = `pid mod width`, so a task
+  * holds P/width whole pids, every pid is written by exactly one task (one
+  * file per (tag, pid)), and lineage is grouped by *logical* pid inside the
+  * task.
+  *
+  * The lineage trailers never reach storage: one `Dataset.observe` on the
+  * written dataset collects them (at most P structs) with the quarantine
+  * count. The observe node sits in the write's result stage, where Spark
+  * merges each partition's metrics once, so the counts are exact under
+  * task retry; the wave commits with ONE Spark action.
   *
   * Checkpoint granularity: one Spark write action commits atomically, so
   * manifests advance per *wave*. `waveSize = k` processes k pids per wave
@@ -36,8 +46,8 @@ import graft.kernel.Extractor
   */
 object ExtractJob {
 
-  /** Tagged union row for the single-pass write. tag: 0=doc, 1=lineage,
-    * 2=quarantine. */
+  /** Tagged union row out of the kernel. tag: 0=doc, 1=lineage (observed,
+    * never written), 2=quarantine. */
   final case class OutRow(
       tag: Int,
       pid: Int,
@@ -70,6 +80,12 @@ object ExtractJob {
   private def pidCol(p: Int) =
     pmod(hash(col("doc_id"), lit(Spec.Salt)), lit(p)).cast("int").as("pid")
 
+  /** Shuffle width for P logical pids: the smallest divisor of P that is
+    * at least `2 × parallelism`, else P. Dividing P keeps every pid whole
+    * in one task. */
+  def shuffleWidth(p: Int, parallelism: Int): Int =
+    (1 to p).find(d => p % d == 0 && d >= 2 * parallelism).getOrElse(p)
+
   def run(
       spark: SparkSession,
       inputPath: String,
@@ -82,6 +98,7 @@ object ExtractJob {
     import spark.implicits._
 
     val p = numPartitions
+    val width = shuffleWidth(p, spark.sparkContext.defaultParallelism)
     // session Hadoop conf so manifest I/O sees the same scheme config and
     // credentials (s3a keys, defaultFS, …) as the data writes
     val hconf = spark.sessionState.newHadoopConf()
@@ -92,8 +109,6 @@ object ExtractJob {
     val waves: Seq[Seq[Int]] =
       (if (waveSize <= 0) Seq(todo) else todo.grouped(waveSize).toSeq).take(maxWaves)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
     val input = TableIO.read(spark, inputPath)
       .select(col("doc_id"), col("spans"))
       .withColumn("pid", pidCol(p))
@@ -101,19 +116,18 @@ object ExtractJob {
     var docsIn = 0L; var docsOut = 0L; var quarantined = 0L
     val processed = Seq.newBuilder[Int]
 
-    for (wave <- waves if wave.nonEmpty) {
-      val waveSet = wave.toSet
+    for ((wave, w) <- waves.zipWithIndex if wave.nonEmpty) {
       val filtered =
-        if (waveSet.size == p) input
+        if (wave.size == p) input
         else input.where(col("pid").isin(wave.map(Integer.valueOf): _*))
 
       // Repartition on (doc_id, Salt) — HashPartitioning computes
-      // pmod(murmur3(doc_id, Salt), p), i.e. exactly `pid`, so each task
-      // holds exactly one logical pid (validated by JobSpec); repartitioning
-      // on the pid *column* instead would re-hash it and pile several pids
-      // into one task (balls-into-bins skew).
+      // pmod(murmur3(doc_id, Salt), width) = pid mod width (width | P), so
+      // each task holds whole logical pids; repartitioning on the pid
+      // *column* instead would re-hash it and pile pids unevenly onto
+      // tasks (balls-into-bins skew).
       val out: Dataset[OutRow] = filtered
-        .repartition(p, col("doc_id"), lit(Spec.Salt))
+        .repartition(width, col("doc_id"), lit(Spec.Salt))
         .as[(String, Seq[graft.core.Span], Int)]
         .mapPartitions { it =>
           // per-logical-pid accumulation inside the task
@@ -160,34 +174,31 @@ object ExtractJob {
           }
         }
 
-      TableIO.write(out.toDF(), s"$outputPath/data", SaveMode.Overwrite.name(),
+      // Lineage is observed on the write, not stored and read back: the
+      // tag=1 trailers (≤ P) and the quarantine count come out of the same
+      // action that commits the data.
+      val obs = Observation(s"extract:$runId:$w")
+      val written = out
+        .observe(obs,
+          collect_list(when(col("tag") === TagLineage,
+            struct(col("pid"), col("docs_in"), col("docs_out"), col("checksum")))).as("lineage"),
+          count_if(col("tag") === TagQuarantine).as("quarantined"))
+        .where(col("tag") =!= TagLineage)
+        .drop("docs_in", "docs_out", "checksum")
+      TableIO.write(written, s"$outputPath/data", SaveMode.Overwrite.name(),
         partitionBy = Seq("tag", "pid"))
 
-      // read-back (tiny: ≤ P lineage rows + quarantine rows) in ONE scan.
-      // List ONLY the tag=1/tag=2 subtrees: discovering the whole table
-      // would list the 0..P doc-data dirs too — pure driver-side serial
-      // cost repeated every wave (part of the Amdahl tail the benchmark's
-      // traced run reports as `bookkeeping.s`).
-      val back = TableIO.readSubtrees(spark, s"$outputPath/data",
-          Seq(s"tag=$TagLineage", s"tag=$TagQuarantine"))
-        .map(_.where(col("pid").isin(wave.map(Integer.valueOf): _*))
-          .select(col("tag"), col("pid"), col("docs_in"), col("docs_out"), col("checksum"))
-          .as[(Int, Int, Long, Long, String)]
-          .collect())
-        .getOrElse(Array.empty)
-      val lineage = back.collect { case (TagLineage, pid, in, outN, ck) => (pid, in, outN, ck) }
-      val quarCount = back.count(_._1 == TagQuarantine).toLong
-
-      val seen = lineage.map(_._1).toSet
-      lineage.foreach { case (pid, in, outN, ck) =>
-        Checkpoint.write(outputPath, LineageRow(runId, pid, in, outN, ck), hconf)
-        docsIn += in; docsOut += outN
-      }
+      val metrics = obs.get
+      val lineage = metrics("lineage").asInstanceOf[scala.collection.Seq[Row]].map(r =>
+        LineageRow(runId, r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+      val seen = lineage.map(_.partition_id).toSet
+      require(seen.size == lineage.size, s"a pid's lineage came from two tasks (width $width, P $p)")
       // pids with zero input rows still complete (empty manifest)
-      waveSet.diff(seen).foreach { pid =>
-        Checkpoint.write(outputPath, LineageRow(runId, pid, 0, 0, Checksums.render(0L)), hconf)
-      }
-      quarantined += quarCount
+      val empty = wave.filterNot(seen).map(LineageRow(runId, _, 0, 0, Checksums.render(0L)))
+      Checkpoint.write(outputPath, lineage ++ empty, hconf)
+      docsIn += lineage.map(_.docs_in).sum
+      docsOut += lineage.map(_.docs_out).sum
+      quarantined += metrics("quarantined").asInstanceOf[Long]
       processed ++= wave
     }
 
@@ -204,13 +215,10 @@ object ExtractJob {
       .as[Doc]
   }
 
+  /** The lineage table: the committed per-pid manifests. */
   def readLineage(spark: SparkSession, outputPath: String): Dataset[LineageRow] = {
     import spark.implicits._
-    TableIO.read(spark, s"$outputPath/data")
-      .where(col("tag") === TagLineage)
-      .select(col("run_id"), col("pid").cast("int").as("partition_id"),
-        col("docs_in"), col("docs_out"), col("checksum"))
-      .as[LineageRow]
+    spark.createDataset(Checkpoint.read(outputPath, spark.sessionState.newHadoopConf()))
   }
 
   def readQuarantine(spark: SparkSession, outputPath: String) =

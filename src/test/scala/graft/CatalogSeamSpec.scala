@@ -19,7 +19,7 @@ import graft.queries.TrainingOps
   * the exact code an Iceberg deployment routes through; only the provider
   * string differs. Operators must return identical rows whichever branch
   * the storage goes through, and the parquet-only path-layout mechanisms
-  * (`Materialize.onceAt` marker files, `readSubtrees`) must REFUSE the
+  * (`Materialize.onceAt` marker files) must REFUSE the
   * catalog mode loudly instead of mis-addressing a table.
   */
 class CatalogSeamSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -104,10 +104,6 @@ class CatalogSeamSpec extends AnyFunSuite with BeforeAndAfterAll {
           "tag") { fail("build must not run under a catalog format") }
       }
       assert(e1.getMessage.contains("catalog"))
-      val e2 = intercept[IllegalArgumentException] {
-        TableIO.readSubtrees(spark, "sometable", Seq("tag=1"))
-      }
-      assert(e2.getMessage.contains("path-layout"))
     }
   }
 

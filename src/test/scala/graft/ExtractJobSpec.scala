@@ -1,18 +1,26 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
+import graft.core.Checksums
 import graft.gen.{CorpusWriter, SpanGen}
 import graft.golden.GoldenExtractor
 import graft.job.{Checkpoint, ExtractJob}
 
 /** End-to-end job tests (SURVEY.md §5.2 items 2-4): span equality vs golden
   * at scale sf-test, lineage conservation, parallelism invariance, resume. */
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
+
+  // an observation that never completes would block the run forever
+  private implicit val signaler: Signaler = ThreadSignaler
 
   private lazy val spark = SparkSession.builder()
     .master("local[8]")
@@ -122,13 +130,50 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("tag filter on job output is partition pruning, not a data scan") {
-    val plan = ExtractJob.readLineage(spark, s"$base/out")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("tag"),
-      s"tag pruning missing from:\n$plan")
-    // no post-scan Filter on tag: the predicate never reaches row level
-    assert(!plan.split("\n").exists(l => l.trim.startsWith("+- Filter") && l.contains("tag#")),
-      s"tag filtered at row level:\n$plan")
+    Seq(ExtractJob.readSpans(spark, s"$base/out").toDF(),
+        ExtractJob.readQuarantine(spark, s"$base/out")).foreach { ds =>
+      val plan = ds.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters") && plan.contains("tag"),
+        s"tag pruning missing from:\n$plan")
+      // no post-scan Filter on tag: the predicate never reaches row level
+      assert(!plan.split("\n").exists(l => l.trim.startsWith("+- Filter") && l.contains("tag#")),
+        s"tag filtered at row level:\n$plan")
+    }
+  }
+
+  test("shuffle width divides P: P=64 at local[8] runs 16 tasks of 4 whole pids") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val P64 = 64
+    assert(ExtractJob.shuffleWidth(P64, spark.sparkContext.defaultParallelism) == 16)
+    val out = s"$base/outP64"
+    val rep = ExtractJob.run(spark, s"$base/in", out, "r64", P64)
+    assert(rep.docsIn == nDocs && rep.docsOut == nDocs && rep.quarantined == 0)
+    val a = ExtractJob.readSpans(spark, out).collect().map(d => d.doc_id -> d.spans).toMap
+    val b = ExtractJob.readSpans(spark, s"$base/out").collect().map(d => d.doc_id -> d.spans).toMap
+    assert(a == b)
+
+    val lin = ExtractJob.readLineage(spark, out).collect()
+    assert(lin.map(_.partition_id).toSeq == (0 until P64), "exactly one lineage row per pid")
+    assert(lin.map(_.docs_in).sum == nDocs)
+    val golden = spark.read.parquet(s"$base/in")
+      .select(col("doc_id"), pmod(hash(col("doc_id"), lit(graft.core.Spec.Salt)), lit(P64)).cast("int"))
+      .as[(String, Int)].collect()
+      .groupBy(_._2)
+      .map { case (pid, ds) => pid -> Checksums.render(Checksums.fold(ds.iterator.map { case (id, _) =>
+        Checksums.docDigest(GoldenExtractor.extract(SpanGen.genDoc(id))) })) }
+    lin.foreach { r =>
+      assert(r.checksum == golden.getOrElse(r.partition_id, Checksums.render(0L)), s"pid ${r.partition_id}")
+    }
+    // a pid split across two tasks would leave two files in its directory
+    (0 until P64).foreach { pid =>
+      val dir = Paths.get(s"$out/data/tag=${ExtractJob.TagDoc}/pid=$pid")
+      if (Files.exists(dir)) {
+        val files = Files.list(dir)
+        try assert(files.iterator.asScala.count(_.toString.endsWith(".parquet")) == 1, s"pid $pid")
+        finally files.close()
+      }
+    }
   }
 
   test("salted repartition balances docs across pids on the Zipf corpus") {
@@ -147,6 +192,25 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rep = ExtractJob.run(spark, in, s"$base/out_tiny", "rt", numPartitions = 64)
     assert(rep.docsIn == 10 && rep.docsOut == 10)
     assert(Checkpoint.completedPids(s"$base/out_tiny") == (0 until 64).toSet)
+  }
+
+  test("empty waves commit their manifests: 10 docs, P=64, waves of 4, resumed from nothing") {
+    val out = s"$base/out_tiny_waves"
+    val rep = failAfter(Span(300, Seconds)) {
+      ExtractJob.run(spark, s"$base/in_tiny", out, "rw", numPartitions = 64, resume = true, waveSize = 4)
+    }
+    assert(rep.processedPids.sorted == (0 until 64))
+    assert(rep.docsIn == 10 && rep.docsOut == 10 && rep.quarantined == 0)
+    assert(Checkpoint.completedPids(out) == (0 until 64).toSet)
+    val lin = ExtractJob.readLineage(spark, out).collect()
+    assert(lin.length == 64 && lin.map(_.docs_in).sum == 10 && lin.map(_.docs_out).sum == 10)
+  }
+
+  test("a run leaves the session's partitionOverwriteMode as it found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    ExtractJob.run(spark, s"$base/in_tiny", s"$base/out_tiny_conf", "rc", numPartitions = 4)
+    assert(spark.conf.get(key) == before)
   }
 
   test("torn write: missing manifest forces exactly that pid to reprocess") {
@@ -179,6 +243,8 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rep = ExtractJob.run(spark, in2, s"$base/out_poison", "rp", 4)
     assert(rep.docsIn == 2)
     assert(rep.docsOut + rep.quarantined == 2)
+    // the observed count is the quarantine table's
+    assert(rep.quarantined == ExtractJob.readQuarantine(spark, s"$base/out_poison").count())
   }
 
   test("mega-doc guard: oversize docs land in quarantine explicitly, conservation holds") {
@@ -205,6 +271,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = ExtractJob.readQuarantine(spark, s"$base/out_mega").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(q.keySet == Set("mega_spans", "mega_chars"))
+    assert(rep.quarantined == ExtractJob.readQuarantine(spark, s"$base/out_mega").count())
     assert(q.values.forall(_.startsWith("oversize_doc")), q.toString)
     assert(ExtractJob.readSpans(spark, s"$base/out_mega").collect().map(_.doc_id).toSeq == Seq("ok"))
     val lin = ExtractJob.readLineage(spark, s"$base/out_mega").collect()

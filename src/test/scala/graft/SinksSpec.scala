@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -61,20 +60,5 @@ class SinksSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(seedIfEmpty())
     assert(!seedIfEmpty()) // second call skips
     assert(spark.read.parquet(path).count() == 3)
-  }
-
-  test("readSubtrees resolves existence through the Hadoop FileSystem (URI paths work)") {
-    import spark.implicits._
-    val tbl = s"$base/subtrees"
-    Seq((1, 10, "a"), (1, 11, "b"), (2, 10, "c")).toDF("tag", "pid", "v")
-      .write.partitionBy("tag", "pid").mode("overwrite").parquet(tbl)
-    // a file: URI — the java.io.File probe this replaced silently returned
-    // None here, which made ExtractJob checkpoint written data as docs_in=0
-    val uri = s"file:$tbl"
-    val got = graft.core.TableIO.readSubtrees(spark, uri, Seq("tag=1", "tag=2", "tag=9"))
-    assert(got.isDefined, "existing subtrees must be found through a URI path")
-    assert(got.get.count() == 3)
-    assert(got.get.select(col("tag")).distinct().collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2))
-    assert(graft.core.TableIO.readSubtrees(spark, uri, Seq("tag=9")).isEmpty)
   }
 }
