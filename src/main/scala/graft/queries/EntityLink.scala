@@ -189,7 +189,7 @@ object EntityLink {
   /** [[cooccurrence]] over an arbitrary mentions table. */
   def cooccurrenceFrom(mentionsDf: DataFrame, minDocs: Long = 3): DataFrame = {
     // ONE pinned-width exchange on doc_id serves the dedup AND both
-    // self-join sides (r8, the dropHotGroups doctrine): hash(doc_id)
+    // self-join sides (r8, the Blocking.purge doctrine): hash(doc_id)
     // satisfies the dedup's clustered distribution (equal (doc, type,
     // norm) rows share a doc_id), so distinct() runs in place with no
     // second exchange, and the self-join on doc_id is co-partitioned.

@@ -175,56 +175,15 @@ object TrainingOps {
 
   final case class Sig(doc_id: Long, sig: Array[Int])
 
-  /** Rows of `df` whose group (by `keys`) has at most `cap` members. Groups
-    * above the cap are dropped entirely. The size pass is a plain count
-    * aggregation — bounded state per group — so the
-    * probe itself can never blow up on the hot group it is there to catch;
-    * the join back is an equi-join on the same keys (exchange REUSED —
-    * see the in-body note).
-    * The filter is a column predicate (whole-stage codegen; no row lambda);
-    * to tell a capped run from an exact one, call [[hotGroupDropCount]] —
-    * a separate aggregate ACTION, so the count is exact under task retry,
-    * unlike an accumulator incremented inside a transformation. */
-  private[graft] def dropHotGroups(df: DataFrame, keys: Seq[String], cap: Int): DataFrame = {
-    // Round-8 shape (guide §2.3/§2.4): ONE pinned-width exchange of `df`
-    // serves both the probe and the join-back — the r7 form shuffled `df`
-    // twice (a partial-agg'd copy for the probe plus the raw rows for the
-    // join) and recomputed `df`'s upstream (a signature/shingle flatMap
-    // over the whole corpus) once per exchange. ReuseExchange dedupes the
-    // two scans of the repartition; the probe aggregates complete-mode
-    // over the exchanged rows (state still bounded per group). The width
-    // is pinned at the session's shuffle-partition count because the
-    // stage DOWNSTREAM of a cap is usually explosive (posting-list pair
-    // explode, LSH bucket self-join): AQE sizes post-shuffle reads by
-    // this exchange's small INPUT bytes and would serialize the explode
-    // onto one task. shuffle_hash: build on the group-key side instead of
-    // sort-merging (no sort of the row side — guide §3.1).
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val d1 = df.repartition(n, keys.map(col): _*)
-    val kept = d1.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__gsz"))
-      .filter(col("__gsz") <= cap)
-      .drop("__gsz")
-    d1.join(kept.hint("shuffle_hash"), keys)
-  }
-
-  /** Exact number of groups (by `keys`) exceeding `cap` — the audit face of
-    * [[dropHotGroups]]: 0 proves a capped run is identical to the uncapped
-    * one. Runs its own action (count over the same bounded-state count agg),
-    * so the result is retry-exact and never over-counts. */
-  def hotGroupDropCount(df: DataFrame, keys: Seq[String], cap: Int): Long =
-    df.groupBy(keys.map(col): _*).agg(count(lit(1)).as("__gsz"))
-      .filter(col("__gsz") > cap)
-      .count()
-
   /** Exact dropped-bucket audit for a capped MinHash run (the metric the
     * old in-filter accumulator approximated): banded buckets a
     * [[minhashPairsFromSignatures]] run would drop at the given cap. For
-    * the other capped operators compose [[hotGroupDropCount]] with the
+    * the other capped operators compose [[Blocking.purgedGroups]] with the
     * matching keys: simhash — the (chunk, cval) table on Seq("chunk",
     * "cval"); n-gram — the exploded (doc_id, sh) table on Seq("sh"). */
   def minhashDroppedBuckets(spark: SparkSession, docs: DataFrame,
       k: Int = 64, bands: Int = 16, maxBucket: Int = 10000): Long =
-    hotGroupDropCount(bandedSignatures(spark, minhashSignatures(spark, docs, k), k, bands),
+    Blocking.purgedGroups(bandedSignatures(spark, minhashSignatures(spark, docs, k), k, bands),
       Seq("band", "bhash"), maxBucket)
 
   /** Near-dup candidate pairs via MinHash + banded LSH; similarity is the
@@ -298,27 +257,39 @@ object TrainingOps {
     * two for the lazy single-query path). */
   def minhashPairsFromSignatures(spark: SparkSession, sigDf: DataFrame,
       k: Int = 64, bands: Int = 16, minSim: Double = 0.2,
-      maxBucket: Int = 10000): DataFrame = {
-    val banded = bandedSignatures(spark, sigDf, k, bands)
-    val kept =
-      if (maxBucket > 0) dropHotGroups(banded, Seq("band", "bhash"), maxBucket)
-      else banded
+      maxBucket: Int = 10000): DataFrame =
+    bandedPairs(spark, sigDf, None, k, bands, minSim, maxBucket, "doc_a", "doc_b")
 
-    val cands = kept.as("a").join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-
-    val sigT = sigDf.select(col("doc_id").cast("long").as("doc_id"), col("sig"))
-    cands
-      .join(sigT.as("sa"), col("doc_a") === col("sa.doc_id"))
-      .join(sigT.as("sb"), col("doc_b") === col("sb.doc_id"))
-      .select(col("doc_a"), col("doc_b"),
-        (aggregate(zip_with(col("sa.sig"), col("sb.sig"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / k).as("est_jaccard"))
+  /** The banded-candidate body both MinHash forms share: band the
+    * signatures, pair bucket members ([[Blocking.selfPairs]] over `sigA`
+    * alone, or [[Blocking.crossPairs]] of `sigA` against `sigB`), take the
+    * distinct pairs (a pair colliding in m bands is found m times) and
+    * verify each by its estimated Jaccard. */
+  private def bandedPairs(spark: SparkSession, sigA: DataFrame, sigB: Option[DataFrame],
+      k: Int, bands: Int, minSim: Double, maxBucket: Int,
+      nameA: String, nameB: String): DataFrame = {
+    val keys = Seq("band", "bhash")
+    val bandedA = bandedSignatures(spark, sigA, k, bands)
+    val blocks = sigB match {
+      case None => Blocking.selfPairs(bandedA, keys, "doc_id", maxBucket)
+      case Some(b) =>
+        Blocking.crossPairs(bandedA, bandedSignatures(spark, b, k, bands), keys, maxBucket)
+    }
+    def sigs(df: DataFrame) = df.select(col("doc_id").cast("long").as("doc_id"), col("sig"))
+    val sigsA = sigs(sigA)
+    blocks.select(col("a.doc_id").as(nameA), col("b.doc_id").as(nameB)).distinct()
+      .join(sigsA.as("sa"), col(nameA) === col("sa.doc_id"))
+      .join(sigB.map(sigs).getOrElse(sigsA).as("sb"), col(nameB) === col("sb.doc_id"))
+      .select(col(nameA), col(nameB), sigAgreement(col("sa.sig"), col("sb.sig"), k).as("est_jaccard"))
       .where(col("est_jaccard") >= minSim)
   }
+
+  /** Estimated Jaccard of two k-position MinHash signatures: the share of
+    * positions where they agree. The one formulation the batch and stream
+    * faces share, so their `est_jaccard` values are bit-identical. */
+  private[graft] def sigAgreement(a: Column, b: Column, k: Int): Column =
+    (aggregate(zip_with(a, b, (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, v) => acc + v).cast("double") / k)
 
   /** Incremental near-dup detection (T41): candidate pairs between a NEW
     * batch and the existing corpus STORE — the daily-ingest posture every
@@ -333,31 +304,14 @@ object TrainingOps {
     * the bucket join is (new ⋈ store) on (band, bhash) — cross-set, never
     * store×store, so its fan-out is bounded by the batch's bucket
     * occupancy; each side's hot buckets are capped independently (a
-    * mega-bucket on EITHER side explodes the cross product; same
-    * [[dropHotGroups]] audit contract as [[minhashPairs]]). */
+    * mega-bucket on EITHER side explodes the cross product; the
+    * [[Blocking.crossPairs]] form of [[minhashPairs]]' body, same
+    * [[Blocking.purgedGroups]] audit contract). */
   def minhashPairsAgainstStore(spark: SparkSession, newSigs: DataFrame,
       storeSigs: DataFrame, k: Int = 64, bands: Int = 16, minSim: Double = 0.2,
-      maxBucket: Int = 10000): DataFrame = {
-    val bNew = bandedSignatures(spark, newSigs, k, bands)
-    val bOld = bandedSignatures(spark, storeSigs, k, bands)
-    val keptNew =
-      if (maxBucket > 0) dropHotGroups(bNew, Seq("band", "bhash"), maxBucket) else bNew
-    val keptOld =
-      if (maxBucket > 0) dropHotGroups(bOld, Seq("band", "bhash"), maxBucket) else bOld
-    val cands = keptNew.as("a").join(keptOld.as("b"),
-        col("a.band") === col("b.band") && col("a.bhash") === col("b.bhash"))
-      .select(col("a.doc_id").as("doc_new"), col("b.doc_id").as("doc_store"))
-      .distinct()
-    val sigN = newSigs.select(col("doc_id").cast("long").as("doc_id"), col("sig"))
-    val sigO = storeSigs.select(col("doc_id").cast("long").as("doc_id"), col("sig"))
-    cands
-      .join(sigN.as("sa"), col("doc_new") === col("sa.doc_id"))
-      .join(sigO.as("sb"), col("doc_store") === col("sb.doc_id"))
-      .select(col("doc_new"), col("doc_store"),
-        (aggregate(zip_with(col("sa.sig"), col("sb.sig"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / k).as("est_jaccard"))
-      .where(col("est_jaccard") >= minSim)
-  }
+      maxBucket: Int = 10000): DataFrame =
+    bandedPairs(spark, newSigs, Some(storeSigs), k, bands, minSim, maxBucket,
+      "doc_new", "doc_store")
 
   /** Admission face of [[minhashPairsAgainstStore]]: the new-batch docs
     * with NO near-dup in the store — what actually enters the corpus. One
@@ -376,15 +330,15 @@ object TrainingOps {
 
   // --------------------------------------------------------------- simhash
 
-  /** SimHash near-dup pairs: band the 64-bit fingerprint into 4×16-bit
-    * chunks (any pair within hamming distance 3·16 shares ≥1 chunk ⇒ exact
-    * recall for hd ≤ maxHamming when maxHamming < 4·... recall is exact for
-    * hd ≤ 3 with 4 chunks; wider hd trades recall).
+  /** SimHash near-dup pairs: band the 64-bit fingerprint into 4 chunks of
+    * 16 bits. A pair at Hamming distance ≤ 3 differs in at most 3 chunks,
+    * so it shares at least one chunk: recall is exact for
+    * `maxHamming ≤ 3`, and a wider distance trades recall.
     *
     * `maxBucket` caps a (chunk, cval) bucket before the self-join — same
     * mega-cluster-of-identical-docs quadratic exposure and same treatment
-    * as [[minhashPairs]] ([[hotGroupDropCount]] over the chunked table is
-    * the exact audit). Default is a provable
+    * as [[minhashPairs]] ([[Blocking.purgedGroups]] over the chunked table
+    * is the exact audit). Default is a provable
     * no-op below 10k docs sharing a chunk; ≤ 0 disables. */
   def simhashPairs(spark: SparkSession, docs: DataFrame, maxHamming: Int = 16,
       maxBucket: Int = 10000): DataFrame =
@@ -411,20 +365,14 @@ object TrainingOps {
     * [[simhashFingerprints]]). */
   def simhashPairsFromFingerprints(spark: SparkSession, fps: DataFrame,
       maxHamming: Int = 16, maxBucket: Int = 10000): DataFrame = {
-    val chunked0 = fps.select(col("doc_id").cast("long").as("doc_id"), col("fp"),
+    val chunked = fps.select(col("doc_id").cast("long").as("doc_id"), col("fp"),
         explode(array((0 until 4).map { c =>
           struct(lit(c).as("chunk"),
             shiftrightunsigned(col("fp"), c * 16).bitwiseAND(lit(0xffffL)).as("cval"))
         }: _*)).as("ch"))
       .select(col("doc_id"), col("fp"), col("ch.chunk"), col("ch.cval"))
 
-    val chunked =
-      if (maxBucket > 0) dropHotGroups(chunked0, Seq("chunk", "cval"), maxBucket)
-      else chunked0
-
-    chunked.as("a").join(chunked.as("b"),
-        col("a.chunk") === col("b.chunk") && col("a.cval") === col("b.cval") &&
-          col("a.doc_id") < col("b.doc_id"))
+    Blocking.selfPairs(chunked, Seq("chunk", "cval"), "doc_id", maxBucket)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         bit_count(col("a.fp").bitwiseXOR(col("b.fp"))).as("hamming"))
       .distinct()
@@ -535,7 +483,7 @@ object TrainingOps {
 
     // With a cap, prefilter hot shingles by df FIRST (a count aggregation —
     // partial-agg safe, so the probe never materializes the hot posting
-    // list it exists to drop; hotGroupDropCount(shAll, Seq("sh"), maxDf)
+    // list it exists to drop; Blocking.purgedGroups(shAll, Seq("sh"), maxDf)
     // is the exact dropped-shingle audit), THEN build posting
     // lists — collect_list is now provably bounded at maxDf entries — and
     // explode ordered pairs from each list, fan-out bounded at df² per
@@ -555,7 +503,7 @@ object TrainingOps {
         // counts the checkpoint directly instead of exploding the
         // collect_list a second time (the r7 form ran the posting-list
         // aggregation once per consumer).
-        val keptRows = Materialize.truncate(dropHotGroups(shAll, Seq("sh"), maxDf))
+        val keptRows = Materialize.truncate(Blocking.purge(shAll, Seq("sh"), maxDf))
         val nShuf = spark.sessionState.conf.numShufflePartitions
         val kept = keptRows.repartition(nShuf, col("sh"))
           .groupBy(col("sh"))
@@ -572,8 +520,7 @@ object TrainingOps {
         (sz, in)
       } else {
         val sz = shAll.groupBy(col("doc_id")).agg(count("*").as("sz"))
-        val in = shAll.as("a").join(shAll.as("b"),
-            col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
+        val in = Blocking.selfPairs(shAll, Seq("sh"), "doc_id", maxDf)
           .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
           .agg(count("*").as("inter"))
         (sz, in)
@@ -808,23 +755,21 @@ object TrainingOps {
     * mirrored pages), and one bucket of m vectors emits m²/2 candidates.
     * Over-cap buckets are dropped (their members are exact dedup's job);
     * default is a provable no-op below 10k vectors per bucket; ≤ 0
-    * disables. [[hotGroupDropCount]] over the bucketed table is the exact
-    * audit. */
+    * disables. [[Blocking.purgedGroups]] over the bucketed table is the
+    * exact audit. */
   def embedCosinePairsLsh(spark: SparkSession, emb: DataFrame,
       minSim: Double = 0.95, nPlanes: Int = 8, maxBucket: Int = 10000): DataFrame = {
     graft.functions.CosineSimExpr.register(spark)
     val sigged = hyperplaneBuckets(spark, emb, nPlanes)
-    val e0 = emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-      .join(sigged, "vec_id")
-    // eager-truncate before the self-join: both candidate sides reference
-    // the bucketing kernel + cap pipeline, and the typed hyperplane map's
-    // broadcast/closure otherwise rides every task of every consumer
-    // (QueryTime's stage profile: task-deser dominated the three 32-task
-    // stages) — the minhashPairs truncation rationale
+    // eager-truncate the blocking input: the purge probe, its join-back
+    // and both candidate sides reference the bucketing kernel, and the
+    // typed hyperplane map's broadcast/closure otherwise rides every task
+    // of every consumer (QueryTime's stage profile: task-deser dominated
+    // the three 32-task stages) — the minhashPairs truncation rationale
     val e = Materialize.truncate(
-      if (maxBucket > 0) dropHotGroups(e0, Seq("bucket"), maxBucket) else e0)
-    val cands = e.as("a").join(e.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
+      emb.select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+        .join(sigged, "vec_id"))
+    val cands = Blocking.selfPairs(e, Seq("bucket"), "vec_id", maxBucket)
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         // floor-based half-up 4dp (see cosineTopK): keeps the whole
         // similarity family on the engine-agnostic rounding formulation
@@ -1108,31 +1053,25 @@ object TrainingOps {
     * scales with the corpus (the k-means analog of the EmbedScale
     * nPlanes ≳ log₂(n/cap) rule) and `maxCell` hot-cell-caps the one
     * cell a mega-cluster of identical embeddings fills
-    * ([[dropHotGroups]]; exact drop audit via [[hotGroupDropCount]] on
-    * the assignment). Cell assignment is a narrow typed map over the
-    * broadcast centroid array (zero shuffle, the [[annIvfTopK]] shape);
-    * the pair join is a self-equi-join on the cell key; cosine is the
-    * codegen'd [[graft.functions.CosineSimExpr]]. */
+    * ([[Blocking.purge]]; exact drop audit via [[Blocking.purgedGroups]]
+    * on the assignment; `maxCell ≤ 0`, the default, disables the cap).
+    * Cell assignment is a narrow typed map over the broadcast centroid
+    * array (zero shuffle, the [[annIvfTopK]] shape); the pair join is
+    * [[Blocking.selfPairs]] on the cell key; cosine is the codegen'd
+    * [[graft.functions.CosineSimExpr]]. */
   def semanticDupPairs(spark: SparkSession, emb: DataFrame,
       nCells: Int = 16, iters: Int = 3, minSim: Double = 0.4,
-      maxCell: Int = Int.MaxValue): DataFrame = {
+      maxCell: Int = 0): DataFrame = {
     graft.functions.CosineSimExpr.register(spark)
-    val assigned = semanticCells(spark, emb, nCells, iters)
-    val capped = if (maxCell == Int.MaxValue) assigned
-      else dropHotGroups(assigned, Seq("cell"), maxCell)
-    val a = capped.select(col("cell"), col("vec_id").as("vec_a"),
-      col("embedding").as("ea"))
-    val b = capped.select(col("cell"), col("vec_id").as("vec_b"),
-      col("embedding").as("eb"))
-    a.join(b, Seq("cell")).where(col("vec_a") < col("vec_b"))
-      .select(col("cell"), col("vec_a"), col("vec_b"),
-        (floor(cosine(col("ea"), col("eb")) * 1e4 + 0.5) / 1e4).as("sim"))
+    Blocking.selfPairs(semanticCells(spark, emb, nCells, iters), Seq("cell"), "vec_id", maxCell)
+      .select(col("a.cell").as("cell"), col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
+        (floor(cosine(col("a.embedding"), col("b.embedding")) * 1e4 + 0.5) / 1e4).as("sim"))
       .where(col("sim") >= minSim)
   }
 
   /** The semantic-dedup cell assignment (vec_id, embedding, cell) —
     * exposed so a capped [[semanticDupPairs]] run can be audited exactly:
-    * `hotGroupDropCount(semanticCells(...), Seq("cell"), maxCell)` counts
+    * `Blocking.purgedGroups(semanticCells(...), Seq("cell"), maxCell)` counts
     * the cells the cap dropped (0 ⇒ capped == uncapped). */
   def semanticCells(spark: SparkSession, emb: DataFrame,
       nCells: Int = 16, iters: Int = 3): DataFrame = {

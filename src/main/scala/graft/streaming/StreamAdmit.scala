@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.queries.TrainingOps
+import graft.queries.{Blocking, TrainingOps}
 
 /** Streaming face of T41 (`TrainingOps.minhashPairsAgainstStore` /
   * `incrementalAdmit`): a continuous ingest stream is near-dup-checked
@@ -42,18 +42,12 @@ object StreamAdmit {
     * attached for row-local verification; hot buckets capped (same
     * audit contract as the batch face). */
   def bandedStore(spark: SparkSession, storeSigs: DataFrame, k: Int = 64,
-      bands: Int = 16, maxBucket: Int = 10000): DataFrame = {
-    val banded = TrainingOps.bandedSignatures(spark, storeSigs, k, bands)
-    val kept =
-      if (maxBucket > 0) TrainingOps.dropHotGroups(banded, Seq("band", "bhash"), maxBucket)
-      else banded
-    kept.join(
-        storeSigs.select(col("doc_id").cast("long").as("doc_id"),
-          col("sig").as("sig_store")),
+      bands: Int = 16, maxBucket: Int = 10000): DataFrame =
+    Blocking.purge(TrainingOps.bandedSignatures(spark, storeSigs, k, bands),
+        Seq("band", "bhash"), maxBucket)
+      .join(storeSigs.select(col("doc_id").cast("long").as("doc_id"), col("sig").as("sig_store")),
         Seq("doc_id"))
-      .select(col("band"), col("bhash"), col("doc_id").as("doc_store"),
-        col("sig_store"))
-  }
+      .select(col("band"), col("bhash"), col("doc_id").as("doc_store"), col("sig_store"))
 
   /** Stateless streaming matches: `(doc_new, doc_store, est_jaccard)`
     * with per-band multiplicity (see object doc). `stream` must have
@@ -66,9 +60,7 @@ object StreamAdmit {
       .join(sigs.select(col("doc_id"), col("sig").as("sig_new")), Seq("doc_id"))
       .join(store, Seq("band", "bhash"))
       .select(col("doc_id").as("doc_new"), col("doc_store"),
-        (aggregate(zip_with(col("sig_new"), col("sig_store"),
-            (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, v) => acc + v).cast("double") / k).as("est_jaccard"))
+        TrainingOps.sigAgreement(col("sig_new"), col("sig_store"), k).as("est_jaccard"))
       .where(col("est_jaccard") >= minSim)
   }
 

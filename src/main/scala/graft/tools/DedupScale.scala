@@ -67,6 +67,9 @@ object DedupScale {
       val docs = corpus(spark, n).cache()
       docs.count()
       val megaBuckets = TrainingOps.minhashDroppedBuckets(spark, docs, maxBucket = cap)
+      // the mega-cluster (n/20 identical docs) fills one bucket per band
+      if (n / 20 > cap)
+        require(megaBuckets == 16, s"n=$n: $megaBuckets buckets dropped, expected the 16 mega bands")
       val (mhPairs, mhSec) = time(
         TrainingOps.minhashPairs(spark, docs, minSim = 0.5, maxBucket = cap).count())
       val (ngPairs, ngSec) = time(

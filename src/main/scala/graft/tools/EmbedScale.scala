@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import scala.util.hashing.MurmurHash3
 
-import graft.queries.TrainingOps
+import graft.queries.{Blocking, TrainingOps}
 
 /** Embedding-family volume probe — the [[DedupScale]] companion for the
   * round-4 hyperplane-bucket cap (`embedCosinePairsLsh`) and the IVF index
@@ -72,9 +72,12 @@ object EmbedScale {
     val rows = sizes.map { n =>
       val emb = corpus(spark, n).cache()
       emb.count()
-      // exact cap-engagement audit: hyperplane buckets over the cap
-      val droppedBuckets = TrainingOps.hotGroupDropCount(
+      // exact cap-engagement audit: hyperplane buckets over the cap; the
+      // n/20 identical mega-cluster vectors share one bucket
+      val droppedBuckets = Blocking.purgedGroups(
         TrainingOps.hyperplaneBuckets(spark, emb, planes), Seq("bucket"), cap)
+      if (n / 20 > cap)
+        require(droppedBuckets == 1, s"n=$n: $droppedBuckets buckets dropped, expected the mega bucket")
       val (lshPairs, lshSec) = time(
         TrainingOps.embedCosinePairsLsh(spark, emb, minSim = 0.95,
           nPlanes = planes, maxBucket = cap).count())
@@ -109,8 +112,10 @@ object EmbedScale {
       emb.count()
       val k = math.ceil(math.sqrt(n.toDouble)).toInt
       val semCap = 3 * (n / k).toInt
-      val droppedCells = TrainingOps.hotGroupDropCount(
+      val droppedCells = Blocking.purgedGroups(
         TrainingOps.semanticCells(spark, emb, nCells = k), Seq("cell"), semCap)
+      if (n / 20 > semCap)
+        require(droppedCells == 1, s"n=$n: $droppedCells cells dropped, expected the mega cell")
       val (pairs, sec) = time(TrainingOps.semanticDupPairs(spark, emb,
         nCells = k, minSim = 0.95, maxCell = semCap).count())
       emb.unpersist()

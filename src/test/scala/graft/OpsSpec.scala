@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernel.Chunker
 import graft.multimodal.MediaOps
-import graft.queries.{EntityLink, TrainingOps}
+import graft.queries.{Blocking, EntityLink, TrainingOps}
 
 /** Unit + small-cluster tests for the training-data / multimodal / linking
   * operators (the non-extraction half of the surface). */
@@ -106,6 +106,51 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val adm = TrainingOps.incrementalAdmit(spark, batch, storeSigs, minSim = 0.05)
       .collect().map(_.getLong(0)).toSet
     assert(adm == Set(3L))
+  }
+
+  test("incremental near-dup cap: each side's hot bucket is dropped on its own") {
+    // docsDf as above (batch {0, 3}, store {1, 2, 4}) plus three planted
+    // clusters of identical docs, cap 10:
+    //  - X: 50 store docs + 1 batch doc — the store side's bucket is hot;
+    //  - Y: 50 batch docs + 1 store doc — the batch side's bucket is hot;
+    //  - Z: 6 batch docs + 6 store docs — each side is under the cap, so
+    //    its 36 pairs survive although the combined bucket (12) is over it
+    import spark.implicits._
+    def planted(ids: Seq[Long], text: String) = ids.map(i => (i, text)).toDF("doc_id", "text")
+    val (x, y, z) = ("mirror page boilerplate footer x repeated verbatim",
+      "syndicated wire story header y copied everywhere",
+      "shared license block z under the cap")
+    val newIds = Set(0L, 3L)
+    val base = docsDf.select(col("doc_id"), col("text"))
+    val batch = base.where(col("doc_id").isin(newIds.toSeq: _*))
+      .union(planted(Seq(300L), x)).union(planted(200L to 249L, y))
+      .union(planted(500L to 505L, z))
+    val store = base.where(!col("doc_id").isin(newIds.toSeq: _*))
+      .union(planted(100L to 149L, x)).union(planted(Seq(400L), y))
+      .union(planted(600L to 605L, z))
+    val (batchSigs, storeSigs) =
+      (TrainingOps.minhashSignatures(spark, batch), TrainingOps.minhashSignatures(spark, store))
+    def pairs(cap: Int) = TrainingOps.minhashPairsAgainstStore(spark, batchSigs, storeSigs,
+        minSim = 0.05, maxBucket = cap)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val capped = pairs(10)
+    val zPairs = for (a <- 500L to 505L; b <- 600L to 605L) yield (a, b, 1.0)
+    assert(capped.contains((0L, 4L, 1.0)), s"non-hot 0~4 pair must survive: $capped")
+    assert(capped.exists(p => p._1 == 0L && p._2 == 1L))
+    assert(zPairs.toSet.subsetOf(capped), "a bucket under the cap on each side must survive")
+    assert(!capped.exists(p => p._1 == 300L || p._1 >= 200 && p._1 <= 249),
+      s"each side's hot bucket must be dropped: $capped")
+    // uncapped, the two hot buckets pair 300 with X's 50 store docs and Y's
+    // 50 batch docs with 400
+    assert(pairs(0) == capped ++ (100L to 149L).map(b => (300L, b, 1.0)) ++
+      (200L to 249L).map(a => (a, 400L, 1.0)))
+    def bandedPurged(sigs: org.apache.spark.sql.DataFrame) = Blocking.purgedGroups(
+      TrainingOps.bandedSignatures(spark, sigs, 64, 16), Seq("band", "bhash"), 10)
+    assert(bandedPurged(storeSigs) == 16L && bandedPurged(batchSigs) == 16L)
+    val adm = TrainingOps.incrementalAdmit(spark, batch, storeSigs, minSim = 0.05, maxBucket = 10)
+      .collect().map(_.getLong(0)).toSet
+    assert(adm.filter(_ < 100) == Set(3L))
+    assert(adm == Set(3L, 300L) ++ (200L to 249L), "a dropped bucket matches nothing")
   }
 
   test("simhash: identical texts at hamming 0") {
@@ -851,7 +896,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         typedLit(Array(0.5f, 0.5f, 0.5f, 0.5f)).as("embedding"))
     assert(TrainingOps.embedCosinePairsLsh(spark, mega, minSim = 0.9,
       maxBucket = 100).count() == 0)
-    assert(TrainingOps.hotGroupDropCount(
+    assert(Blocking.purgedGroups(
       TrainingOps.hyperplaneBuckets(spark, mega, 8), Seq("bucket"), 100) == 1L)
   }
 
@@ -891,6 +936,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val off = TrainingOps.semanticDupPairs(spark, embDf, nCells = 2, minSim = 0.9)
       .collect().map(_.toSeq).toSet
     assert(capped == off && capped.nonEmpty, "cap above the largest cell must be a no-op")
+    val zero = TrainingOps.semanticDupPairs(spark, embDf, nCells = 2, minSim = 0.9,
+        maxCell = 0).collect().map(_.toSeq).toSet
+    assert(zero == off, "maxCell = 0 means no cap, like every other cap")
 
     // 5k IDENTICAL embeddings collapse into one Lloyd cell → uncapped would
     // enumerate 5k²/2 pairs; the cap drops the cell, and the assignment
@@ -899,7 +947,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(col("id").as("vec_id"),
         typedLit(Array(0.5f, 0.5f, 0.5f, 0.5f)).as("embedding"))
     assert(TrainingOps.semanticDupPairs(spark, mega, minSim = 0.9, maxCell = 100).count() == 0)
-    assert(TrainingOps.hotGroupDropCount(
+    assert(Blocking.purgedGroups(
       TrainingOps.semanticCells(spark, mega), Seq("cell"), 100) == 1L)
   }
 
