@@ -1,6 +1,11 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** The single read/write seam between the engine and table storage
   * (SURVEY.md §7.1 step 2, §7.3).
@@ -37,6 +42,55 @@ object TableIO {
     if (pathBased) r.load(table) else r.table(table)
   }
 
+  /** [[read]] with a known schema. A parquet path is read with it, so
+    * Spark runs no schema-inference job (one single-task job per read
+    * otherwise); instead the driver checks one data file's footer, so an
+    * input missing or mistyping a column still fails before any job, where
+    * a schema-given scan would read a missing column as nulls. Other
+    * formats read as [[read]] does. */
+  def read(spark: SparkSession, table: String, schema: StructType): DataFrame =
+    if (format != "parquet") read(spark, table)
+    else {
+      requireColumns(spark, table, schema)
+      spark.read.format(format).schema(schema).load(table)
+    }
+
+  /** Every field of `schema` is in the footer of `table`'s first data file
+    * (by name, under the session's case rule) with the same type; structs
+    * may carry extra fields, and nullability is not compared. */
+  private def requireColumns(spark: SparkSession, table: String, schema: StructType): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(table)
+    val fs = root.getFileSystem(conf)
+    def firstFile(st: FileStatus): Option[FileStatus] =
+      if (st.isFile) Some(st)
+      else fs.listStatus(st.getPath).sortBy(_.getPath.getName).iterator
+        .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+        .flatMap(firstFile).nextOption()
+    val file = firstFile(fs.getFileStatus(root))
+      .getOrElse(throw new IllegalArgumentException(s"$table holds no data file"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+    val found = try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+      .convert(reader.getFooter.getFileMetaData.getSchema) finally reader.close()
+    val same = spark.sessionState.conf.resolver
+    def covers(have: DataType, want: DataType): Boolean = (have, want) match {
+      case (h: StructType, w: StructType) =>
+        w.forall(f => h.exists(g => same(g.name, f.name) && covers(g.dataType, f.dataType)))
+      case (ArrayType(h, _), ArrayType(w, _)) => covers(h, w)
+      case _ => have == want
+    }
+    schema.foreach { f =>
+      val g = found.find(g => same(g.name, f.name))
+      require(g.exists(g => covers(g.dataType, f.dataType)),
+        s"$table: column ${f.name} must be ${f.dataType.simpleString}, " +
+          s"found ${g.fold("no such column")(_.dataType.simpleString)} in ${file.getPath.getName}")
+    }
+  }
+
+  /** parquet-mr's per-column dictionary switch for the span text of
+    * `array<struct<...text...>>` column `spans` (see [[write]]). */
+  val SpanTextDictionary = "parquet.enable.dictionary#spans.list.element.text"
+
   def write(df: DataFrame, table: String, mode: String = "overwrite",
       partitionBy: Seq[String] = Nil): Unit = {
     // zstd (r8, guide §6): measured on the 300k-doc extraction output —
@@ -47,9 +101,21 @@ object TableIO {
     // Path-based (parquet/orc) only: a catalog format configures
     // compression through table properties, and the seam test's `json`
     // provider stand-in has no zstd codec.
+    //
+    // Parquet also writes the extraction output's span text without a
+    // dictionary: the text is nearly all distinct, so the dictionary
+    // writer builds one and then falls back to plain encoding anyway. In
+    // the benchmark's extraction call (JFR, 4 cores) dictionary writers
+    // took 12.3% of executor samples with it, 5.1% without (the rest is
+    // the low-cardinality columns, which keep theirs), and the output
+    // shrank (`write.output_mib` 6.95 → 6.60). Only that column: the
+    // ROADMAP's global dictionary-off A/B was flat.
     val w0: DataFrameWriter[org.apache.spark.sql.Row] =
       df.write.format(format).mode(mode)
-    val w = if (pathBased) w0.option("compression", "zstd") else w0
+    val w =
+      if (format == "parquet") w0.option("compression", "zstd").option(SpanTextDictionary, "false")
+      else if (pathBased) w0.option("compression", "zstd")
+      else w0
     // a partitioned path write overwrites only the partitions it writes;
     // the option scopes that to this write instead of the session conf
     val wp =

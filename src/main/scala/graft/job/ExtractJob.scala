@@ -1,6 +1,6 @@
 package graft.job
 
-import org.apache.spark.sql.{Dataset, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Checksums, Doc, LineageRow, Spec, TableIO}
@@ -9,7 +9,7 @@ import graft.kernel.Extractor
 /** The end-to-end extraction job (SURVEY.md §4.3 physical plan):
   *
   * {{{
-  * parquet scan (pruned to doc_id+spans)
+  * parquet scan as `Doc` (pruned to doc_id+spans; no inference job)
   *   → salted hash repartition on doc_id into `width` tasks [the only shuffle]
   *   → typed mapPartitions kernel (Doc => Doc), per-logical-pid lineage
   *     trailer rows (tag=1)
@@ -109,7 +109,9 @@ object ExtractJob {
     val waves: Seq[Seq[Int]] =
       (if (waveSize <= 0) Seq(todo) else todo.grouped(waveSize).toSeq).take(maxWaves)
 
-    val input = TableIO.read(spark, inputPath)
+    // read as `Doc`: no schema-inference job per call, and the footer
+    // check keeps a missing or mistyped column loud
+    val input = TableIO.read(spark, inputPath, Encoders.product[Doc].schema)
       .select(col("doc_id"), col("spans"))
       .withColumn("pid", pidCol(p))
 

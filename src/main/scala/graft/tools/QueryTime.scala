@@ -3,19 +3,22 @@ package graft.tools
 /** Time individual `SparkEntry.queries` entries without a whole-bench run,
   * and profile where each one's wall goes:
   * `sbt "runMain graft.tools.QueryTime q1_agg gr_triangles"`.
-  * Env: QT_SF_DIR (default the sf0.1 test tables), QT_REPS (default 2 —
+  * Env: QT_SF_DIR (default the sf0.1 test tables), QT_REPS (default 10 —
   * prints every rep; first rep pays warehouse builds), SPARK_GRAFT_CPUS.
   *
-  * The profile is of the LAST rep, so warehouse builds in rep 1 don't
-  * pollute it: its jobs, stages, tasks, summed task CPU and run time and
-  * shuffle bytes, then per job its wall, stages, tasks and shuffle, and
+  * Walls keep falling until about the eighth rep as the JIT warms (at
+  * sf0.1, `dd_embed_lsh` 1.44 → 0.77 s), so a second rep reads 20-60%
+  * high: the line also prints `warm=`, the minimum of the last half of the
+  * reps, and the profile is of the LAST rep, warm and free of rep 1's
+  * warehouse builds: its jobs, stages, tasks, summed task CPU and run time
+  * and shuffle bytes, then per job its wall, stages, tasks and shuffle, and
   * every stage that ran ≥ 200 ms of task time.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: QueryTime <query name...>")
     val sfDir = sys.env.getOrElse("QT_SF_DIR", "/root/testdata/sf0.1")
-    val reps = sys.env.getOrElse("QT_REPS", "2").toInt
+    val reps = sys.env.getOrElse("QT_REPS", "10").toInt
     Probe.withSpark() { spark =>
       val tally = new Probe.Tally(spark)
       import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
@@ -35,8 +38,9 @@ object QueryTime {
               .getLong(0)
           }
         }
+        val warm = runs.drop(reps / 2).map(_._2).min
         println(f"QUERYTIME $name rows=${runs.head._1} " +
-          runs.map(x => f"${x._2}%.2f").mkString("secs=", ",", ""))
+          runs.map(x => f"${x._2}%.2f").mkString("secs=", ",", "") + f" warm=$warm%.2f")
         val w = runs.last._3
         println(f"QUERYTIME $name profile jobs=${w.jobs.size} stages=${w.stages.size} " +
           f"tasks=${w.tasks} cpu=${w.cpuSec}%.2f run=${w.runSec}%.2f " +

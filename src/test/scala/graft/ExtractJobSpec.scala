@@ -230,6 +230,25 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     assert(after == before) // dynamic pid overwrite replaced, not duplicated
   }
 
+  test("input missing or mistyping doc_id/spans fails before any job, naming the column") {
+    import spark.implicits._
+    val bad = Seq(
+      "spans" -> Seq(("d1", 1)).toDF("doc_id", "n"),
+      "spans" -> Seq(("d1", "not spans")).toDF("doc_id", "spans"),
+      "doc_id" -> Seq(Tuple1(Vector(graft.core.Span("pdf_block", "p=1;y=0;x=0|x", "", 0)))).toDF("spans"),
+      "spans" -> Seq(("d1", Vector(("pdf_block", "x")))).toDF("doc_id", "spans")) // struct lacks fields
+    val tally = new graft.tools.Probe.Tally(spark)
+    bad.zipWithIndex.foreach { case ((column, df), i) =>
+      val in = s"$base/in_bad$i"
+      df.write.mode("overwrite").parquet(in)
+      val (e, _, window) = tally.measure(intercept[IllegalArgumentException](
+        ExtractJob.run(spark, in, s"$base/out_bad$i", s"rb$i", 4)))
+      assert(e.getMessage.contains(s"column $column"), e.getMessage)
+      assert(window.jobs.isEmpty, s"input $i ran ${window.jobs.size} jobs before failing")
+    }
+    spark.sparkContext.removeSparkListener(tally)
+  }
+
   test("quarantine: a poison doc never fails the stage") {
     import spark.implicits._
     // text crafted to blow up nothing in the kernel — so instead poison via

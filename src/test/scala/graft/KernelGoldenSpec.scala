@@ -165,6 +165,23 @@ class KernelGoldenSpec extends AnyFunSuite {
     assert(bad.isEmpty, s"divergent docs: $bad")
   }
 
+  test("word boundaries: a combining mark or a supplementary letter blocks \\b as in the regex") {
+    // each candidate below is one combining acute (U+0301) or one 𝟘
+    // (U+1D7D8, a surrogate pair) away from a match: Java's \b treats a mark
+    // after a base char, and a supplementary letter or digit, as word chars
+    val blocked = Seq("ref DOC-1234567\u0301 end", "case 23-cv-4567\u0301 filed",
+      "in Denver, CO\u0301 today", "on 2023-01-02\u0301 ok", "ref AB-1234-5678\u0301 x",
+      "ref DOC-1234567\ud835\udfd8 end", "x\u0301DOC-1234567 end", "\ud835\udfd8Denver, CO now")
+    // a mark after '_' has no base letter or digit, so the boundary holds
+    val open = "_\u0301DOC-1234567 end"
+    val doc = d((blocked :+ open).zipWithIndex.map { case (t, i) =>
+      Span(InKind.PdfBlock, s"p=1;y=$i;x=0|$t", "", i)
+    }: _*)
+    val k = Extractor.extractDoc(doc)
+    assert(k.spans == GoldenExtractor.extract(doc).spans)
+    assert(k.spans.filter(_.kind.startsWith("entity:")) == Vector(Span("entity:DOCUMENT_ID", "DOC-1234567", "", 9)))
+  }
+
   test("extraction is idempotent on re-wrapped output text spans") {
     // re-extracting a doc whose spans are already clean 'text' spans would drop
     // them (unknown kind) — instead verify determinism: extract twice == once

@@ -235,6 +235,96 @@ object KernelProps extends Properties("kernel") {
       fused.sortBy { case (s, e, d, _) => (s, e, d) } == multi
     }
 
+  // ------------------------------------- char buffers and word boundaries
+
+  /** Code points where Java's `\b` and a per-char word test part ways: a
+    * non-spacing mark (after a letter, a digit, '_', another mark, or a
+    * supplementary letter), supplementary letters/digits and a
+    * supplementary mark, lone surrogates. */
+  private val unicodeFragment: Gen[String] = Gen.oneOf(
+    "\u0301", "\u0300\u0301", "\ud835\udfd8" /* 𝟘 */, "\ud835\udc00" /* 𝐀 */,
+    "\ud834\udd67" /* combining tremolo */, "\ud835", "\udfd8", "_\u0301", "é", "①", "x\u0301")
+
+  private val unicodeText: Gen[String] =
+    Gen.choose(0, 12).flatMap(n => Gen.listOfN(n,
+      Gen.frequency(3 -> detectorFragment, 2 -> unicodeFragment)).map(_.mkString))
+
+  property("boundary helper == regex \\b at every index on NSM and surrogate inputs") =
+    forAll(unicodeText) { t =>
+      val m = java.util.regex.Pattern.compile("\\b").matcher(t)
+        .useTransparentBounds(true).useAnchoringBounds(false)
+      (0 to t.length).forall(i => FastDetectors.isBoundary(t, i) == m.region(i, t.length).lookingAt())
+    }
+
+  property("fast scanners == compiled patterns on NSM and surrogate-pair inputs") =
+    forAll(unicodeText) { t =>
+      val all = FastDetectors.allMatches(t, 0xFFF)
+      graft.core.Spec.EntityPatterns.zipWithIndex.forall { case ((_, re), d) =>
+        all(d) == regexMatches(re, t)
+      }
+    }
+
+  /** Text with arbitrary chars after it, as the kernel's reused buffers
+    * hold: the scanners must read `t(0 until n)` only. */
+  private val bufferedText: Gen[(String, String)] = for {
+    t <- Gen.oneOf(detectorText, unicodeText)
+    junk <- Gen.oneOf(detectorText, Gen.const("DOC-1234567 (b)(5) $1 Mr. Ab Cd"))
+  } yield (t, junk)
+
+  property("buffer triggerMask/allMatches/exemption scan == their String forms") =
+    forAll(bufferedText) { case (t, junk) =>
+      val buf = (t + junk).toCharArray
+      val n = t.length
+      val pairs = FastDetectors.newPairs()
+      FastDetectors.allMatches(buf, n, 0xFFF, pairs)
+      Extractor.triggerMask(buf, n) == Extractor.triggerMask(t) &&
+        pairs.map(_.toSeq).toSeq == FastDetectors.allMatches(t, 0xFFF).toSeq &&
+        Extractor.exemptionScan(buf, n) == Extractor.exemptionScan(t)
+    }
+
+  private val anchorRe = java.util.regex.Pattern.compile("(?s)<a\\b[^>]*>(.*?)</a>")
+
+  private val anchorText: Gen[String] = Gen.choose(0, 14).flatMap(n => Gen.listOfN(n, Gen.oneOf(
+    Gen.oneOf("<a", "<ab", "<a>", "<a href=\"/x\">", "</a>", "</a", "<a\n>", "<a\u0301>",
+      "<a\ud835\udfd8>", "<a_>", "<a->", "<b>", ">", "<", "\n", " ", "  ", "x", "word",
+      "&amp;", "&nbsp;", "&lt;a&gt;", "&", "\u0301", "\ud835\udfd8"),
+    unicodeFragment)).map(_.mkString))
+
+  property("anchor scan == anchorRe inners joined and cleaned, on adversarial html") =
+    forAll(anchorText) { raw =>
+      val m = anchorRe.matcher(raw)
+      val inners = Iterator.continually(m).takeWhile(_.find()).map(_.group(1)).toSeq
+      Extractor.linkChars(raw) == Extractor.cleanHtmlSlow(inners.mkString(" ")).length
+    }
+
+  property("fused cleanHtml == reference formulation on entity-dense html") =
+    forAll(anchorText) { s => Extractor.cleanHtml(s) == Extractor.cleanHtmlSlow(s) }
+
+  property("skipped html_link spans: full scoring never lets one survive") =
+    forAll(Gen.oneOf(anyText.map(t => if (t == null) "" else t), anchorText)) { t =>
+      !Extractor.survives(Extractor.scoreHtml(InKind.HtmlLink, t)) &&
+        Extractor.extractDoc(Doc("l", Vector(Span(InKind.HtmlLink, t, "", 0)))).spans.isEmpty
+    }
+
+  /** Mostly well-formed headers whose fields are empty, padded, at and
+    * past `Int.MaxValue`, or not digits; sometimes a separator is off. */
+  private val pdfHeader: Gen[String] = {
+    val field = Gen.oneOf("", "0", "23", "007", "2147483647", "2147483648", "99999999999", "1a")
+    def sep(ok: String) = Gen.frequency(4 -> Gen.const(ok), 1 -> Gen.oneOf("", ";", "|", ";;"))
+    for {
+      pre <- Gen.frequency(4 -> Gen.const(""), 1 -> Gen.oneOf(" ", "x"))
+      p <- field; y <- field; x <- field
+      s1 <- sep(";"); s2 <- sep(";"); s3 <- sep("|")
+    } yield s"${pre}p=$p${s1}y=$y${s2}x=$x$s3"
+  }
+
+  property("hand-parsed pdf header == Spec.PdfHeader on adversarial headers (kernel == golden)") =
+    forAll(Gen.listOfN(3, pdfHeader)) { hs =>
+      val d = Doc("p", hs.zipWithIndex.map { case (h, i) => Span(InKind.PdfBlock, h + "body", "", i) }.toVector)
+      def run(f: Doc => Doc) = scala.util.Try(f(d).spans).toEither.left.map(e => (e.getClass, e.getMessage))
+      run(Extractor.extractDoc) == run(GoldenExtractor.extract)
+    }
+
   // ---------------------------------------------------------------- chunker
 
   private val para: Gen[String] = Gen.frequency(
