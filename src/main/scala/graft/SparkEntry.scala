@@ -19,8 +19,10 @@ import graft.sources.MailIngest
   */
 object SparkEntry {
 
+  /** A warehouse table, read with its footer schema: no schema-inference
+    * job per read. */
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    TableIO.readParquet(s, s"$dir/$name.parquet")
 
   /** Materialized extraction output for the kernel-fed queries' oracles:
     * the 300-doc generated corpus extracted once, spans EXPLODED to scalar

@@ -1,10 +1,20 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import java.nio.file.Files
+import java.nio.file.attribute.PosixFilePermission
+import java.util.EnumSet
+
+import scala.util.Try
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.io.nativeio.NativeIO
+import org.apache.hadoop.util.Shell
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
 /** The single read/write seam between the engine and table storage
@@ -55,10 +65,12 @@ object TableIO {
       spark.read.format(format).schema(schema).load(table)
     }
 
-  /** Every field of `schema` is in the footer of `table`'s first data file
-    * (by name, under the session's case rule) with the same type; structs
-    * may carry extra fields, and nullability is not compared. */
-  private def requireColumns(spark: SparkSession, table: String, schema: StructType): Unit = {
+  /** The schema Spark would infer for the parquet `table` without
+    * `mergeSchema`, read on the driver from one data file's footer instead
+    * of in a single-task inference job: the footer's Spark row-metadata
+    * schema if it carries one, else its parquet schema converted under the
+    * session's conf. Returns the file's name too, for error messages. */
+  private def footerSchema(spark: SparkSession, table: String): (StructType, String) = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new Path(table)
     val fs = root.getFileSystem(conf)
@@ -70,8 +82,23 @@ object TableIO {
     val file = firstFile(fs.getFileStatus(root))
       .getOrElse(throw new IllegalArgumentException(s"$table holds no data file"))
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
-    val found = try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
-      .convert(reader.getFooter.getFileMetaData.getSchema) finally reader.close()
+    val meta = try reader.getFooter.getFileMetaData finally reader.close()
+    val schema = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => Try(DataType.fromJson(json)).toOption.collect { case st: StructType => st })
+      .getOrElse(new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))
+    (schema, file.getPath.getName)
+  }
+
+  /** A parquet `table` (a file or a directory of them) read with its footer
+    * schema ([[footerSchema]]): no schema-inference job. */
+  def readParquet(spark: SparkSession, table: String): DataFrame =
+    spark.read.schema(footerSchema(spark, table)._1).parquet(table)
+
+  /** Every field of `schema` is in the footer of `table`'s first data file
+    * (by name, under the session's case rule) with the same type; structs
+    * may carry extra fields, and nullability is not compared. */
+  private def requireColumns(spark: SparkSession, table: String, schema: StructType): Unit = {
+    val (found, file) = footerSchema(spark, table)
     val same = spark.sessionState.conf.resolver
     def covers(have: DataType, want: DataType): Boolean = (have, want) match {
       case (h: StructType, w: StructType) =>
@@ -83,8 +110,23 @@ object TableIO {
       val g = found.find(g => same(g.name, f.name))
       require(g.exists(g => covers(g.dataType, f.dataType)),
         s"$table: column ${f.name} must be ${f.dataType.simpleString}, " +
-          s"found ${g.fold("no such column")(_.dataType.simpleString)} in ${file.getPath.getName}")
+          s"found ${g.fold("no such column")(_.dataType.simpleString)} in $file")
     }
+  }
+
+  /** Hadoop conf entries that install [[ForkFreeLocalFileSystem]] for
+    * `file:` paths. The cache flag is part of it: `FileSystem.get` caches
+    * the `file:` FS by scheme, so `fs.file.impl` alone loses to a
+    * `LocalFileSystem` some earlier call already cached. Other schemes are
+    * untouched. */
+  val ForkFreeLocalFs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** `conf` with [[ForkFreeLocalFs]] set, for driver-side writes. */
+  def forkFree(conf: Configuration): Configuration = {
+    ForkFreeLocalFs.foreach { case (k, v) => conf.set(k, v) }
+    conf
   }
 
   /** parquet-mr's per-column dictionary switch for the span text of
@@ -110,11 +152,19 @@ object TableIO {
     // the low-cardinality columns, which keep theirs), and the output
     // shrank (`write.output_mib` 6.95 → 6.60). Only that column: the
     // ROADMAP's global dictionary-off A/B was flat.
+    //
+    // A path write sets its `file:` permissions without forking
+    // ([[ForkFreeLocalFs]]): Spark copies write options into the job's
+    // Hadoop conf, which its tasks and committer both use, so the session
+    // keeps its own FS. Hadoop's own local FS forks a `chmod` (~4 ms) for
+    // each file and directory a write creates: ~186 per benchmark
+    // extraction call.
     val w0: DataFrameWriter[org.apache.spark.sql.Row] =
       df.write.format(format).mode(mode)
     val w =
-      if (format == "parquet") w0.option("compression", "zstd").option(SpanTextDictionary, "false")
-      else if (pathBased) w0.option("compression", "zstd")
+      if (format == "parquet")
+        w0.options(ForkFreeLocalFs).option("compression", "zstd").option(SpanTextDictionary, "false")
+      else if (pathBased) w0.options(ForkFreeLocalFs).option("compression", "zstd")
       else w0
     // a partitioned path write overwrites only the partitions it writes;
     // the option scopes that to this write instead of the session conf
@@ -125,3 +175,30 @@ object TableIO {
     if (pathBased) wp.save(table) else wp.saveAsTable(table)
   }
 }
+
+/** Hadoop's raw local FS, setting a file's mode with
+  * `Files.setPosixFilePermissions` where Hadoop would fork `chmod`: without
+  * native IO (`NativeIO.isAvailable` is false in a stock Spark install)
+  * `RawLocalFileSystem.setPermission` shells out, and every file or
+  * directory a write creates goes through it. Hadoop's own path is kept
+  * wherever it does not fork or NIO cannot say the same: native IO, Windows,
+  * and modes with bits beyond 0777 (sticky, setuid, setgid). */
+class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
+  override def setPermission(p: Path, permission: FsPermission): Unit = {
+    val mode = permission.toShort.toInt
+    if (NativeIO.isAvailable || Shell.WINDOWS || (mode & ~0x1ff) != 0) super.setPermission(p, permission)
+    else {
+      // PosixFilePermission.values is owner rwx, group rwx, others rwx:
+      // value i is mode bit 8 - i
+      val all = PosixFilePermission.values
+      val bits = EnumSet.noneOf(classOf[PosixFilePermission])
+      for (i <- 0 until 9 if (mode & (0x100 >> i)) != 0) bits.add(all(i))
+      Files.setPosixFilePermissions(pathToFile(p).toPath, bits)
+    }
+  }
+}
+
+/** [[ForkFreeRawLocalFileSystem]] under Hadoop's checksummed local FS, so
+  * writes keep their `.crc` side files. Installed per write through
+  * [[TableIO.ForkFreeLocalFs]], never on the session. */
+class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem)

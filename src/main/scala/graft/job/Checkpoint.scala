@@ -30,9 +30,10 @@ import graft.core.LineageRow
 object Checkpoint {
 
   /** Driver threads writing one wave's manifests. Each manifest is a
-    * create + rename (on local FS also a forked `chmod` per created file,
-    * twice with the `.crc`; on an object store a PUT plus a copy), so a
-    * wave's P files are latency-bound, not bandwidth-bound. */
+    * create + rename (on an object store a PUT plus a copy; on local FS a
+    * file and its `.crc`, whose modes `ExtractJob`'s conf sets without
+    * forking `chmod`), so a wave's P files are latency-bound, not
+    * bandwidth-bound. */
   private val WriterThreads = 8
 
   private def dir(outputPath: String): Path = new Path(outputPath, "_manifests")

@@ -10,7 +10,7 @@ import graft.kernel.Extractor
   *
   * {{{
   * parquet scan as `Doc` (pruned to doc_id+spans; no inference job)
-  *   → salted hash repartition on doc_id into `width` tasks [the only shuffle]
+  *   → repartitionById(width, pid mod width) [the only shuffle]
   *   → typed mapPartitions kernel (Doc => Doc), per-logical-pid lineage
   *     trailer rows (tag=1)
   *   → observe: collect_list(tag=1 lineage structs), count_if(tag=2)
@@ -21,18 +21,20 @@ import graft.kernel.Extractor
   *
   * Logical partition `pid = pmod(murmur3Hash(doc_id, Spec.Salt), P)` is a
   * pure function of doc_id, so resume (skip manifested pids) and task retry
-  * are idempotent. The shuffle width is the smallest divisor of P that is
-  * at least twice the default parallelism (else P): the exchange puts a doc
-  * in `pmod(murmur3Hash(doc_id, Salt), width)` = `pid mod width`, so a task
-  * holds P/width whole pids, every pid is written by exactly one task (one
-  * file per (tag, pid)), and lineage is grouped by *logical* pid inside the
-  * task.
+  * are idempotent. The shuffle width is `min(P, defaultParallelism)`, one
+  * wave of tasks on the cluster's slots: the exchange passes `pid mod width`
+  * through as the partition id, so a task holds whole pids, every pid is
+  * written by exactly one task (one file per (tag, pid)), and lineage is
+  * grouped by *logical* pid inside the task.
   *
   * The lineage trailers never reach storage: one `Dataset.observe` on the
   * written dataset collects them (at most P structs) with the quarantine
   * count. The observe node sits in the write's result stage, where Spark
   * merges each partition's metrics once, so the counts are exact under
   * task retry; the wave commits with ONE Spark action.
+  *
+  * The write and the manifests set their local-FS permissions without
+  * forking `chmod` (`TableIO.ForkFreeLocalFs`).
   *
   * Checkpoint granularity: one Spark write action commits atomically, so
   * manifests advance per *wave*. `waveSize = k` processes k pids per wave
@@ -80,11 +82,10 @@ object ExtractJob {
   private def pidCol(p: Int) =
     pmod(hash(col("doc_id"), lit(Spec.Salt)), lit(p)).cast("int").as("pid")
 
-  /** Shuffle width for P logical pids: the smallest divisor of P that is
-    * at least `2 × parallelism`, else P. Dividing P keeps every pid whole
-    * in one task. */
-  def shuffleWidth(p: Int, parallelism: Int): Int =
-    (1 to p).find(d => p % d == 0 && d >= 2 * parallelism).getOrElse(p)
+  /** Shuffle width for P logical pids: one task per slot, at most one per
+    * pid. Pids pass through the exchange whole, so the width need not
+    * divide P. */
+  def shuffleWidth(p: Int, parallelism: Int): Int = math.min(p, parallelism)
 
   def run(
       spark: SparkSession,
@@ -100,8 +101,9 @@ object ExtractJob {
     val p = numPartitions
     val width = shuffleWidth(p, spark.sparkContext.defaultParallelism)
     // session Hadoop conf so manifest I/O sees the same scheme config and
-    // credentials (s3a keys, defaultFS, …) as the data writes
-    val hconf = spark.sessionState.newHadoopConf()
+    // credentials (s3a keys, defaultFS, …) as the data writes, and the same
+    // fork-free local FS
+    val hconf = TableIO.forkFree(spark.sessionState.newHadoopConf())
     val done0 = if (resume) Checkpoint.completedPids(outputPath, hconf) else {
       Checkpoint.clear(outputPath, hconf); Set.empty[Int]
     }
@@ -123,13 +125,12 @@ object ExtractJob {
         if (wave.size == p) input
         else input.where(col("pid").isin(wave.map(Integer.valueOf): _*))
 
-      // Repartition on (doc_id, Salt) — HashPartitioning computes
-      // pmod(murmur3(doc_id, Salt), width) = pid mod width (width | P), so
-      // each task holds whole logical pids; repartitioning on the pid
-      // *column* instead would re-hash it and pile pids unevenly onto
-      // tasks (balls-into-bins skew).
+      // The partition id IS pid mod width, so each task holds whole logical
+      // pids and the tasks' pid counts differ by at most one;
+      // `repartition(width, col("pid"))` would re-hash the pid and pile
+      // pids unevenly onto tasks (balls-into-bins skew).
       val out: Dataset[OutRow] = filtered
-        .repartition(width, col("doc_id"), lit(Spec.Salt))
+        .repartitionById(width, pmod(col("pid"), lit(width)))
         .as[(String, Seq[graft.core.Span], Int)]
         .mapPartitions { it =>
           // per-logical-pid accumulation inside the task

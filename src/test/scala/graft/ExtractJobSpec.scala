@@ -1,16 +1,21 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-import graft.core.Checksums
+import graft.core.{Checksums, ForkFreeLocalFileSystem, TableIO}
 import graft.gen.{CorpusWriter, SpanGen}
 import graft.golden.GoldenExtractor
 import graft.job.{Checkpoint, ExtractJob}
@@ -141,11 +146,11 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     }
   }
 
-  test("shuffle width divides P: P=64 at local[8] runs 16 tasks of 4 whole pids") {
+  test("one write wave: P=64 at local[8] runs 8 tasks of 8 whole pids") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val P64 = 64
-    assert(ExtractJob.shuffleWidth(P64, spark.sparkContext.defaultParallelism) == 16)
+    assert(ExtractJob.shuffleWidth(P64, spark.sparkContext.defaultParallelism) == 8)
     val out = s"$base/outP64"
     val rep = ExtractJob.run(spark, s"$base/in", out, "r64", P64)
     assert(rep.docsIn == nDocs && rep.docsOut == nDocs && rep.quarantined == 0)
@@ -174,6 +179,52 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
         finally files.close()
       }
     }
+  }
+
+  test("an extraction call forks no process: data write, commit and manifests") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    // cache the default `file:` FS first, as any live session has: the
+    // write's own FS must not lose to it
+    FileSystem.get(URI.create("file:///"), spark.sessionState.newHadoopConf())
+    val dump = Files.createTempFile("extract-forks", ".jfr")
+    val rec = new Recording()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      val rep = ExtractJob.run(spark, s"$base/in", s"$base/outForks", "rf", P)
+      rec.stop()
+      rec.dump(dump)
+      assert(rep.docsOut == nDocs)
+    } finally rec.close()
+    val forks = try RecordingFile.readAllEvents(dump).asScala.map(_.getString("command"))
+      finally Files.delete(dump)
+    assert(forks.isEmpty, s"${forks.size} process starts, e.g. ${forks.distinct.take(3)}")
+    assert(Checkpoint.completedPids(s"$base/outForks") == (0 until P).toSet)
+  }
+
+  test("fork-free local FS leaves the modes Hadoop's chmod leaves; sticky modes fall back") {
+    val conf = new Configuration()
+    val hadoop = FileSystem.get(URI.create("file:///"), conf) // the cached default
+    val nio = FileSystem.get(URI.create("file:///"), TableIO.forkFree(new Configuration()))
+    assert(nio.isInstanceOf[ForkFreeLocalFileSystem], nio.getClass.getName)
+    val root = Files.createTempDirectory("forkfreemodes")
+    def applied(fs: FileSystem, name: String, dir: Boolean, perm: FsPermission) = {
+      val p = root.resolve(name)
+      if (dir) Files.createDirectory(p) else Files.createFile(p)
+      Files.setPosixFilePermissions(p, PosixFilePermissions.fromString("---------"))
+      fs.setPermission(new Path(p.toUri), perm)
+      p
+    }
+    for (mode <- Seq("644", "755", "600", "700", "640"); dir <- Seq(false, true)) {
+      val perm = new FsPermission(Integer.parseInt(mode, 8).toShort)
+      val Seq(want, got) = Seq(hadoop -> "shell", nio -> "nio").map { case (fs, tag) =>
+        Files.getPosixFilePermissions(applied(fs, s"$tag-$mode-$dir", dir, perm))
+      }
+      assert(got == want && PosixFilePermissions.toString(got) == perm.toString, s"mode $mode dir=$dir")
+    }
+    val sticky = applied(nio, "sticky", dir = true, new FsPermission(Integer.parseInt("1777", 8).toShort))
+    assert((Files.getAttribute(sticky, "unix:mode").asInstanceOf[Int] & 0xfff) == Integer.parseInt("1777", 8))
   }
 
   test("salted repartition balances docs across pids on the Zipf corpus") {
