@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -65,6 +65,14 @@ object SparkEntry {
   private lazy val goldenFingerprint: String =
     extractorFingerprint(graft.golden.GoldenExtractor.extract)
 
+  /** The 300-doc generated corpus run through `extract`: the kernel faces'
+    * input and the source of both span stores. */
+  private def genCorpus(s: SparkSession,
+      extract: graft.core.Doc => graft.core.Doc): Dataset[graft.core.Doc] = {
+    import s.implicits._
+    s.range(0L, 300L).map(i => extract(SpanGen.genDoc(SpanGen.docId(i))))
+  }
+
   /** Shared dump shape for the two extractor stores: `extract` over the
     * 300-doc generated corpus, spans exploded to scalar (doc_id, seq,
     * kind, text, media_ref, offset) rows — ALL span fields, so row-set
@@ -74,7 +82,6 @@ object SparkEntry {
     * unaffected by the extra columns). */
   private def spanScalarStore(s: SparkSession, name: String, tag: String,
       extract: graft.core.Doc => graft.core.Doc): String = {
-    import s.implicits._
     // repartition(1): the 300-doc scalar dump is ~160 KB — without it the
     // 32-way extraction parallelism writes 32 tiny files and every store
     // consumer (the linking/graph/ex_* queries) pays a 32-task scan
@@ -82,7 +89,7 @@ object SparkEntry {
     // of the single-writer exchange. Tag carries the layout so stores
     // written by earlier rounds rebuild.
     Materialize.store(s, name, s"$tag:c1") {
-      s.range(0L, 300L).map(i => extract(SpanGen.genDoc(SpanGen.docId(i)))).toDF()
+      genCorpus(s, extract).toDF()
         .select(col("doc_id"), posexplode_outer(col("spans")).as(Seq("seq", "s")))
         .select(col("doc_id"), col("seq").cast("long").as("seq"),
           col("s.kind").as("kind"), col("s.text").as("text"),
@@ -122,7 +129,7 @@ object SparkEntry {
     * per-kind span histogram. Driver smoke-checks rows>0 on sf0.001. */
   def entry(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    spark.range(0L, 300L).map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i))))
+    genCorpus(spark, Extractor.extractDoc)
       .select(explode($"spans").as("s"))
       .groupBy($"s.kind".as("kind")).agg(count("*").as("n"))
       .orderBy($"kind")
@@ -780,8 +787,7 @@ object SparkEntry {
     "f6_chunker" -> ((s, _) => {
       extractSpansStore(s)
       import s.implicits._
-      s.range(0L, 300L).map { i =>
-        val doc = Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i)))
+      genCorpus(s, Extractor.extractDoc).map { doc =>
         val text = doc.spans.filter(_.kind == "text").map(_.text).mkString("\n\n")
         val chunks = Chunker.chunk(text, maxChars = 400)
         (doc.doc_id, chunks.length.toLong,
@@ -957,7 +963,7 @@ object SparkEntry {
     // support n_docs — strength-aware centrality, bit-identical to
     // gr_pagerank when all weights are equal (OpsSpec pins that)
     "gr_pagerank_weighted" -> ((s, _) =>
-      GraphOps.pageRankWeighted(s, coMentionWeightedEdges(s))
+      GraphOps.pageRankWeighted(s, coMentionEdges(s))
         .orderBy(col("rank_units").desc, col("node"))),
     // personalized PageRank (T49): teleport mass restricted to PERSON
     // nodes — entity importance as seen from the corpus's people
@@ -1004,9 +1010,7 @@ object SparkEntry {
     // content hash — the whole funnel algebra, hash-compared
     "cu_curation_funnel" -> ((s, _) => {
       extractSpansStore(s)
-      import s.implicits._
-      val spans = s.range(0L, 300L)
-        .map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i)))).toDF()
+      val spans = genCorpus(s, Extractor.extractDoc).toDF()
       graft.job.CurationJob.funnelCounts(graft.job.CurationJob.docText(spans))
     }),
 
@@ -1016,9 +1020,7 @@ object SparkEntry {
     // Oracle replays the same string_agg reassembly + RE2-portable regexes.
     "ex_pii_scrub" -> ((s, _) => {
       extractSpansStore(s)
-      import s.implicits._
-      val spans = s.range(0L, 300L)
-        .map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i)))).toDF()
+      val spans = genCorpus(s, Extractor.extractDoc).toDF()
       TrainingOps.piiScrub(graft.job.CurationJob.docText(spans)).orderBy(col("doc_id"))
     }),
 
@@ -1029,15 +1031,13 @@ object SparkEntry {
     "ex_kind_histogram" -> ((s, _) => { extractSpansStore(s); entry(s) }),
     "ex_spans_per_doc" -> ((s, _) => {
       extractSpansStore(s)
-      import s.implicits._
-      s.range(0L, 300L).map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i))))
+      genCorpus(s, Extractor.extractDoc)
         .select(col("doc_id"), size(col("spans")).cast("long").as("n_spans"))
         .orderBy(col("doc_id")).limit(100)
     }),
     "ex_entity_top" -> ((s, _) => {
       extractSpansStore(s)
-      import s.implicits._
-      s.range(0L, 300L).map(i => Extractor.extractDoc(SpanGen.genDoc(SpanGen.docId(i))))
+      genCorpus(s, Extractor.extractDoc)
         .select(explode(col("spans")).as("s"))
         .where(col("s.kind").startsWith("entity:"))
         .groupBy(col("s.kind").as("kind")).agg(count(lit(1)).as("n"))
@@ -1050,22 +1050,12 @@ object SparkEntry {
   /** Shared co-mention edge build for the graph queries: canonical pairs
     * with support >= 2 documents (exactly [[EntityLink.cooccurrenceFrom]]'s
     * `co_mentioned` threshold — the single-doc co-mention noise floor is
-    * 110× the edge volume on this store), symmetrized. The canonical src
-    * string sorts below dst (':' sorts below every entity-type char, so
-    * tuple order and concatenated-string order agree). */
+    * 110× the edge volume on this store), symmetrized, carrying the
+    * support `n_docs` as the edge weight `w` (T53's input; the other graph
+    * operators read only src and dst). The canonical src string sorts
+    * below dst (':' sorts below every entity-type char, so tuple order and
+    * concatenated-string order agree). */
   private def coMentionEdges(s: SparkSession): DataFrame = {
-    val co = EntityLink.cooccurrenceFrom(
-      EntityLink.mentionsFromStore(
-        graft.core.TableIO.read(s, extractSpansStore(s))), minDocs = 2)
-    val p = co.select(
-      concat_ws(":", col("type_a"), col("norm_a")).as("src"),
-      concat_ws(":", col("type_b"), col("norm_b")).as("dst"))
-    p.union(p.select(col("dst").as("src"), col("src").as("dst")))
-  }
-
-  /** [[coMentionEdges]] carrying the co-mention support as the edge
-    * weight (T53's input). */
-  private def coMentionWeightedEdges(s: SparkSession): DataFrame = {
     val co = EntityLink.cooccurrenceFrom(
       EntityLink.mentionsFromStore(
         graft.core.TableIO.read(s, extractSpansStore(s))), minDocs = 2)

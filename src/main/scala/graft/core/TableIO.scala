@@ -13,7 +13,7 @@ import org.apache.hadoop.io.nativeio.NativeIO
 import org.apache.hadoop.util.Shell
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, DataFrameReader, DataFrameWriter, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructType}
 
@@ -47,10 +47,13 @@ object TableIO {
     * path-layout mechanism and must refuse catalog formats loudly. */
   def pathBased: Boolean = format == "parquet" || format == "orc"
 
-  def read(spark: SparkSession, table: String): DataFrame = {
-    val r: DataFrameReader = spark.read.format(format)
-    if (pathBased) r.load(table) else r.table(table)
-  }
+  /** `table` as a DataFrame. A parquet table is read with its footer
+    * schema ([[readParquet]]), so Spark runs no schema-inference job;
+    * partition columns are still discovered from the directory names. */
+  def read(spark: SparkSession, table: String): DataFrame =
+    if (format == "parquet") readParquet(spark, table)
+    else if (pathBased) spark.read.format(format).load(table)
+    else spark.read.format(format).table(table)
 
   /** [[read]] with a known schema. A parquet path is read with it, so
     * Spark runs no schema-inference job (one single-task job per read

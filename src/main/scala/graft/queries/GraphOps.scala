@@ -38,11 +38,15 @@ object GraphOps {
     * relative); no dangling-mass term because co-occurrence edges are
     * symmetrized, so every node has out-degree ≥ 1.
     *
-    * Scale shape: per round, ONE fan-out-1 join of the node-sized rank
-    * table against out-degrees (narrow floor projection), ONE edge join +
-    * map-side-combinable sum shuffled on dst, ONE left join back to the
-    * node table. Edges and degrees are computed once and persisted; the
-    * rank lineage is truncated every `cpEvery` rounds (`Materialize.truncate`
+    * This is [[pageRankWeighted]] with every edge weight 1: W(u) is then
+    * the out-degree, and ⌊r·1/W(u)⌋ is the same double arithmetic as the
+    * uniform share ⌊r/od⌋.
+    *
+    * Scale shape: per round, ONE edge join against the node-sized rank
+    * table (per-edge floor projection) + map-side-combinable sum shuffled
+    * on dst, ONE left join back to the node table. Edges, with their
+    * source's out-weight, are computed once and persisted; the rank
+    * lineage is truncated every `cpEvery` rounds (`Materialize.truncate`
     * — the [[TrainingOps.connectedComponents]] plan-size doctrine), so the
     * plan stays bounded at any iteration count.
     *
@@ -52,7 +56,8 @@ object GraphOps {
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iters: Int = 4,
       cpEvery: Int = 8): DataFrame =
-    run(spark, edges, iters, cpEvery, seedPred = None)
+    run(spark, edges.select(col("src"), col("dst"), lit(1L).as("w")), iters, cpEvery,
+      seedPred = None)
 
   /** Personalized PageRank: the teleport mass lands ONLY on the seed
     * nodes selected by `seedPred` (a predicate over the `node` column),
@@ -67,7 +72,8 @@ object GraphOps {
     * ranking wants. Requires at least one seed node in the graph. */
   def pageRankSeeded(spark: SparkSession, edges: DataFrame, seedPred: Column,
       iters: Int = 4, cpEvery: Int = 8): DataFrame =
-    run(spark, edges, iters, cpEvery, seedPred = Some(seedPred))
+    run(spark, edges.select(col("src"), col("dst"), lit(1L).as("w")), iters, cpEvery,
+      seedPred = Some(seedPred))
 
   /** Weight-proportional PageRank: each node's out-mass splits across
     * its out-edges ∝ integer edge weight (here: co-mention support
@@ -75,61 +81,18 @@ object GraphOps {
     * W(u) = Σ out-weights. Same exact-integer doctrine as [[pageRank]]:
     * r·w ≤ 1e9·maxW stays far below 2^53 (products exact), the quotient's
     * distance from an integer is ≥ 1/W(u) ≫ one ulp of a ≤ 1e9-scale
-    * result, so both engines land on identical longs; with all weights
-    * equal the result is BIT-IDENTICAL to [[pageRank]] (pinned in
-    * OpsSpec). Per round: one fan-out-1 join of ranks onto the weighted
-    * edge list (shares are per-EDGE now), one map-side-combinable sum on
-    * dst, one node left join — same shuffle count as the uniform
-    * operator.
+    * result, so both engines land on identical longs. [[pageRank]] and
+    * [[pageRankSeeded]] run this same loop with unit weights, so equal
+    * weights are BIT-IDENTICAL to [[pageRank]] by construction (OpsSpec
+    * pins it). Per round: one fan-out-1 join of ranks onto the weighted
+    * edge list (shares are per-EDGE), one map-side-combinable sum on dst,
+    * one node left join.
     *
     * `edges` must be DISTINCT symmetric (src, dst, w) rows with integer
     * w ≥ 1. */
   def pageRankWeighted(spark: SparkSession, edges: DataFrame, iters: Int = 4,
-      cpEvery: Int = 8): DataFrame = {
-    require(iters >= 0, s"iters must be >= 0, got $iters")
-    require(cpEvery > 0, s"cpEvery must be > 0, got $cpEvery")
-    AdaptiveShuffle.pinned(spark) { pin =>
-      val eRaw = edges.select(col("src").cast("string").as("src"),
-        col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
-        .persist()
-      val nEdges = eRaw.count()
-      val p = AdaptiveShuffle.parts(nEdges)
-      pin(p)
-      // W(u) = Σ out-weights rides EVERY edge row as a constant across
-      // rounds — join it ONCE here instead of once per round (the r7 form
-      // re-joined wtot inside the loop: one extra node-sized join and its
-      // sort, × iters). `ew` is hash-partitioned on the per-round join key
-      // src, so the per-round rank join never re-shuffles the edge table.
-      val e = eRaw.repartition(p, col("src")).persist()
-      // distinct() under the pinned conf already exchanges hash(node, p)
-      val nodes = e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct().persist()
-      val n = nodes.count()
-      eRaw.unpersist() // e and nodes are materialized now — drop the raw copy
-      if (n == 0) {
-        e.unpersist(); nodes.unpersist()
-        nodes.select(col("node"), lit(0L).as("rank_units"))
-      } else {
-        val wtot = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
-        val ew = e.join(wtot, "src")
-          .select(col("src"), col("dst"), col("w"), col("wt")).persist()
-        val base = math.floor(1.5e8 / n).toLong
-        val out = iterate(nodes.select(col("node"),
-            lit(math.floor(1e9 / n).toLong).as("r")), iters, cpEvery) { ranks =>
-          val contrib = ew
-            .join(ranks.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
-            .select(col("dst"),
-              floor(col("r").cast("double") * col("w") / col("wt")).as("s"))
-            .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
-          nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-            .select(col("node"), (lit(base) +
-              floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
-        }
-        e.unpersist(); nodes.unpersist(); ew.unpersist()
-        out
-      }
-    }
-  }
+      cpEvery: Int = 8): DataFrame =
+    run(spark, edges, iters, cpEvery, seedPred = None)
 
   /** Per-node triangle counts + degree via the degree-ordered
     * node-iterator (Suri & Vassilvitskii 2011, "Counting Triangles and the
@@ -189,21 +152,25 @@ object GraphOps {
     }
   }
 
+  /** The one rank loop behind all three faces: `edges` are (src, dst, w)
+    * rows, each node's out-mass splits ∝ w, and `seedPred` (None = every
+    * node) gates the start and teleport mass. */
   private def run(spark: SparkSession, edges: DataFrame, iters: Int,
       cpEvery: Int, seedPred: Option[Column]): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(cpEvery > 0, s"cpEvery must be > 0, got $cpEvery")
     AdaptiveShuffle.pinned(spark) { pin =>
       val eRaw = edges.select(col("src").cast("string").as("src"),
-        col("dst").cast("string").as("dst")).persist()
+        col("dst").cast("string").as("dst"), col("w").cast("long").as("w"))
+        .persist()
       val nEdges = eRaw.count() // materializes the edge build once; sizes p
       val p = AdaptiveShuffle.parts(nEdges)
       pin(p)
       // Edge table hash-partitioned on src ONCE: the per-round rank join
-      // reuses this partitioning every round, so the only per-round
-      // exchange left is the fundamental contribution reduce on dst
-      // (guide §2.4 "two operations keyed the same way share one
-      // exchange"; the r7 form re-exchanged edges every round).
+      // reuses this partitioning every round (`ew` below inherits it), so
+      // the only per-round exchange left is the fundamental contribution
+      // reduce on dst (guide §2.4 "two operations keyed the same way share
+      // one exchange"; the r7 form re-exchanged edges every round).
       val e = eRaw.repartition(p, col("src")).persist()
       // distinct() under the pinned conf already exchanges hash(node, p) —
       // an explicit repartition would just add a second exchange
@@ -217,10 +184,13 @@ object GraphOps {
         require(seedPred.isEmpty, "pageRankSeeded: no seed node is in the graph")
         nodes.select(col("node"), lit(0L).as("rank_units"))
       } else {
-        // deg inherits e's (src, p) partitioning — a complete per-partition
-        // aggregation, zero exchange (all out-edges of a node co-reside)
-        val deg = e.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("od")).persist()
+        // W(u) = Σ out-weights rides EVERY edge row as a constant across
+        // rounds — joined ONCE here, not once per round. wtot inherits e's
+        // (src, p) partitioning — a complete per-partition aggregation, zero
+        // exchange (all out-edges of a node co-reside).
+        val wtot = e.groupBy(col("src")).agg(sum(col("w")).as("wt"))
+        val ew = e.join(wtot, "src")
+          .select(col("src"), col("dst"), col("w"), col("wt")).persist()
         // ⌊SCALE/|S|⌋ start mass and ⌊(1-d)·SCALE/|S|⌋ per-round teleport,
         // landing on seeds only (uniform PageRank: every node is a seed)
         val r0 = math.floor(1e9 / n).toLong
@@ -230,16 +200,16 @@ object GraphOps {
           // shuffle_hash hints: build the hash map on the node-sized side
           // and STREAM the edge side — a sort-merge join would re-sort the
           // edge partitions every round (guide §3.1)
-          val shares = ranks.join(deg.hint("shuffle_hash"), "node")
-            .select(col("node"), floor(col("r").cast("double") / col("od")).as("s"))
-          val contrib = e.join(shares.withColumnRenamed("node", "src")
-              .hint("shuffle_hash"), "src")
+          val contrib = ew
+            .join(ranks.withColumnRenamed("node", "src").hint("shuffle_hash"), "src")
+            .select(col("dst"),
+              floor(col("r").cast("double") * col("w") / col("wt")).as("s"))
             .groupBy(col("dst").as("node")).agg(sum(col("s")).as("c"))
           nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
             .select(col("node"), (when(isSeed, lit(base)).otherwise(lit(0L)) +
               floor(coalesce(col("c"), lit(0L)).cast("double") * 85.0 / 100.0)).as("r"))
         }
-        e.unpersist(); nodes.unpersist(); deg.unpersist()
+        e.unpersist(); nodes.unpersist(); ew.unpersist()
         out
       }
     }

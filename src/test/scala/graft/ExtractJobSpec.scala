@@ -146,6 +146,23 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     }
   }
 
+  test("reading a parquet store or the job output runs no schema-inference job") {
+    import spark.implicits._
+    val store = s"$base/store"
+    TableIO.write(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), store)
+    spark.createDataset((0L until 20L).map(i => SpanGen.genDoc(SpanGen.docId(i))))
+      .write.mode("overwrite").parquet(s"$base/in_read")
+    ExtractJob.run(spark, s"$base/in_read", s"$base/out_read", "rr", 4)
+    val tally = new graft.tools.Probe.Tally(spark)
+    val (Seq(st, out), _, window) = tally.measure(
+      Seq(TableIO.read(spark, store), TableIO.read(spark, s"$base/out_read/data")))
+    spark.sparkContext.removeSparkListener(tally)
+    assert(window.jobs.isEmpty, s"the reads ran ${window.jobs.size} jobs")
+    assert(st.columns.toSeq == Seq("id", "s") && st.count() == 2L)
+    // the footer holds no partition column; the directory names still give them
+    assert(out.columns.toSeq.takeRight(2) == Seq("tag", "pid"), out.columns.mkString(","))
+  }
+
   test("one write wave: P=64 at local[8] runs 8 tasks of 8 whole pids") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

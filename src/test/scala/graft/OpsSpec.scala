@@ -1503,6 +1503,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = graft.queries.GraphOps.pageRank(spark, path.toDF("src", "dst"), iters = 4)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == refPageRank(path, 4))
+    // the same edges with a weight column (the gr_* queries' input): ignored
+    val weighted = path.zipWithIndex.map { case ((a, b), i) => (a, b, i + 1L) }
+    assert(graft.queries.GraphOps.pageRank(spark, weighted.toDF("src", "dst", "w"), iters = 4)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap == got)
     assert(got("b") > got("a") && got("a") == got("c")) // the hub wins, leaves tie
     // 3-clique: regular graph → uniform ranks every round
     val k3 = for { x <- Seq("x", "y", "z"); y <- Seq("x", "y", "z") if x != y } yield (x, y)
