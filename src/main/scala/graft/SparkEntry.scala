@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Materialize, TableIO}
+import graft.functions.Text
 import graft.gen.SpanGen
 import graft.kernel.{Chunker, Extractor}
 import graft.multimodal.MediaOps
@@ -144,10 +145,7 @@ object SparkEntry {
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
-        // quantized ratio (integer-valued sum / count) CAN land exactly on a
-        // .xxxx5 boundary where Spark round() (shortest-decimal) and DuckDB
-        // round() (binary) disagree — floor half-up is bit-identical in both
-        (floor(avg(col("l_quantity")) * 1e4 + 0.5) / 1e4).as("avg_qty"),
+        Text.halfUp(avg(col("l_quantity")), 4).as("avg_qty"),
         count(lit(1)).as("n_rows"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))),
 
@@ -327,10 +325,7 @@ object SparkEntry {
     // A4: AVG with null guard (campaign.py:233-241)
     "a4_avg_value" -> ((s, d) => t(s, d, "events")
       .groupBy(col("event_type"))
-      // value is cents-quantized (w3 relies on value*100 being integral),
-      // so the avg sits on a 1/(100n) grid — same .xxxx5-boundary class as
-      // q1_agg's avg_qty → floor half-up on both sides
-      .agg((floor(avg(coalesce(col("value"), lit(0.0))) * 1e4 + 0.5) / 1e4).as("avg_value"),
+      .agg(Text.halfUp(avg(coalesce(col("value"), lit(0.0))), 4).as("avg_value"),
         count(lit(1)).as("n"))
       .orderBy(col("event_type"))),
 
@@ -345,9 +340,8 @@ object SparkEntry {
     "a6_completion_ratio" -> ((s, d) => t(s, d, "orders")
       .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
-      // count ratio = quantized → floor half-up (see q1_agg avg_qty note)
-      .agg((floor(sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).cast("double") /
-        count(lit(1)) * 1e4 + 0.5) / 1e4).as("completion_rate"), count(lit(1)).as("n"))
+      .agg(Text.halfUp(sum(when(col("o_orderstatus") === "F", 1).otherwise(0)).cast("double") /
+        count(lit(1)), 4).as("completion_rate"), count(lit(1)).as("n"))
       .orderBy(col("c_mktsegment"))),
 
     // A8: regex pattern-count aggregate (ocr.py:266-274 shape)
@@ -429,12 +423,9 @@ object SparkEntry {
       // not reproducible across engines
       val cents = round(col("value") * 100, 0).cast("long")
       val q = sum(cents).over(w).cast("double") / (count(lit(1)).over(w) * 100)
-      // floor-based half-up rounding: identical IEEE ops in both engines
-      // (Spark's round() rounds the shortest-decimal repr, DuckDB the binary
-      // value — they disagree on exact .xx5 quotients)
       t(s, d, "events")
         .select(col("user_id"), col("event_id"),
-          (floor(q * 100 + 0.5) / 100).as("run_avg"))
+          Text.halfUp(q, 2).as("run_avg"))
         .orderBy(col("user_id"), col("event_id"))
     }),
 
@@ -536,9 +527,7 @@ object SparkEntry {
     // F15: JSON extraction (config.py:155-165 shape)
     "f15_json_extract" -> ((s, d) => t(s, d, "events")
       .groupBy(col("event_type"))
-      // avg of integers = quantized ratio → floor half-up
-      .agg((floor(avg(get_json_object(col("props"), "$.k").cast("long")) * 1e4 + 0.5) / 1e4)
-        .as("avg_k"))
+      .agg(Text.halfUp(avg(get_json_object(col("props"), "$.k").cast("long")), 4).as("avg_k"))
       .orderBy(col("event_type"))),
 
     // ------------------------------------------------ SQL surface (spark.sql)

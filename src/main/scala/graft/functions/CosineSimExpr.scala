@@ -1,9 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.SparkSession
@@ -97,13 +96,10 @@ object CosineSimExpr {
   def apply(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("cosine_sim", a, b)
 
+  /** The `cosine_sim` registry entry, shared by [[register]] and [[GraftExtensions]]. */
+  val function = GraftExtensions.function("cosine_sim", classOf[CosineSimExpr], 2)(
+    a => CosineSimExpr(a.head, a(1)))
+
   /** Register `cosine_sim` on a session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, "cosine_sim"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "cosine_sim takes exactly two arguments")
-        CosineSimExpr(args.head, args(1))
-      })
+  def register(spark: SparkSession): Unit = GraftExtensions.register(spark, function)
 }

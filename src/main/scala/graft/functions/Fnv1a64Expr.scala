@@ -1,18 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression: 64-bit FNV-1a over a string's UTF-16 code
-  * units — the same function as [[graft.queries.TrainingOps.fnv1a64]], but
-  * participating in whole-stage codegen instead of crossing into a Scala
-  * closure (the "custom Expression beats UDF" rung of the extension
-  * ladder; SURVEY.md §2.9). Used for shingle/fingerprint hashing in SQL
-  * contexts.
+  * units — the same function as [[Fnv1a64Expr.hash]], but participating
+  * in whole-stage codegen instead of crossing into a Scala closure (the
+  * "custom Expression beats UDF" rung of the extension ladder; SURVEY.md
+  * §2.9). Used for shingle/fingerprint hashing in SQL contexts.
   *
   * Null-safe unary: null in → null out. Deterministic, foldable when the
   * child is foldable.
@@ -52,7 +50,8 @@ case class Fnv1a64Expr(child: Expression) extends UnaryExpression {
 
 object Fnv1a64Expr {
 
-  /** Reference implementation (mirrors TrainingOps.fnv1a64). */
+  /** The one Scala FNV-1a loop: the reference for the codegen path and the
+    * hash of the typed (Dataset) gram faces. */
   def hash(s: String): Long = {
     var h = 0xcbf29ce484222325L
     var i = 0
@@ -60,15 +59,12 @@ object Fnv1a64Expr {
     h
   }
 
+  /** The `fnv1a64` registry entry, shared by [[register]] and [[GraftExtensions]]. */
+  val function =
+    GraftExtensions.function("fnv1a64", classOf[Fnv1a64Expr], 1)(a => Fnv1a64Expr(a.head))
+
   /** Register `fnv1a64` on a session's function registry (idempotent) so
     * it is callable from spark.sql / selectExpr. Registry-level (not a
     * UDF): the optimizer sees a real expression and codegen inlines it. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("fnv1a64"),
-      new ExpressionInfo(classOf[Fnv1a64Expr].getName, "fnv1a64"),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, "fnv1a64 takes exactly one argument")
-        Fnv1a64Expr(args.head)
-      })
+  def register(spark: SparkSession): Unit = GraftExtensions.register(spark, function)
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.TableIO
+import graft.functions.Text
 
 /** End-to-end training-data curation funnel — the composition the engine
   * exists for: extraction output → document text → quality gate → exact
@@ -41,9 +42,8 @@ object CurationJob {
   /** The quality predicate as a Column — shared by the gate filter and the
     * single-pass funnel aggregation so both can never drift apart. */
   def qualityCond: org.apache.spark.sql.Column = {
-    val words = size(regexp_extract_all(col("text"), lit("""\S+"""), lit(0))).cast("double")
-    val stops = size(regexp_extract_all(lower(col("text")),
-      lit("""\b(the|and|of|to|a|in|is)\b"""), lit(0))).cast("double")
+    val words = Text.wordCount(col("text")).cast("double")
+    val stops = Text.stopwordCount(col("text")).cast("double")
     val nChars = length(col("text")).cast("double")
     words >= MinWords &&
       (stops / words) <= MaxStopwordRatio &&

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
+
 /** Multimodal columns: image/audio/video as opaque `binary` columns with
   * typed metadata, plus the decode / feature-extract / resize / frame-sample
   * stages a training-data pipeline runs over them.
@@ -162,9 +164,7 @@ object MediaOps {
       .agg(
         count(lit(1)).as("n"),
         sum(col("n_bytes")).cast("long").as("total_bytes"),
-        // floor-based half-up rounding: identical IEEE ops in Spark and
-        // DuckDB (Spark's round() rounds the shortest-decimal repr instead)
-        (floor(avg(col("dark_ratio")) * 10000 + 0.5) / 10000).as("avg_dark_ratio"))
+        Text.halfUp(avg(col("dark_ratio")), 4).as("avg_dark_ratio"))
 
   private[multimodal] def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

@@ -29,17 +29,18 @@ object Blocking {
     * there to catch. The filter is a column predicate (whole-stage
     * codegen; no row lambda).
     *
-    * Shape: ONE pinned-width exchange of `df` serves both the probe and
-    * the join-back — shuffling `df` twice (a partial-agg'd copy for the
-    * probe plus the raw rows for the join) would also recompute `df`'s
-    * upstream (a signature/shingle flatMap over the whole corpus) once
-    * per exchange. ReuseExchange dedupes the two scans of the
-    * repartition; the probe aggregates complete-mode over the exchanged
-    * rows. The width is pinned at the session's shuffle-partition count
-    * because the stage downstream of a purge is usually explosive
-    * (posting-list explode, block self-join): AQE sizes post-shuffle reads
-    * by this exchange's small input bytes and would serialize the explode
-    * onto one task. `shuffle_hash` builds on the block-key side instead of
+    * Shape: TWO pinned-width exchanges on `keys` — the rows for the
+    * join-back, and the probe's own copy carrying only the key columns.
+    * Column pruning makes the two canonically unequal, so ReuseExchange
+    * does not merge them, and `df`'s upstream (a signature/shingle
+    * flatMap over the whole corpus) runs once per exchange
+    * (`tools/Plans dd_minhash_pairs`: two `Exchange hashpartitioning(band,
+    * bhash, REPARTITION_BY_NUM)`, one with `doc_id`, each above its own
+    * banding `MapPartitions`). The width is pinned at the session's
+    * shuffle-partition count because the stage downstream of a purge is
+    * usually explosive (posting-list explode, block self-join): AQE sizes
+    * post-shuffle reads by the exchange's small input bytes and would
+    * serialize the explode onto one task. `shuffle_hash` builds on the block-key side instead of
     * sort-merging (no sort of the row side). */
   def purge(df: DataFrame, keys: Seq[String], cap: Int): DataFrame =
     if (cap <= 0) df

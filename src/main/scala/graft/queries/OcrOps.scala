@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
+
 /** Per-page OCR result structure + confidence aggregation — the Spark
   * re-expression of the reference's page loop
   * (/root/reference/openfoia/pipeline/ocr.py:84-109): every page carries
@@ -51,20 +53,18 @@ object OcrOps {
       .select(col("doc_id"), col("page_number"), col("page_text").as("text"),
         (size(regexp_extract_all(col("page_text"), lit("[a-z ]"), lit(0))).cast("double") /
           length(col("page_text"))).as("confidence"),
-        size(regexp_extract_all(col("page_text"), lit("""\S+"""), lit(0)))
-          .cast("long").as("word_count"))
+        Text.wordCount(col("page_text")).cast("long").as("word_count"))
   }
 
   /** Per-document OCRResult face (ocr.py:98-109): page_count, mean page
     * confidence (floor-based half-up 4dp — identical IEEE ops in Spark and
     * DuckDB), total words, and the ConfidenceLevel bucket. */
   def docConfidence(docs: DataFrame): DataFrame = {
-    val avgConf = floor(avg(col("confidence")) * 10000 + 0.5) / 10000
     pages(docs)
       .groupBy(col("doc_id"))
       .agg(
         count(lit(1)).as("page_count"),
-        avgConf.as("avg_confidence"),
+        Text.halfUp(avg(col("confidence")), 4).as("avg_confidence"),
         sum(col("word_count")).cast("long").as("total_words"))
       .withColumn("confidence_level", confidenceLevel(col("avg_confidence")))
   }

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Text
+
 /** Corpus retrieval scoring — the search face a curation pipeline uses for
   * targeted decontamination sweeps ("find everything that looks like this
   * eval prompt") and for seed-set expansion (pull the top-k documents for a
@@ -43,9 +45,7 @@ object RetrievalOps {
     require(queryTerms.forall(t => t == t.toLowerCase),
       s"query terms must be lowercase (tokens are lowercased): $queryTerms")
     val q = queryTerms.length
-    val toks = docs.select(col("doc_id").cast("long").as("doc_id"),
-        explode(split(lower(col("text")), "\\s+")).as("tok"))
-      .where(col("tok") =!= "")
+    val toks = Text.words(docs, "tok", col("doc_id").cast("long").as("doc_id"))
     val tfCols = queryTerms.zipWithIndex.map { case (t, i) =>
       sum(when(col("tok") === t, 1L).otherwise(0L)).as(s"tf_$i")
     }
@@ -68,7 +68,7 @@ object RetrievalOps {
     perDoc.crossJoin(broadcast(stats))
       .select(col("doc_id"), col("dl").cast("long").as("n_tokens"),
         nHit.as("n_terms"),
-        (floor(score * 1e4 + 0.5) / 1e4).as("score"))
+        Text.halfUp(score, 4).as("score"))
       .where(col("n_terms") > 0)
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)

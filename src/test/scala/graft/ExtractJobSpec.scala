@@ -74,16 +74,28 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
   }
 
   test("each task holds exactly one logical pid (identity placement)") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dist = spark.read.parquet(s"$base/in")
-      .select(pmod(hash(col("doc_id"), lit(graft.core.Spec.Salt)), lit(P)).cast("int").as("pid"))
-      .repartition(P, col("doc_id"), lit(graft.core.Spec.Salt))
-      .mapPartitions { it =>
-        Iterator.single((org.apache.spark.TaskContext.getPartitionId(), it.map(_.getInt(0)).toSet))
-      }.collect()
-    assert(dist.forall { case (phys, pids) => pids.forall(_ == phys) },
-      s"placement broke: ${dist.filter { case (ph, pids) => pids.exists(_ != ph) }.toSeq}")
+    // the job's own exchange at a P its width does not divide: a pid's
+    // files (every tag) come from one task, and task t holds only pids
+    // ≡ t mod width — the write names each file after its task's partition
+    val P12 = 12
+    val width = ExtractJob.shuffleWidth(P12, spark.sparkContext.defaultParallelism)
+    assert(width == 8 && P12 % width != 0)
+    val out = s"$base/outP12"
+    val rep = ExtractJob.run(spark, s"$base/in", out, "r12", P12)
+    assert(rep.docsIn == nDocs)
+    val part = """part-(\d+)-.*\.parquet""".r
+    val files = Files.walk(Paths.get(s"$out/data"))
+    val tasksOfPid = try files.iterator.asScala.toSeq
+      .flatMap(f => (f.getParent.getFileName.toString, f.getFileName.toString) match {
+        case (d, part(t)) if d.startsWith("pid=") => Some(d.stripPrefix("pid=").toInt -> t.toInt)
+        case _ => None
+      })
+      .groupBy(_._1).map { case (pid, ts) => pid -> ts.map(_._2).toSet }
+    finally files.close()
+    assert(tasksOfPid.keySet == (0 until P12).toSet)
+    tasksOfPid.foreach { case (pid, ts) =>
+      assert(ts == Set(pid % width), s"pid $pid written by tasks $ts")
+    }
   }
 
   test("output invariant to parallelism and partition count") {

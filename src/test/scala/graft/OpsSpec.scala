@@ -668,7 +668,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = (for {
       e <- 0L until 3L
       id <- 0L until 100L
-      k = TrainingOps.fnv1a64(s"$e:$id")
+      k = graft.functions.Fnv1a64Expr.hash(s"$e:$id")
     } yield (e, ((k % 4) + 4) % 4, k, id))
       .groupBy(x => (x._1, x._2)).toList
       .flatMap { case ((e, sh), g) =>
