@@ -25,17 +25,6 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     TableIO.readParquet(s, s"$dir/$name.parquet")
 
-  /** Materialized extraction output for the kernel-fed queries' oracles:
-    * the 300-doc generated corpus extracted once, spans EXPLODED to scalar
-    * rows (doc_id, seq, kind, text) and stored in the warehouse
-    * (marker-gated — one build per warehouse, Materialize.store). DuckDB
-    * cannot replay the kernel, but it CAN replay every aggregation /
-    * linking / chunking computation downstream of it — so dumping the
-    * kernel's deterministic output puts those formerly rows-only queries
-    * on the hash-compared oracle surface (VERDICT r4 #4): the oracle reads
-    * this table (via __WAREHOUSE__, substituted by Verify) while the query
-    * recomputes from the kernel, pinning recompute == stored == replayed.
-    * The spans themselves are pinned by the kernel/golden parity suite. */
   /** FNV-1a64 fingerprint of an extractor's full 300-doc output (doc ids,
     * span order, kinds, texts — exactly what the scalar stores dump).
     * Folded into each store's `srcTag` so ANY semantic change to the
@@ -74,11 +63,22 @@ object SparkEntry {
     s.range(0L, 300L).map(i => extract(SpanGen.genDoc(SpanGen.docId(i))))
   }
 
-  /** Shared dump shape for the two extractor stores: `extract` over the
-    * 300-doc generated corpus, spans exploded to scalar (doc_id, seq,
-    * kind, text, media_ref, offset) rows — ALL span fields, so row-set
-    * equality of two stores is exactly struct-sequence equality of the
-    * extractor outputs (the j5 verification join's contract; the
+  /** Materialized extraction output for the kernel-fed queries' oracles:
+    * the 300-doc generated corpus run through `extract` once, spans
+    * EXPLODED to scalar (doc_id, seq, kind, text, media_ref, offset) rows
+    * and stored in the warehouse (marker-gated — one build per warehouse,
+    * Materialize.store). DuckDB cannot replay the kernel, but it CAN
+    * replay every aggregation / linking / chunking computation downstream
+    * of it — so dumping the kernel's deterministic output puts those
+    * formerly rows-only queries on the hash-compared oracle surface
+    * (VERDICT r4 #4): the oracle reads this table (via __WAREHOUSE__,
+    * substituted by Verify) while the query recomputes from the kernel,
+    * pinning recompute == stored == replayed. The spans themselves are
+    * pinned by the kernel/golden parity suite.
+    *
+    * One dump shape serves both extractor stores, with ALL span fields, so
+    * row-set equality of two stores is exactly struct-sequence equality of
+    * the extractor outputs (the j5 verification join's contract; the
     * downstream linking/chunking oracles read only kind/text/seq and are
     * unaffected by the extra columns). */
   private def spanScalarStore(s: SparkSession, name: String, tag: String,
@@ -792,9 +792,7 @@ object SparkEntry {
     // integer lengths — exact in both engines
     "f6_chunker_docs" -> ((s, d) => {
       import s.implicits._
-      graft.queries.AdaptiveShuffle.spread(
-          t(s, d, "documents").select(col("doc_id").cast("long"), col("text")))
-        .as[(Long, String)]
+      TrainingOps.docRows(t(s, d, "documents"))
         .map { case (id, text) =>
           val ws = text.split("\\s+").filter(_.nonEmpty)
           val paras = ws.grouped(7).map(_.mkString(" ")).toVector

@@ -167,13 +167,10 @@ object ExtractJob {
                   s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}", runId))
             }
           }
-          val trailer = () => accs.iterator.map { case (pid, a) =>
+          // `++` takes its suffix by name: the trailer is built only once
+          // `rows` is exhausted, so it sees every pid's final counts
+          rows ++ accs.iterator.map { case (pid, a) =>
             OutRow(TagLineage, pid, "", Seq.empty, a.in, a.out, Checksums.render(a.xor), "", runId)
-          }
-          rows ++ new Iterator[OutRow] {
-            private var inner: Iterator[OutRow] = null
-            def hasNext = { if (inner == null) inner = trailer(); inner.hasNext }
-            def next() = { if (inner == null) inner = trailer(); inner.next() }
           }
         }
 

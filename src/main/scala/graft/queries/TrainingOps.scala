@@ -1,12 +1,14 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Materialize
 import graft.functions.{Fnv1a64Expr, Text}
 
+import scala.reflect.runtime.universe.TypeTag
 import scala.util.hashing.MurmurHash3
 
 /** Large-scale training-data pipeline operators over the `documents` and
@@ -37,6 +39,39 @@ object TrainingOps {
     val t = Text.tokens(text)
     if (t.length < n) Set(t.mkString(" "))
     else t.sliding(n).map(_.mkString(" ")).toSet
+  }
+
+  // ---------------------------------------------------- typed row streams
+  // Every typed kernel reads its input through one of these builders, so
+  // a change to a stream (its spread policy, its gram key) lands once.
+
+  /** The (doc_id, text) stream of the per-document kernels, spread across
+    * the slots first ([[AdaptiveShuffle.spread]]: the kernel is the CPU,
+    * and a sub-MB scan would otherwise run it on one task). */
+  private[graft] def docRows(docs: DataFrame): Dataset[(Long, String)] = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    AdaptiveShuffle.spread(docs.select(col("doc_id").cast("long"), col("text")))
+      .as[(Long, String)]
+  }
+
+  /** The (vec_id, embedding) stream of the embedding kernels. */
+  private def vecRows(emb: DataFrame): Dataset[(Long, Array[Float])] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    emb.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+  }
+
+  /** The hashed word-`n`-gram stream: one (doc_id, FNV-1a64 of the gram)
+    * row per distinct [[shingles]] gram of each document, the key column
+    * named `key`. */
+  private def hashedGrams(docs: DataFrame, n: Int, key: String): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docRows(docs)
+      .flatMap { case (id, text) =>
+        shingles(text, n).iterator.map(g => (id, Fnv1a64Expr.hash(g))) }
+      .toDF("doc_id", key)
   }
 
   /** MinHash signature: k permutations approximated by seeded murmur3. */
@@ -212,10 +247,7 @@ object TrainingOps {
     * Equivalence over a written-and-read-back table is pinned in OpsSpec. */
   def minhashSignatures(spark: SparkSession, docs: DataFrame, k: Int = 64): DataFrame = {
     import spark.implicits._
-    // spread: the k-permutation minhash kernel is the CPU; a sub-MB scan
-    // would otherwise run it on 1 task (no-op at corpus scale)
-    AdaptiveShuffle.spread(docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
+    docRows(docs)
       .map { case (id, text) => Sig(id, minhash(shingles(text, 3), k)) }
       .toDF("doc_id", "sig")
   }
@@ -345,8 +377,7 @@ object TrainingOps {
     * self-join side. Equivalence pinned in OpsSpec. */
   def simhashFingerprints(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    AdaptiveShuffle.spread(docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
+    docRows(docs)
       .map { case (id, text) => (id, simhash64(text)) }
       .toDF("doc_id", "fp")
   }
@@ -409,14 +440,8 @@ object TrainingOps {
     * the shingle stage up to 4× (df probe + join-back + sizes + posting
     * lists), each a recompute of this narrow flatMap; over a stored table
     * each is a parquet scan. Equivalence pinned in OpsSpec. */
-  def ngramShingles(spark: SparkSession, docs: DataFrame, n: Int = 3): DataFrame = {
-    import spark.implicits._
-    AdaptiveShuffle.spread(docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
-      .flatMap { case (id, text) =>
-        shingles(text, n).iterator.map(s => (id, Fnv1a64Expr.hash(s))) }
-      .toDF("doc_id", "sh")
-  }
+  def ngramShingles(spark: SparkSession, docs: DataFrame, n: Int = 3): DataFrame =
+    hashedGrams(docs, n, "sh")
 
   /** Pair generation over an existing shingle table (see [[ngramShingles]]
     * for the contract; [[ngramJaccardPairs]] composes the two for the lazy
@@ -705,8 +730,7 @@ object TrainingOps {
       MurmurHash3.stringHash(s"$p:$d", 7919).toDouble / Int.MaxValue
     }
     val bPlanes = spark.sparkContext.broadcast(planes)
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    vecRows(emb)
       .map { case (id, e) =>
         val ps = bPlanes.value
         var bucket = 0
@@ -815,8 +839,7 @@ object TrainingOps {
   def embedCosinePairs(spark: SparkSession, emb: DataFrame,
       minSim: Double = 0.95, nBlocks: Int = 8): DataFrame = {
     import spark.implicits._
-    val routed = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    val routed = vecRows(emb)
       .flatMap { case (id, v) =>
         val b = math.floorMod(id, nBlocks.toLong).toInt
         (0 until nBlocks).iterator.map(j => (math.min(b, j), math.max(b, j), id, v))
@@ -908,8 +931,7 @@ object TrainingOps {
       nCells: Int, iters: Int = 3): Array[(Int, Array[Float])] = {
     import spark.implicits._
     val Quant = (1 << 20).toDouble
-    val vecs = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    val vecs = vecRows(emb)
     var cents: Array[(Int, Array[Float])] = vecs
       .filter(_._1 < nCells).collect()
       .sortBy(_._1).zipWithIndex
@@ -954,8 +976,7 @@ object TrainingOps {
       nCells: Int = 16, iters: Int = 3): DataFrame = {
     import spark.implicits._
     val bCents = spark.sparkContext.broadcast(lloydCentroids(spark, emb, nCells, iters))
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    vecRows(emb)
       .map { case (_, v) => nearestCell(v, bCents.value) }
       .toDF("cell")
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
@@ -978,19 +999,11 @@ object TrainingOps {
       nCells: Int = 16, nProbe: Int = 4, nQueries: Int = 8, k: Int = 5): DataFrame = {
     graft.functions.CosineSimExpr.register(spark)
     import spark.implicits._
-    val cents = lloydCentroids(spark, emb, nCells)
-    val bCents = spark.sparkContext.broadcast(cents)
-
-    // assign: argmax over broadcast centroids inside a narrow typed map
-    val assigned = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, nearestCell(v, bCents.value)) }
-      .toDF("vec_id", "embedding", "cell")
+    val bCents = spark.sparkContext.broadcast(lloydCentroids(spark, emb, nCells))
+    val assigned = cellsOf(emb, bCents)
 
     // probe lists: nProbe best cells per query, local top-n in the same map
-    val probes = emb.where(col("vec_id").cast("long") < nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    val probes = vecRows(emb.where(col("vec_id").cast("long") < nQueries))
       .flatMap { case (id, v) =>
         val cs = bCents.value
         cs.iterator.map { case (c, ce) => (c, cosineF(v, ce)) }
@@ -1047,12 +1060,17 @@ object TrainingOps {
     * `Blocking.purgedGroups(semanticCells(...), Seq("cell"), maxCell)` counts
     * the cells the cap dropped (0 ⇒ capped == uncapped). */
   def semanticCells(spark: SparkSession, emb: DataFrame,
-      nCells: Int = 16, iters: Int = 3): DataFrame = {
+      nCells: Int = 16, iters: Int = 3): DataFrame =
+    cellsOf(emb, spark.sparkContext.broadcast(lloydCentroids(spark, emb, nCells, iters)))
+
+  /** The IVF cell assignment (vec_id, embedding, cell): argmax over the
+    * broadcast centroids inside a narrow typed map — zero shuffle. */
+  private def cellsOf(emb: DataFrame,
+      cents: Broadcast[Array[(Int, Array[Float])]]): DataFrame = {
+    val spark = emb.sparkSession
     import spark.implicits._
-    val bCents = spark.sparkContext.broadcast(lloydCentroids(spark, emb, nCells, iters))
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, v, nearestCell(v, bCents.value)) }
+    vecRows(emb)
+      .map { case (id, v) => (id, v, nearestCell(v, cents.value)) }
       .toDF("vec_id", "embedding", "cell")
   }
 
@@ -1117,8 +1135,7 @@ object TrainingOps {
     * a containment query actually consumes. */
   def fingerprints(spark: SparkSession, docs: DataFrame, gram: Int = 8, keep: Int = 16): DataFrame = {
     import spark.implicits._
-    AdaptiveShuffle.spread(
-        docs.select(col("doc_id").cast("long"), col("text"))).as[(Long, String)]
+    docRows(docs)
       .flatMap { case (id, text) =>
         val t = text
         val hs =
@@ -1146,8 +1163,7 @@ object TrainingOps {
     * shape as [[fingerprints]]; ratios quantized [[Text.halfUp]] to 4dp. */
   def repetitionStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    AdaptiveShuffle.spread(
-        docs.select(col("doc_id").cast("long"), col("text"))).as[(Long, String)]
+    docRows(docs)
       .map { case (id, text) =>
         val ws = Text.tokens(text)
         val n = ws.length
@@ -1208,14 +1224,9 @@ object TrainingOps {
   private[graft] def gramsOf(spark: SparkSession, d: DataFrame, n: Int,
       hashed: Boolean): DataFrame = {
     import spark.implicits._
-    val docGrams = AdaptiveShuffle.spread(
-      d.select(col("doc_id").cast("long"), col("text"))).as[(Long, String)]
-    if (hashed)
-      docGrams.flatMap { case (id, text) =>
-          shingles(text, n).iterator.map(g => (id, Fnv1a64Expr.hash(g))) }
-        .toDF("doc_id", "g")
+    if (hashed) hashedGrams(d, n, "g")
     else
-      docGrams.flatMap { case (id, text) => shingles(text, n).iterator.map(g => (id, g)) }
+      docRows(d).flatMap { case (id, text) => shingles(text, n).iterator.map(g => (id, g)) }
         .toDF("doc_id", "g")
   }
 
@@ -1493,6 +1504,8 @@ object TrainingOps {
     // gram-sized copy; groupBy-collect_list over millions of doc keys fell
     // back to sort-based ObjectHashAggregate — a full sort of the gram
     // stream.)
+    // not [[docRows]]: this stream is read unspread (spreading would add
+    // an exchange to the plan)
     val perDoc = Materialize.truncate(docs
       .where(pmod(col("doc_id").cast("long"), lit(evalMod)) === 0)
       .select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
@@ -1746,22 +1759,14 @@ object TrainingOps {
   private def windowOccurrences(spark: SparkSession, docs: DataFrame, n: Int,
       hashWindows: Boolean): DataFrame = {
     import spark.implicits._
-    val toks = AdaptiveShuffle.spread(
-      docs.select(col("doc_id").cast("long"), col("text"))).as[(Long, String)]
-    if (hashWindows)
-      toks.flatMap { case (id, text) =>
+    def windows[K: TypeTag](key: String => K): DataFrame =
+      docRows(docs)
+        .flatMap { case (id, text) =>
           val t = Text.tokens(text)
           if (t.length < n) Iterator.empty
-          else t.sliding(n).zipWithIndex.map { case (w, i) =>
-            (id, i, Fnv1a64Expr.hash(w.mkString(" "))) } }
+          else t.sliding(n).zipWithIndex.map { case (w, i) => (id, i, key(w.mkString(" "))) } }
         .toDF("doc_id", "pos", "g")
-    else
-      toks.flatMap { case (id, text) =>
-          val t = Text.tokens(text)
-          if (t.length < n) Iterator.empty
-          else t.sliding(n).zipWithIndex.map { case (w, i) =>
-            (id, i, w.mkString(" ")) } }
-        .toDF("doc_id", "pos", "g")
+    if (hashWindows) windows(Fnv1a64Expr.hash) else windows(identity[String])
   }
 
   /** Duplicated token positions per document (the T34 core): every token
@@ -1810,9 +1815,7 @@ object TrainingOps {
     import spark.implicits._
     require(n >= 2)
     val covered = coveredPositions(spark, docs, n, hashWindows)
-    val toksPos = AdaptiveShuffle.spread(
-        docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
+    val toksPos = docRows(docs)
       .flatMap { case (id, text) =>
         Text.tokens(text).iterator.zipWithIndex.map { case (t, i) => (id, i, t) } }
       .toDF("doc_id", "p", "tok")
@@ -2152,9 +2155,7 @@ object TrainingOps {
       holdMod: Int = 5, backoff: Double = 0.4): DataFrame = {
     import spark.implicits._
     require(holdMod >= 2)
-    val docBi = AdaptiveShuffle.spread(
-        docs.select(col("doc_id").cast("long"), col("text")))
-      .as[(Long, String)]
+    val docBi = docRows(docs)
       .flatMap { case (id, text) =>
         val t = Text.tokens(text)
         if (t.length < 2) Iterator.empty

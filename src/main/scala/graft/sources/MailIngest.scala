@@ -106,6 +106,7 @@ object MailIngest {
   /** Full ingest over the documents table: render → parse → attachment rows. */
   def attachments(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
+    // not TrainingOps.docRows: read unspread (spreading adds an exchange)
     docs.select(col("doc_id").cast("long"), col("text"))
       .as[(Long, String)]
       .flatMap { case (id, text) => walkParts(id, buildMessage(id, text)) }

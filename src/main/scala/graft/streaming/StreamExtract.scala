@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Doc
 import graft.kernel.Extractor
@@ -24,14 +24,11 @@ import graft.kernel.Extractor
   */
 object StreamExtract {
 
-  /** input_hint schema, for streaming sources that require an explicit one. */
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", StringType),
-    StructField("spans", ArrayType(StructType(Seq(
-      StructField("kind", StringType),
-      StructField("text", StringType),
-      StructField("media_ref", StringType),
-      StructField("offset", IntegerType)))))))
+  /** input_hint schema, for streaming sources that require an explicit one:
+    * the `Doc` encoder's own. A file source reads every field of it as
+    * nullable (`spark.sql.streaming.fileSource.schema.forceNullable`, on
+    * by default), as the batch job's read of the same files does. */
+  val docSchema: StructType = Encoders.product[Doc].schema
 
   /** The kernel over any Dataset[Doc] — batch or streaming; identical plan
     * shape either way. */

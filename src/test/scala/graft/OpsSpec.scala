@@ -1560,6 +1560,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(g3.values.forall(_ == 0L))
     assert(g3.size == 7)
+    // empty graph → empty result, no crash (the input cut holds no rows)
+    assert(graft.queries.GraphOps.triangleStats(spark,
+      Seq.empty[(String, String)].toDF("src", "dst")).count() == 0L)
   }
 
   test("pageRankWeighted: equal weights are bit-identical to uniform; heavy edges pull mass") {
@@ -1578,6 +1581,9 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(w2("a") > w2("c"))
     assert(uni("a") == uni("c"))
+    // empty graph → empty result, no crash
+    assert(graft.queries.GraphOps.pageRankWeighted(spark,
+      Seq.empty[(String, String, Long)].toDF("src", "dst", "w")).count() == 0L)
     // independent exact reference with per-edge floored shares
     val nodes = Seq("a", "b", "c"); val n = nodes.size
     val wt = wEdges.groupBy(_._1).map { case (k, es) => k -> es.map(_._3).sum }
