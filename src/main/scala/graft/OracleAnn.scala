@@ -3,7 +3,8 @@ package graft
 /** DuckDB oracle SQL for the LSH/ANN family — exact cross-engine
   * reproductions of the hyperplane-bucket pipeline:
   * scala.util.hashing.MurmurHash3.stringHash("p:d", 7919) as a UBIGINT
-  * mod-2^32 fold (validated against graft.tools.MurmurRef), plane weights
+  * mod-2^32 fold (pinned end to end by the oracle checks of
+  * `dd_minhash_pairs`, `sim_ann_lsh` and `dd_embed_lsh`), plane weights
   * hash/Int.MaxValue, bucket bits from double-precision dot signs (DuckDB
   * list_sum matches the kernel's ascending-index IEEE order — all 500
   * sf0.01 buckets verified identical), then the cosine/top-k panel the

@@ -1500,8 +1500,9 @@ object SparkEntry {
         |GROUP BY source ORDER BY source""".stripMargin,
     // Exact cross-engine reproduction of the MinHash+banded-LSH pipeline:
     // scala.util.hashing.MurmurHash3.stringHash re-expressed as a UBIGINT
-    // mod-2^32 fold (mix/mixLast/finalization constants verbatim; validated
-    // against MurmurRef values), per-seed signature minima over SIGNED ints,
+    // mod-2^32 fold (mix/mixLast/finalization constants verbatim; pinned end
+    // to end by this oracle and those of `sim_ann_lsh` and `dd_embed_lsh`),
+    // per-seed signature minima over SIGNED ints,
     // band membership compared on the raw 4-slices (equal slices <=>
     // equal band hashes modulo astronomically-unlikely collisions),
     // est_jaccard = matches/64 (exact binary fraction in both engines).

@@ -1,7 +1,5 @@
 package graft.multimodal
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -165,6 +163,4 @@ object MediaOps {
         count(lit(1)).as("n"),
         sum(col("n_bytes")).cast("long").as("total_bytes"),
         Text.halfUp(avg(col("dark_ratio")), 4).as("avg_dark_ratio"))
-
-  private[multimodal] def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 }

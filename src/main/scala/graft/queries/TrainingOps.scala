@@ -711,6 +711,13 @@ object TrainingOps {
     val scored = emb.join(broadcast(queries), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
+    topKPerQuery(scored, k)
+  }
+
+  /** The per-query top-k tail of the cosine faces: `(query_id,
+    * neighbor_id, sim)` rows ranked by sim desc, then neighbor_id asc;
+    * ranks ≤ k kept, sim half-up to 4 places. */
+  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w).cast("long"))
@@ -812,11 +819,7 @@ object TrainingOps {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
       .distinct()
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        Text.halfUp(col("sim"), 4).as("sim"))
+    topKPerQuery(cands, k)
   }
 
   /** Embedding-cosine near-duplicate pairs, exact: all (a<b) pairs with
@@ -1016,11 +1019,7 @@ object TrainingOps {
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         cosine(col("qe"), col("embedding")).as("sim"))
       .distinct()
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("neighbor_id").asc)
-    cands.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        Text.halfUp(col("sim"), 4).as("sim"))
+    topKPerQuery(cands, k)
   }
 
   // ------------------------------------------------ semantic dedup (T37)

@@ -12,10 +12,14 @@ import graft.kernel.Extractor
   *
   * The reference is batch-only; this is the "door kept open" by the typed
   * kernel design: the SAME pure `Doc => Doc` kernel runs under
-  * `readStream → mapPartitions → writeStream`, so batch and streaming
-  * outputs are identical by construction. Exactly-once is delegated to the
-  * streaming checkpoint (file-source offsets + idempotent parquet sink) —
-  * the streaming twin of ExtractJob's manifest-based resume.
+  * `readStream → mapPartitions → writeStream`, so a doc the kernel extracts
+  * gives the same spans in both. The outputs are not identical for every
+  * input: `ExtractJob` quarantines oversize docs and docs whose extraction
+  * throws (its tag=2 output), while [[extract]] runs the bare kernel, so
+  * here an oversize doc is extracted and a throwing doc fails the
+  * micro-batch. Exactly-once is delegated to the streaming checkpoint
+  * (file-source offsets + idempotent parquet sink) — the streaming twin of
+  * ExtractJob's manifest-based resume.
   *
   * Scale notes: the stream stays narrow end-to-end (no shuffle) — per
   * micro-batch cost is the kernel itself; watermarked windowed aggregation

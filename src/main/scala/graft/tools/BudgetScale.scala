@@ -26,7 +26,8 @@ import graft.queries.TrainingOps
   * caches it, and times each formulation to a 2-value aggregate sink.
   * Per size it ASSERTS result parity via full row checksums (sum of
   * murmur hash over all six columns + kept/cum totals) and, at the
-  * smallest rung, an exact two-sided exceptAll.
+  * smallest rung, an exact two-sided exceptAll. The growth record's α:
+  * 1.0 = linear.
   *
   * Env: BUDGETSCALE_SIZES (csv, default "250000,1000000,4000000"),
   * BUDGETSCALE_SOURCES (default 4), BUDGETSCALE_REPS (default 3, min
@@ -64,7 +65,7 @@ object BudgetScale {
     checksum(TrainingOps.budgetSelectNaiveFromBase(warm, 1000L))
     warm.unpersist()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("BUDGETSCALE", sizes) { n =>
       val b = base(spark, n, nSources).cache(); b.count()
       // ~half the per-source token mass: E[tokens] = 22.5 per doc
       val budget = 22L * n / (nSources.toLong * 2L)
@@ -80,14 +81,8 @@ object BudgetScale {
         require(diff == 0L, s"exceptAll found $diff differing rows at n=$n")
       }
       b.unpersist()
-      println(f"BUDGETSCALE n=$n%-8d sources=$nSources kept=${twoCk._3}%-8d " +
-        f"naive=${nvSec}%.2fs two_phase=${twoSec}%.2fs speedup=${nvSec / twoSec}%.2fx " +
-        f"checksum_parity=ok")
-      (n, nvSec, twoSec)
+      Seq("sources" -> nSources, "kept" -> twoCk._3, "naive_sec" -> nvSec,
+        "two_phase_sec" -> twoSec, "speedup" -> nvSec / twoSec, "checksum_parity" -> true)
     }
-    val (n0, nv0, tw0) = rows.head
-    val (n1, nv1, tw1) = rows.last
-    println(s"BUDGETSCALE alpha naive=${Probe.alpha(n0, n1, nv0, nv1)} " +
-      s"two_phase=${Probe.alpha(n0, n1, tw0, tw1)} (sizes ${n0}->${n1}, 1.0=linear)")
   }
 }

@@ -21,6 +21,9 @@ import graft.queries.TrainingOps
   *    (LSH components are band-cliques). Rounds stay O(1); required:
   *    n/5 components, each labelled by its minimum member.
   *
+  * The growth record's α: 1.0 = linear; the chain carries a log factor
+  * from its rounds, the cliques should be about flat to linear.
+  *
   * Env: CCSCALE_SIZES (csv, default "10000,100000"), SPARK_GRAFT_CPUS.
   */
 object CCScale {
@@ -47,7 +50,7 @@ object CCScale {
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     TrainingOps.connectedComponents(spark, chain(spark, 500)).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("CCSCALE", sizes) { n =>
       val ((chainLbl, chainRounds), chainSec) =
         time(TrainingOps.connectedComponentsIter(spark, chain(spark, n)))
       val chainBad = chainLbl.where(col("comp") =!= 0L).count()
@@ -59,23 +62,12 @@ object CCScale {
       val clBad = clLbl.where(col("comp") =!= (col("node") - pmod(col("node"), lit(5L)))).count()
       Materialize.release(clLbl)
 
-      println(f"CCSCALE n=$n%d chain_rounds=$chainRounds chain_sec=$chainSec%.1f " +
-        f"chain_mislabeled=$chainBad cliques_rounds=$clRounds cliques_sec=$clSec%.1f " +
-        f"cliques_components=$nComps (expect ${n / 5}) cliques_mislabeled=$clBad " +
-        f"log2n=${(math.log(n.toDouble) / math.log(2))}%.1f")
       require(chainBad == 0, s"chain n=$n: $chainBad nodes not labelled 0")
       require(clBad == 0, s"cliques n=$n: $clBad nodes not labelled by their clique minimum")
       require(nComps == n / 5, s"cliques n=$n: $nComps components, expected ${n / 5}")
-      (n, chainRounds, chainSec, clRounds, clSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, _, cs0, _, ls0) = rows.head
-      val (n1, _, cs1, _, ls1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"CCSCALE growth n=$n0->$n1: chain_sec_alpha=${alpha(cs0, cs1)} " +
-        s"cliques_sec_alpha=${alpha(ls0, ls1)} (1.0 = linear; chain carries " +
-        "a log-factor from rounds, cliques should be ~flat-to-linear)")
+      Seq("chain_rounds" -> chainRounds, "chain_sec" -> chainSec, "chain_mislabeled" -> chainBad,
+        "cliques_rounds" -> clRounds, "cliques_sec" -> clSec, "cliques_components" -> nComps,
+        "cliques_mislabeled" -> clBad, "log2n" -> math.log(n.toDouble) / math.log(2))
     }
   }
 }

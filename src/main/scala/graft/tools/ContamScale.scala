@@ -26,6 +26,7 @@ import graft.queries.TrainingOps
   * with the exact path (must be identical) and the candidate-volume
   * reduction (eval grams admitted to the exact join = true overlaps + fpp
   * false positives — the measured check of both Bloom guarantees).
+  * The growth record's α: 1.0 = linear, 2.0 = quadratic.
   *
   * Env: CONTAMSCALE_SIZES (csv, default "5000,20000,50000"),
   * SPARK_GRAFT_CPUS.
@@ -47,7 +48,7 @@ object ContamScale {
     TrainingOps.contaminationCheck(spark, DedupScale.corpus(spark, 2000)).count()
     TrainingOps.repetitionStats(spark, DedupScale.corpus(spark, 2000)).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("CONTAMSCALE", sizes) { n =>
       val docs = DedupScale.corpus(spark, n).cache()
       docs.count()
       val (contam, cSec) = time(agg3(TrainingOps.contaminationCheck(spark, docs)))
@@ -84,24 +85,12 @@ object ContamScale {
       Materialize.release(evalG)
       Materialize.release(trainG)
       docs.unpersist()
-      println(f"CONTAMSCALE n=$n%d eval_docs=${contam._1}%d " +
-        f"overlap_sum=${contam._2}%d contaminated=${contam._3}%d contam_sec=$cSec%.1f " +
-        f"repetition_flagged=$flagged%d repetition_sec=$rSec%.1f " +
-        f"bloom_sec=$bSec%.1f bloom_parity=$parity%b " +
-        f"eval_grams=$evalGrams%d bloom_candidates=$candidates%d " +
-        f"join_input_kept=${candidates.toDouble / math.max(evalGrams, 1)}%.3f")
       require(parity, s"Bloom face $bloom != exact path $contam at n=$n")
-      (n, contam._1, cSec, rSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, e0, cs0, rs0) = rows.head
-      val (n1, e1, cs1, rs1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"CONTAMSCALE growth n=$n0->$n1: " +
-        s"eval_docs_alpha=${alpha(e0.toDouble, e1.toDouble)} " +
-        s"contam_sec_alpha=${alpha(cs0, cs1)} " +
-        s"repetition_sec_alpha=${alpha(rs0, rs1)} (1.0 = linear, 2.0 = quadratic)")
+      Seq("eval_docs" -> contam._1, "overlap_sum" -> contam._2, "contaminated" -> contam._3,
+        "contam_sec" -> cSec, "repetition_flagged" -> flagged, "repetition_sec" -> rSec,
+        "bloom_sec" -> bSec, "bloom_parity" -> parity, "eval_grams" -> evalGrams,
+        "bloom_candidates" -> candidates,
+        "join_input_kept" -> candidates.toDouble / math.max(evalGrams, 1))
     }
 
     prodShape(spark)
@@ -167,7 +156,7 @@ object ContamScale {
 
     // --- scenario A: fixed ~2.5k-doc eval slice, train grown
     val aSizes = Probe.sizes("CONTAMSCALE_FIXED_EVAL_SIZES", "50000,200000,500000")
-    for (n <- aSizes) {
+    Probe.sweep("CONTAMPROD_A", aSizes) { n =>
       val evalMod = math.max(2L, n / 2500L).toInt
       // every 250th eval doc copies its train neighbor (doc_id + 1)
       val docs = synthDocs(spark, n, "a") { i =>
@@ -183,10 +172,9 @@ object ContamScale {
       val (bloom, bSec) = time(agg3(
         TrainingOps.contaminationCheckBloom(spark, docs, 8, evalMod, fpp)))
       docs.unpersist()
-      println(f"CONTAMPROD_A train_docs=${n - plain._1}%d eval_docs=${plain._1}%d " +
-        f"contaminated=${plain._3}%d plain_sec=$pSec%.1f bloom_sec=$bSec%.1f " +
-        f"parity=${plain == bloom}%b")
       require(plain == bloom, s"CONTAMPROD_A Bloom face $bloom != plain $plain at n=$n")
+      Seq("train_docs" -> (n - plain._1), "eval_docs" -> plain._1, "contaminated" -> plain._3,
+        "plain_sec" -> pSec, "bloom_sec" -> bSec, "parity" -> true)
     }
 
     // --- scenario B: fixed large reference-gram table, corpus sweep grown
@@ -200,14 +188,14 @@ object ContamScale {
     // shuffle-WRITE bytes are the cluster-scale cost a single-box wall
     // clock hides (local tmpfs shuffle is nearly free here; on a real
     // cluster exchanged bytes cross the network)
-    val tally = new Probe.Tally(spark)
+    val stage = new Probe.Stages(new Probe.Tally(spark))
+    def shuffled(t: Probe.Timing) = t.fields :+ ("shuffle_mib" -> t.window.shuffleWriteB / 1048576.0)
     // the per-snapshot Bloom artifact: built ONCE, reused by every sweep
     // (its tree-agg exchanges one ~10 MB partial per partition — a
     // cluster-width cost, constant in corpus size)
-    val (bloom, buildSec, build) = tally.measure(TrainingOps.trainGramBloom(refGrams, fpp))
-    println(f"CONTAMPROD_BLOOM_BUILD ref_grams=$refGramCount%d fpp=$fpp%.2f " +
-      f"bits=${bloom.bitSize()}%d build_sec=$buildSec%.1f " +
-      f"build_shuffle_mb=${build.shuffleWriteB / 1048576}%d")
+    val (bloom, build) = stage("bloom_build")(TrainingOps.trainGramBloom(refGrams, fpp))
+    Probe.record("CONTAMPROD_BLOOM_BUILD", Seq("ref_grams" -> refGramCount, "fpp" -> fpp,
+      "bits" -> bloom.bitSize()) ++ shuffled(build): _*)
     for (n <- bSizes) {
       // every 250th corpus doc copies a reference doc (plant ids cycle
       // through the reference's planted texts)
@@ -222,17 +210,16 @@ object ContamScale {
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try {
           // evalMod=1: EVERY corpus doc is checked (the sweep direction)
-          val (plain, pSec, pw) = tally.measure(agg3(
+          val (plain, p) = stage("plain")(agg3(
             TrainingOps.contaminationFromTrainGrams(
               spark, corpus, refGrams, 8, evalMod = 1, hashGrams = true)))
-          val (bl, bSec, bw) = tally.measure(agg3(
+          val (bl, b) = stage("bloom")(agg3(
             TrainingOps.contaminationBloomPrebuilt(
               spark, corpus, refGrams, bloom, 8, evalMod = 1)))
-          println(f"CONTAMPROD_B regime=$regime%s ref_grams=$refGramCount%d " +
-            f"corpus_docs=$n%d contaminated=${plain._3}%d " +
-            f"plain_sec=$pSec%.1f bloom_sec=$bSec%.1f " +
-            f"plain_shuffle_mb=${pw.shuffleWriteB / 1048576}%d " +
-            f"bloom_shuffle_mb=${bw.shuffleWriteB / 1048576}%d parity=${plain == bl}%b")
+          val rung = Seq("regime" -> regime, "ref_grams" -> refGramCount, "corpus_docs" -> n,
+            "contaminated" -> plain._3)
+          Probe.record("CONTAMPROD_B", rung ++ shuffled(p): _*)
+          Probe.record("CONTAMPROD_B", rung ++ shuffled(b) :+ ("parity" -> (plain == bl)): _*)
           require(plain == bl,
             s"CONTAMPROD_B regime=$regime Bloom face $bl != plain $plain at n=$n")
         } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
@@ -246,9 +233,8 @@ object ContamScale {
       bbf.destroy()
       Materialize.release(corpusG)
       corpus.unpersist()
-      println(f"CONTAMPROD_B_AUDIT corpus_docs=$n%d corpus_grams=$corpusGrams%d " +
-        f"admitted=$admitted%d " +
-        f"join_input_kept=${admitted.toDouble / math.max(corpusGrams, 1)}%.4f")
+      Probe.record("CONTAMPROD_B_AUDIT", "corpus_docs" -> n, "corpus_grams" -> corpusGrams,
+        "admitted" -> admitted, "join_input_kept" -> admitted.toDouble / math.max(corpusGrams, 1))
     }
     Materialize.release(refGrams)
   }

@@ -38,9 +38,11 @@ import graft.queries.TrainingOps
   * Env knobs: CURATION_DOCS (1000000), CURATION_PARTS (512),
   * SPARK_GRAFT_CPUS.
   *
-  * Each stage prints, besides its wall clock, the summed task
-  * `executorCpuTime` (cpu=) and `executorRunTime` (run=) from the probes'
-  * tally listener. Host steal is never credited to task CPU — it inflates only
+  * Each stage records (`"tool":"CURATION"`), besides its wall clock
+  * (`sec`), the summed task `executorCpuTime` (`cpu`) and
+  * `executorRunTime` (`run`) from the probes' tally listener, then its
+  * counts; the `total` record sums the stages' own timings. Host steal is
+  * never credited to task CPU — it inflates only
   * wall and run — so the cross-SIZE cpu ratio measures the job's work
   * growth steal-robustly, and run/cpu per stage exposes each stage's wave
   * exposure. (A boot-wide system-time pathology — see CLAUDE.md — inflates
@@ -60,18 +62,15 @@ object CurationScale {
   private def run(spark: SparkSession, base: String): Unit = {
     val nDocs = sys.env.getOrElse("CURATION_DOCS", "1000000").toLong
     val parts = sys.env.getOrElse("CURATION_PARTS", "512").toInt
-    val tally = new Probe.Tally(spark)
-    /** (result, wall sec, task-cpu sec, task-run sec) for one stage. */
-    def time[T](body: => T): (T, Double, Double, Double) = {
-      val (r, wall, w) = tally.measure(body)
-      (r, wall, w.cpuSec, w.runSec)
-    }
+    val stage = new Probe.Stages(new Probe.Tally(spark))
+    def rec(t: Probe.Timing, fields: (String, Any)*): Unit =
+      Probe.record("CURATION", t.fields ++ fields: _*)
     CorpusWriter.write(spark, nDocs, s"$base/in", parts) // setup, untimed
 
     // stage 1: extraction (the north-rule job)
-    val (rep, s1, c1, r1) = time(ExtractJob.run(spark, s"$base/in", s"$base/ex", "cur", parts))
+    val (rep, t1) = stage("extract")(ExtractJob.run(spark, s"$base/in", s"$base/ex", "cur", parts))
     require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
-    println(f"CURATION stage=extract sec=$s1%.1f cpu=$c1%.1f run=$r1%.1f out=${rep.docsOut}")
+    rec(t1, "out" -> rep.docsOut)
 
     // stage 2: document text + quality gate (narrow + pushed filter),
     // then the deterministic dup plant: ids d9…/d8… (numerically and
@@ -79,7 +78,7 @@ object CurationScale {
     // always keeps the original) carrying an exact copy / a copy with a
     // 6-token tail (shingle-set Jaccard ≈ 0.9 at ~100-word docs)
     val texts = CurationJob.docText(ExtractJob.readSpans(spark, s"$base/ex").toDF())
-    val (_, s2, c2, r2) = time {
+    val (_, t2) = stage("quality") {
       // truncated once: the plant unions four branches over `q`, and a lazy
       // `q` re-ran spans scan, docText and the gate per branch (cpu= ×4)
       val q = Materialize.truncate(CurationJob.qualityGate(texts))
@@ -111,16 +110,15 @@ object CurationScale {
     val nPlantNear = textsT.where(col("doc_id").startsWith("d8")).count()
     val nPlantContam = textsT.where(col("doc_id").startsWith("d7")).count()
     val nQuality = nWithPlant - nPlantExact - nPlantNear - nPlantContam
-    println(f"CURATION stage=quality sec=$s2%.1f cpu=$c2%.1f run=$r2%.1f out=$nQuality " +
-      f"(plant_exact=$nPlantExact plant_near=$nPlantNear plant_contam=$nPlantContam)")
+    rec(t2, "out" -> nQuality, "plant_exact" -> nPlantExact, "plant_near" -> nPlantNear,
+      "plant_contam" -> nPlantContam)
 
     // stage 3: exact dedup (one hash-groupBy shuffle) — must drop
     // exactly the planted exact clones on this corpus
-    val (_, s3, c3, r3) = time(TableIO.write(
+    val (_, t3) = stage("exact_dedup")(TableIO.write(
       CurationJob.dedup(TableIO.read(spark, s"$base/texts")), s"$base/curated"))
     val nCurated = TableIO.read(spark, s"$base/curated").count()
-    println(f"CURATION stage=exact_dedup sec=$s3%.1f cpu=$c3%.1f run=$r3%.1f out=$nCurated " +
-      f"(dropped=${nWithPlant - nCurated} expected=$nPlantExact)")
+    rec(t3, "out" -> nCurated, "dropped" -> (nWithPlant - nCurated), "expected" -> nPlantExact)
 
     // stage 4: near-dup cluster resolution — minhash-LSH candidate pairs
     // (estimated sim ≥ 0.5; planted tails sit at ≈ 0.9 where the 16×4
@@ -128,7 +126,7 @@ object CurationScale {
     // members
     val curNum = TableIO.read(spark, s"$base/curated")
       .select(substring(col("doc_id"), 2, 18).cast("long").as("doc_id"), col("text"))
-    val (_, s4, c4, r4) = time(TableIO.write(
+    val (_, t4) = stage("neardup_cc")(TableIO.write(
       TrainingOps.connectedComponents(spark,
           TrainingOps.minhashPairs(spark, curNum, minSim = 0.5)
             .select(col("doc_a"), col("doc_b")))
@@ -139,22 +137,21 @@ object CurationScale {
     val comps = clusters.select("component").distinct().count()
     val dropped = members - comps
     val nSurvive = nCurated - dropped
-    println(f"CURATION stage=neardup_cc sec=$s4%.1f cpu=$c4%.1f run=$r4%.1f out=$nSurvive " +
-      f"(cluster_members=$members clusters=$comps dropped=$dropped " +
-      f"expected=$nPlantNear recall=${dropped.toDouble / math.max(1, nPlantNear)}%.3f)")
+    rec(t4, "out" -> nSurvive, "cluster_members" -> members, "clusters" -> comps,
+      "dropped" -> dropped, "expected" -> nPlantNear,
+      "recall" -> dropped.toDouble / math.max(1, nPlantNear))
 
     // stage 5: contamination check over the near-dup survivors
     val survivors = curNum.join(
       clusters.where(col("doc_id") =!= col("component")).select("doc_id"),
       Seq("doc_id"), "left_anti")
-    val (_, s5, c5, r5) = time(TableIO.write(
+    val (_, t5) = stage("contamination")(TableIO.write(
       TrainingOps.contaminationCheck(spark, survivors, hashGrams = true),
       s"$base/contam"))
     val contam = TableIO.read(spark, s"$base/contam")
     val nEval = contam.count()
     val nContaminated = contam.where(col("contaminated")).count()
-    println(f"CURATION stage=contamination sec=$s5%.1f cpu=$c5%.1f run=$r5%.1f eval=$nEval " +
-      f"contaminated=$nContaminated expected=$nPlantContam")
+    rec(t5, "eval" -> nEval, "contaminated" -> nContaminated, "expected" -> nPlantContam)
 
     // stage 6: unigram-LM perplexity gate (T28) over the decontaminated
     // corpus — contaminated eval docs drop, the rest score against the
@@ -166,15 +163,14 @@ object CurationScale {
     val decontam = survivors.join(
       contam.where(col("contaminated")).select("doc_id"),
       Seq("doc_id"), "left_anti")
-    val (_, s6, c6, r6) = time(TableIO.write(
+    val (_, t6) = stage("perplexity")(TableIO.write(
       TrainingOps.unigramLogProb(decontam), s"$base/scored"))
     val scored = TableIO.read(spark, s"$base/scored")
     val nScored = scored.count()
     val cut = scored.agg(expr("percentile(avg_neg_logprob, 0.99)"))
       .collect()(0).getDouble(0)
     val nFlagged = scored.where(col("avg_neg_logprob") > cut).count()
-    println(f"CURATION stage=perplexity sec=$s6%.1f cpu=$c6%.1f run=$r6%.1f scored=$nScored " +
-      f"p99_cut=$cut%.4f flagged=$nFlagged")
+    rec(t6, "scored" -> nScored, "p99_cut" -> cut, "flagged" -> nFlagged)
 
     // stage 7: greedy sequence packing (T29) of the kept corpus into
     // 512-token context windows — the step that turns curated documents
@@ -183,7 +179,7 @@ object CurationScale {
     val kept = decontam.join(
       scored.where(col("avg_neg_logprob") > cut).select("doc_id"),
       Seq("doc_id"), "left_anti")
-    val (_, s7, c7, r7) = time(TableIO.write(
+    val (_, t7) = stage("seq_pack")(TableIO.write(
       TrainingOps.sequencePack(spark, kept, capacity = 512,
         nShards = math.max(64, parts)), s"$base/packed"))
     val p = TableIO.read(spark, s"$base/packed")
@@ -191,15 +187,13 @@ object CurationScale {
         countDistinct(col("shard"), col("bin")).as("bins"),
         sum(col("n_tok")).as("tokens")).collect()(0)
     val fill = p.getLong(2).toDouble / (p.getLong(1) * 512.0)
-    println(f"CURATION stage=seq_pack sec=$s7%.1f cpu=$c7%.1f run=$r7%.1f docs=${p.getLong(0)} " +
-      f"windows=${p.getLong(1)} tokens=${p.getLong(2)} fill=$fill%.3f")
+    rec(t7, "docs" -> p.getLong(0), "windows" -> p.getLong(1), "tokens" -> p.getLong(2),
+      "fill" -> fill)
 
-    val total = s1 + s2 + s3 + s4 + s5 + s6 + s7
-    val cpuTotal = c1 + c2 + c3 + c4 + c5 + c6 + c7
-    println(f"CURATION total docs=$nDocs parts=$parts cpus=${Probe.cpus} " +
-      f"sec=$total%.1f cpu=$cpuTotal%.1f docs_per_sec=${nDocs / total}%.0f " +
-      f"quality_ratio=${nQuality.toDouble / nDocs}%.4f " +
-      f"exact_drop=${nWithPlant - nCurated} neardup_drop=$dropped " +
-      f"contam_drop=$nContaminated ppl_drop=$nFlagged windows=${p.getLong(1)}")
+    val total = stage.total
+    rec(total, "docs" -> nDocs, "parts" -> parts, "cpus" -> Probe.cpus,
+      "docs_per_sec" -> nDocs / total.sec, "quality_ratio" -> nQuality.toDouble / nDocs,
+      "exact_drop" -> (nWithPlant - nCurated), "neardup_drop" -> dropped,
+      "contam_drop" -> nContaminated, "ppl_drop" -> nFlagged, "windows" -> p.getLong(1))
   }
 }

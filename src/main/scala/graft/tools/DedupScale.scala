@@ -19,6 +19,7 @@ import graft.queries.TrainingOps
   * mega-cluster is dropped and true-pair volume grows LINEARLY with n
   * (clusters/doc is constant), so measured growth ≈ n^1 proves the caps
   * hold; uncapped, the mega-cluster alone contributes (n/20)²/2 pairs.
+  * The growth record's α: 1.0 = linear, 2.0 = quadratic.
   *
   * Env: DEDUPSCALE_SIZES (csv, default "5000,20000,50000"),
   * DEDUPSCALE_CAP (default 200 — must stay < 5% of the smallest size so
@@ -63,7 +64,7 @@ object DedupScale {
     TrainingOps.minhashPairs(spark, corpus(spark, 2000), minSim = 0.5, maxBucket = cap).count()
     TrainingOps.ngramJaccardPairs(spark, corpus(spark, 2000), minJaccard = 0.5, maxDf = cap).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("DEDUPSCALE", sizes) { n =>
       val docs = corpus(spark, n).cache()
       docs.count()
       val megaBuckets = TrainingOps.minhashDroppedBuckets(spark, docs, maxBucket = cap)
@@ -75,21 +76,8 @@ object DedupScale {
       val (ngPairs, ngSec) = time(
         TrainingOps.ngramJaccardPairs(spark, docs, minJaccard = 0.5, maxDf = cap).count())
       docs.unpersist()
-      println(f"DEDUPSCALE n=$n%d cap=$cap dropped_buckets=$megaBuckets " +
-        f"minhash_pairs=$mhPairs%d minhash_sec=$mhSec%.1f " +
-        f"ngram_pairs=$ngPairs%d ngram_sec=$ngSec%.1f")
-      (n, mhPairs, mhSec, ngPairs, ngSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, mh0, ms0, ng0, ns0) = rows.head
-      val (n1, mh1, ms1, ng1, ns1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"DEDUPSCALE growth n=$n0->$n1: " +
-        s"minhash_pairs_alpha=${alpha(mh0.toDouble, mh1.toDouble)} " +
-        s"minhash_sec_alpha=${alpha(ms0, ms1)} " +
-        s"ngram_pairs_alpha=${alpha(ng0.toDouble, ng1.toDouble)} " +
-        s"ngram_sec_alpha=${alpha(ns0, ns1)} (1.0 = linear, 2.0 = quadratic)")
+      Seq("cap" -> cap, "dropped_buckets" -> megaBuckets, "minhash_pairs" -> mhPairs,
+        "minhash_sec" -> mhSec, "ngram_pairs" -> ngPairs, "ngram_sec" -> ngSec)
     }
   }
 }

@@ -9,6 +9,6 @@ object DumpCorpus {
     val n = if (args.length > 0) args(0).toLong else 10000L
     val path = if (args.length > 1) args(1) else "/tmp/graft_corpus"
     CorpusWriter.write(spark, n, path, 32)
-    println(s"DUMP wrote $n docs to $path")
+    Probe.record("DUMP", "docs" -> n, "path" -> path)
   }
 }

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.collection.immutable.ListMap
 import scala.util.hashing.MurmurHash3
 
 import graft.queries.{Blocking, TrainingOps}
@@ -23,6 +24,11 @@ import graft.queries.{Blocking, TrainingOps}
   * the signal the operator must keep), 70% unique quasi-random vectors
   * (pairwise cosine ≈ 0 — below any minSim). With the cap engaged the
   * mega-cluster is dropped and true-pair volume grows LINEARLY in n.
+  *
+  * Records: `EMBEDSCALE` and `SEMDEDUP` size ladders (growth α: pairs
+  * 1.0 = linear, 2.0 = quadratic; SemDeDup's seconds model is 1.5 at
+  * nCells = √n), then `EMBEDIVF` cell balance and `EMBEDCURVE`
+  * recall operating points at the largest size.
   *
   * Env: EMBEDSCALE_SIZES (csv, default "5000,20000,50000"),
   * EMBEDSCALE_CAP (default 200 — < 5% of the smallest size, so the
@@ -69,7 +75,7 @@ object EmbedScale {
       nPlanes = planes, maxBucket = cap).count()
     TrainingOps.annIvfTopK(spark, corpus(spark, 2000)).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("EMBEDSCALE", sizes) { n =>
       val emb = corpus(spark, n).cache()
       emb.count()
       // exact cap-engagement audit: hyperplane buckets over the cap; the
@@ -83,19 +89,8 @@ object EmbedScale {
           nPlanes = planes, maxBucket = cap).count())
       val (ivfRows, ivfSec) = time(TrainingOps.annIvfTopK(spark, emb).count())
       emb.unpersist()
-      println(f"EMBEDSCALE n=$n%d cap=$cap dropped_buckets=$droppedBuckets " +
-        f"lsh_pairs=$lshPairs%d lsh_sec=$lshSec%.1f ivf_rows=$ivfRows%d ivf_sec=$ivfSec%.1f")
-      (n, lshPairs, lshSec, ivfSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, p0, ls0, is0) = rows.head
-      val (n1, p1, ls1, is1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"EMBEDSCALE growth n=$n0->$n1: " +
-        s"lsh_pairs_alpha=${alpha(p0.toDouble, p1.toDouble)} " +
-        s"lsh_sec_alpha=${alpha(ls0, ls1)} " +
-        s"ivf_sec_alpha=${alpha(is0, is1)} (1.0 = linear, 2.0 = quadratic)")
+      Seq("cap" -> cap, "dropped_buckets" -> droppedBuckets, "lsh_pairs" -> lshPairs,
+        "lsh_sec" -> lshSec, "ivf_rows" -> ivfRows, "ivf_sec" -> ivfSec)
     }
 
     // SemDeDup (T37) volume: pairwise cosine only WITHIN a Lloyd cell.
@@ -107,7 +102,7 @@ object EmbedScale {
     // member pair sits at cosine ≥ 0.99, so expected true pairs = 10·n/20
     // = n/2 and sem_recall reads the within-cell recall of the planted
     // near-dups directly.
-    val semRows = sizes.map { n =>
+    Probe.sweep("SEMDEDUP", sizes) { n =>
       val emb = corpus(spark, n).cache()
       emb.count()
       val k = math.ceil(math.sqrt(n.toDouble)).toInt
@@ -119,18 +114,8 @@ object EmbedScale {
       val (pairs, sec) = time(TrainingOps.semanticDupPairs(spark, emb,
         nCells = k, minSim = 0.95, maxCell = semCap).count())
       emb.unpersist()
-      println(f"SEMDEDUP n=$n%d nCells=$k cap=$semCap dropped_cells=$droppedCells " +
-        f"pairs=$pairs%d expected_true=${n / 2}%d recall=${pairs.toDouble / (n / 2)}%.3f " +
-        f"sec=$sec%.1f")
-      (n, pairs, sec)
-    }
-    if (semRows.size >= 2) {
-      val (n0, p0, s0) = semRows.head
-      val (n1, p1, s1) = semRows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"SEMDEDUP growth n=$n0->$n1: " +
-        s"pairs_alpha=${alpha(p0.toDouble, p1.toDouble)} " +
-        s"sec_alpha=${alpha(s0, s1)} (pairs 1.0 = linear; sec model = 1.5 at nCells=√n)")
+      Seq("nCells" -> k, "cap" -> semCap, "dropped_cells" -> droppedCells, "pairs" -> pairs,
+        "expected_true" -> n / 2, "recall" -> pairs.toDouble / (n / 2), "sec" -> sec)
     }
 
     // IVF cell-occupancy at the largest size: the balance evidence behind
@@ -143,10 +128,9 @@ object EmbedScale {
     big.unpersist()
     val counts = hist.map(_._2)
     val mean = counts.sum.toDouble / counts.length
-    println("EMBEDSCALE ivf_histogram " +
-      hist.map { case (c, k) => s"$c:$k" }.mkString(" "))
-    println(f"EMBEDSCALE ivf_balance cells=${counts.length} mean=$mean%.0f " +
-      f"max=${counts.max} max_over_mean=${counts.max / mean}%.2f")
+    Probe.record("EMBEDIVF", "n" -> sizes.last, "cells" -> counts.length,
+      "mean" -> mean, "max" -> counts.max, "max_over_mean" -> counts.max / mean,
+      "histogram" -> ListMap(hist.sorted.toSeq: _*))
 
     // operating-point curves at the largest size: recall@5 vs the index
     // knobs, against the exact cosineTopK ground truth — the knee a
@@ -167,14 +151,14 @@ object EmbedScale {
     }
     for (nProbe <- 1 to 8) {
       val r = recall(sets(TrainingOps.annIvfTopK(spark, big, nCells = 16, nProbe = nProbe)))
-      println(f"EMBEDCURVE ivf n=${sizes.last}%d nCells=16 nProbe=$nProbe%d " +
-        f"recall_at_5=$r%.3f scan_frac=${nProbe / 16.0}%.3f")
+      Probe.record("EMBEDCURVE", "index" -> "ivf", "n" -> sizes.last, "nCells" -> 16,
+        "nProbe" -> nProbe, "recall_at_5" -> r, "scan_frac" -> nProbe / 16.0)
     }
     for (np <- Seq(8, 12, 16); ph <- 0 to 2) {
       val r = recall(sets(TrainingOps.annLshTopK(spark, big, nPlanes = np,
         probeHamming = ph)))
-      println(f"EMBEDCURVE lsh n=${sizes.last}%d nPlanes=$np%d probeHamming=$ph%d " +
-        f"recall_at_5=$r%.3f")
+      Probe.record("EMBEDCURVE", "index" -> "lsh", "n" -> sizes.last, "nPlanes" -> np,
+        "probeHamming" -> ph, "recall_at_5" -> r)
     }
     big.unpersist()
   }

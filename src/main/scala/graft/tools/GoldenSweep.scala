@@ -20,6 +20,6 @@ object GoldenSweep {
         sum(when(col("k_spans").isNull || col("g_spans").isNull ||
           col("k_spans") =!= col("g_spans"), 1L).otherwise(0L)).as("n_mismatches"))
       .collect().head
-    println(s"SWEEP docs=${r.getLong(0)} mismatches=${r.getLong(1)}")
+    Probe.record("SWEEP", "docs" -> r.getLong(0), "mismatches" -> r.getLong(1))
   }
 }

@@ -21,6 +21,10 @@ import graft.queries.GraphOps
   *    EXACT invariant is: exactly two distinct rank values with the
   *    per-role counts, equal to a two-scalar reference recurrence.
   *
+  * The growth record's α: 1.0 = linear in nodes ~ edges. PageRank's
+  * rounds are FIXED and the triangle wedge volume is bounded per node on
+  * both families, so any α > 1 is shuffle overhead, not the algorithm.
+  *
   * Env: GRAPHSCALE_SIZES (csv node counts, default "100000,400000"),
   * GRAPHSCALE_ITERS (default 4), SPARK_GRAFT_CPUS.
   */
@@ -88,7 +92,7 @@ object GraphScale {
     // warm codepaths so the smallest size isn't charged JVM/codegen startup
     GraphOps.pageRank(spark, chainEdges(spark, 500), iters).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("GRAPHSCALE", sizes) { n =>
       require(n >= 101 && n <= Int.MaxValue,
         s"GRAPHSCALE_SIZES entries must be in [101, 2^31): got $n " +
           "(star family needs >= 1 star; chainRef indexes an Int array)")
@@ -142,22 +146,10 @@ object GraphScale {
       }
       assert(starTriZero == 0L, s"star forest grew $starTriZero triangles")
 
-      println(f"GRAPHSCALE n=$n%d iters=$iters chain_sec=$chainSec%.1f " +
-        f"chain_mismatches=$mism stars=$nStars star_nodes=${nStars * 101}%d " +
-        f"star_sec=$starSec%.1f hub=$hubRef leaf=$leafRef " +
-        f"clique_tri_sec=$cliqueTriSec%.1f star_tri_sec=$starTriSec%.1f")
-      (n, chainSec, starSec, cliqueTriSec, starTriSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, c0, s0, ct0, st0) = rows.head
-      val (n1, c1, s1, ct1, st1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"GRAPHSCALE growth n=$n0->$n1: chain_sec_alpha=${alpha(c0, c1)} " +
-        s"star_sec_alpha=${alpha(s0, s1)} clique_tri_alpha=${alpha(ct0, ct1)} " +
-        s"star_tri_alpha=${alpha(st0, st1)} (1.0 = linear in nodes~edges; " +
-        "PR rounds are FIXED and triangle wedge volume is per-node-bounded " +
-        "on both families, so any α > 1 is shuffle overhead, not algorithm)")
+      Seq("iters" -> iters, "chain_sec" -> chainSec, "chain_mismatches" -> mism,
+        "stars" -> nStars, "star_nodes" -> nStars * 101, "star_sec" -> starSec,
+        "hub" -> hubRef, "leaf" -> leafRef, "clique_tri_sec" -> cliqueTriSec,
+        "star_tri_sec" -> starTriSec)
     }
   }
 }

@@ -28,6 +28,12 @@ import graft.queries.TrainingOps
   * default "5000,20000,80000"), SPARK_GRAFT_CPUS.
   * Working set on /dev/shm like Bench (single-disk writeback is not the
   * cluster bottleneck being modeled).
+  *
+  * Records: `INCRSCALE` (the one-off store build, then the batch ladder,
+  * whose growth α is vs BATCH size: the full re-dedup's cost is corpus-
+  * dominated, so its α reads ~0 and the point is the LEVEL gap at small
+  * b), `INCRSCALE_STORE` (batch fixed, store grown; α 1.0 = linear in
+  * STORE size) and `INCRSCALE_REFRESH` (the snapshot-diff refresh).
   */
 object IncrementalScale {
   import Probe.time
@@ -81,14 +87,14 @@ object IncrementalScale {
       TableIO.write(
         TrainingOps.minhashSignatures(spark, storeDocs(spark, storeN)), sigPath)
     }
-    println(f"INCRSCALE store=$storeN%d sig_build_once_sec=$buildSec%.1f")
+    Probe.record("INCRSCALE", "store" -> storeN, "sig_build_once_sec" -> buildSec)
 
     // warm codepaths so the smallest rung isn't charged codegen startup
     TrainingOps.minhashPairsAgainstStore(spark,
       TrainingOps.minhashSignatures(spark, batchDocs(spark, storeN, 500)),
       TableIO.read(spark, sigPath), minSim = 0.5).count()
 
-    val rows = batches.map { b =>
+    Probe.sweep("INCRSCALE", batches, key = "b") { b =>
       val batch = batchDocs(spark, storeN, b)
       val planted = (b + 9) / 10
       // the timed job is the daily deliverable — ONE action producing the
@@ -112,19 +118,8 @@ object IncrementalScale {
       }
       assert(fullPairs == planted,
         s"b=$b full self-join found $fullPairs pairs != planted=$planted")
-      println(f"INCRSCALE b=$b%d incr_sec=$incrSec%.1f full_sec=$fullSec%.1f " +
-        f"matched=$matched%d admitted=$admitted%d speedup=${fullSec / incrSec}%.1f")
-      (b, incrSec, fullSec)
-    }
-
-    if (rows.size >= 2) {
-      val (b0, i0, f0) = rows.head
-      val (b1, i1, f1) = rows.last
-      val alpha = Probe.alpha(b0, b1, _, _)
-      println(s"INCRSCALE growth b=$b0->$b1: incr_sec_alpha=${alpha(i0, i1)} " +
-        s"full_sec_alpha=${alpha(f0, f1)} (alpha is vs BATCH size; " +
-        s"full re-dedup cost is corpus-dominated so its alpha reads ~0 — " +
-        s"the point is the LEVEL gap at small b)")
+      Seq("incr_sec" -> incrSec, "full_sec" -> fullSec, "matched" -> matched,
+        "admitted" -> admitted, "speedup" -> fullSec / incrSec)
     }
 
     // Scenario B — batch FIXED, store grown: the axis that actually grows
@@ -134,7 +129,7 @@ object IncrementalScale {
     // shingling) — its growth in storeN is the scan, not the compute.
     val bFix = sys.env.getOrElse("INCRSCALE_FIXED_BATCH", "5000").toLong
     val storeSizes = Probe.sizes("INCRSCALE_STORES", "100000,200000,400000")
-    val rowsB = storeSizes.map { sN =>
+    Probe.sweep("INCRSCALE_STORE", storeSizes, key = "store") { sN =>
       val sp = s"$base/store_sigs_$sN"
       val (_, bld) = time {
         TableIO.write(TrainingOps.minhashSignatures(spark, storeDocs(spark, sN)), sp)
@@ -151,18 +146,10 @@ object IncrementalScale {
           storeDocs(spark, sN).unionAll(batch), minSim = 0.5).count()
       }
       assert(fullPairs == planted, s"store=$sN full pairs=$fullPairs != $planted")
-      println(f"INCRSCALE store=$sN%d b=$bFix%d sig_build_sec=$bld%.1f " +
-        f"incr_sec=$incrSec%.1f full_sec=$fullSec%.1f speedup=${fullSec / incrSec}%.1f")
-      (sN, incrSec, fullSec)
+      Seq("b" -> bFix, "sig_build_sec" -> bld, "incr_sec" -> incrSec, "full_sec" -> fullSec,
+        "speedup" -> fullSec / incrSec)
     }
-    if (rowsB.size >= 2) {
-      val (s0, i0, f0) = rowsB.head
-      val (s1, i1, f1) = rowsB.last
-      val alpha = Probe.alpha(s0, s1, _, _)
-      println(s"INCRSCALE growth store=$s0->$s1 (b=$bFix fixed): " +
-        s"incr_sec_alpha=${alpha(i0, i1)} full_sec_alpha=${alpha(f0, f1)} " +
-        s"(1.0 = linear in STORE size)")
-    }
+
     // Scenario C — the T48→T41 REFRESH composition: a new corpus VERSION
     // arrives (removals, radical rewrites, additions); snapshotDiff
     // isolates the delta (added ∪ changed) and ONLY the delta flows
@@ -240,11 +227,11 @@ object IncrementalScale {
       assert(fullPairs2 == expFull, s"refresh full pairs $fullPairs2 != $expFull")
       val deltaSize = nCh + addN
       val v2Size = storeN - nRem + addN
-      println(f"INCRSCALE refresh store=$storeN%d adds=$addN%d " +
-        f"delta=$deltaSize%d v2=$v2Size%d diff_sec=$diffSec%.1f " +
-        f"refresh_sec=$refreshSec%.1f full_sec=$fullSec2%.1f " +
-        f"speedup=${fullSec2 / refreshSec}%.1f " +
-        f"(removed=$nRem changed=$nCh admitted=$deltaAdmitted)")
+      Probe.record("INCRSCALE_REFRESH", "store" -> storeN, "adds" -> addN,
+        "delta" -> deltaSize, "v2" -> v2Size, "diff_sec" -> diffSec,
+        "refresh_sec" -> refreshSec, "full_sec" -> fullSec2,
+        "speedup" -> fullSec2 / refreshSec, "removed" -> nRem, "changed" -> nCh,
+        "admitted" -> deltaAdmitted)
     }
   }
 }

@@ -5,14 +5,19 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** The harness every dev probe in `graft.tools` shares: one session
   * builder, wall timing, interleaved min-of-reps, the log-log growth
-  * exponent, a tmpfs working dir, and one listener tallying stages and
-  * jobs.
+  * exponent, a tmpfs working dir, one listener tallying stages and jobs,
+  * one record line and one size ladder.
+  *
+  * Every result a tool prints is a [[record]]: one JSON object per line,
+  * `{"tool":"<TAG>", <fields in order>}`, so any run's output parses with
+  * one `json.loads` per line.
   *
   * Env: SPARK_GRAFT_CPUS (local slots and shuffle width; default the
   * machine's core count).
@@ -59,6 +64,49 @@ object Probe {
   def alpha(n0: Double, n1: Double, a: Double, b: Double): String =
     if (a <= 0 || b <= 0 || n0 <= 0 || n1 == n0) "n/a"
     else f"${math.log(b / a) / math.log(n1 / n0)}%.2f"
+
+  private val json = new ObjectMapper()
+
+  /** Prints one observation as one JSON object line: `tool` first, then
+    * `fields` in their order. Numbers stay numbers; a `Seq` is an array and
+    * a `Map` an object (in its iteration order). */
+  def record(tool: String, fields: (String, Any)*): Unit = {
+    def plain(v: Any): Any = v match {
+      case m: collection.Map[_, _] =>
+        val o = new java.util.LinkedHashMap[String, Any]()
+        m.foreach { case (k, x) => o.put(k.toString, plain(x)) }
+        o
+      case s: Iterable[_] => s.map(plain).toSeq.asJava
+      case x => x
+    }
+    println(json.writeValueAsString(plain(collection.immutable.ListMap(("tool" -> tool) +: fields: _*))))
+  }
+
+  /** The size ladder: runs `rung` once per size and records `key -> size`
+    * and the rung's fields as one `tool` line. After the last of two or
+    * more rungs it records one growth line, `growth`/`from`/`to` and the
+    * exponent of every numeric field from the first rung to the last as
+    * `<field>_alpha` ([[alpha]]'s rule: a number, or "n/a"). */
+  def sweep(tool: String, sizes: Seq[Long], key: String = "n")(
+      rung: Long => Seq[(String, Any)]): Unit = {
+    val rows = sizes.map { n =>
+      val fields = rung(n)
+      record(tool, (key -> n) +: fields: _*)
+      fields
+    }
+    if (rows.size >= 2) {
+      val (n0, n1) = (sizes.head.toDouble, sizes.last.toDouble)
+      val last = rows.last.toMap
+      val alphas = rows.head.flatMap {
+        case (k, a: Number) => last.get(k).collect { case b: Number =>
+          val x = alpha(n0, n1, a.doubleValue, b.doubleValue)
+          s"${k}_alpha" -> (if (x == "n/a") x else x.toDouble)
+        }
+        case _ => None
+      }
+      record(tool, Seq("growth" -> key, "from" -> sizes.head, "to" -> sizes.last) ++ alphas: _*)
+    }
+  }
 
   /** Runs `body` in a fresh directory, deleted with its contents when
     * `body` ends. The directory is on tmpfs (/dev/shm) when the host has
@@ -134,5 +182,31 @@ object Probe {
         (r, sec, Window(js, stages.values.toSeq))
       }
     }
+  }
+
+  /** One named stage's wall seconds and the jobs and stages it ran;
+    * `fields` is its record: `stage`, `sec` (wall), `cpu` and `run` (summed
+    * task seconds). */
+  final case class Timing(stage: String, sec: Double, window: Window) {
+    def cpu: Double = window.cpuSec
+    def run: Double = window.runSec
+    def fields: Seq[(String, Any)] = Seq("stage" -> stage, "sec" -> sec, "cpu" -> cpu, "run" -> run)
+  }
+
+  /** Named stages measured on one [[Tally]]; `total` sums every stage
+    * measured so far, wall and task time alike. */
+  final class Stages(tally: Tally) {
+    private val done = mutable.ArrayBuffer.empty[Timing]
+
+    /** `body`'s result and its [[Timing]] as stage `name`. */
+    def apply[T](name: String)(body: => T): (T, Timing) = {
+      val (r, sec, w) = tally.measure(body)
+      val t = Timing(name, sec, w)
+      done += t
+      (r, t)
+    }
+
+    def total: Timing = Timing("total", done.map(_.sec).sum,
+      Window(done.flatMap(_.window.jobs).toSeq, done.flatMap(_.window.stages).toSeq))
   }
 }

@@ -4,15 +4,18 @@ package graft.tools
   * and profile where each one's wall goes:
   * `sbt "runMain graft.tools.QueryTime q1_agg gr_triangles"`.
   * Env: QT_SF_DIR (default the sf0.1 test tables), QT_REPS (default 10 —
-  * prints every rep; first rep pays warehouse builds), SPARK_GRAFT_CPUS.
+  * records every rep; first rep pays warehouse builds), SPARK_GRAFT_CPUS.
   *
-  * Walls keep falling until about the eighth rep as the JIT warms (at
-  * sf0.1, `dd_embed_lsh` 1.44 → 0.77 s), so a second rep reads 20-60%
-  * high: the line also prints `warm=`, the minimum of the last half of the
-  * reps, and the profile is of the LAST rep, warm and free of rep 1's
-  * warehouse builds: its jobs, stages, tasks, summed task CPU and run time
-  * and shuffle bytes, then per job its wall, stages, tasks and shuffle, and
-  * every stage that ran ≥ 200 ms of task time.
+  * Records per query (`"tool":"QUERYTIME"`, `query`, then by `kind`):
+  *  - `time`: rows, every rep's wall (`secs`) and `warm`, the minimum of
+  *    the last half of the reps. Walls keep falling until about the eighth
+  *    rep as the JIT warms (at sf0.1, `dd_embed_lsh` 1.44 → 0.77 s), so a
+  *    second rep reads 20-60% high.
+  *  - `profile`: jobs, stages and tasks as the min and max over those same
+  *    warm reps (one build's task count can flip between reps), then the
+  *    LAST rep's summed task CPU and run time and shuffle bytes.
+  *  - `job`: per job of the last rep, its wall, stages, tasks and shuffle.
+  *  - `stage`: every stage of the last rep that ran ≥ 200 ms of task time.
   */
 object QueryTime {
   def main(args: Array[String]): Unit = {
@@ -38,22 +41,28 @@ object QueryTime {
               .getLong(0)
           }
         }
-        val warm = runs.drop(reps / 2).map(_._2).min
-        println(f"QUERYTIME $name rows=${runs.head._1} " +
-          runs.map(x => f"${x._2}%.2f").mkString("secs=", ",", "") + f" warm=$warm%.2f")
+        def rec(kind: String, fields: (String, Any)*): Unit =
+          Probe.record("QUERYTIME", Seq("query" -> name, "kind" -> kind) ++ fields: _*)
+        val warm = runs.drop(reps / 2)
+        rec("time", "rows" -> runs.head._1, "secs" -> runs.map(_._2), "warm" -> warm.map(_._2).min)
+        def range(key: String, of: Probe.Window => Int): Seq[(String, Any)] = {
+          val xs = warm.map(r => of(r._3))
+          Seq(s"${key}_min" -> xs.min, s"${key}_max" -> xs.max)
+        }
         val w = runs.last._3
-        println(f"QUERYTIME $name profile jobs=${w.jobs.size} stages=${w.stages.size} " +
-          f"tasks=${w.tasks} cpu=${w.cpuSec}%.2f run=${w.runSec}%.2f " +
-          f"shufR=${w.shuffleReadB / 1024}K shufW=${w.shuffleWriteB / 1024}K")
+        rec("profile", range("jobs", _.jobs.size) ++ range("stages", _.stages.size) ++
+          range("tasks", _.tasks) ++ Seq("cpu" -> w.cpuSec, "run" -> w.runSec,
+            "shuffle_read_kib" -> w.shuffleReadB / 1024,
+            "shuffle_write_kib" -> w.shuffleWriteB / 1024): _*)
         w.jobs.foreach { j =>
-          println(f"  job=${j.id}%3d ${j.sec}%6.2fs stages=${j.stages.size}%2d " +
-            f"tasks=${j.stages.map(_.tasks).sum}%4d execMs=${j.stages.map(_.runMs).sum}%6d " +
-            f"shufR=${j.stages.map(_.shuffleReadB).sum / 1024}%7dK " +
-            f"shufW=${j.stages.map(_.shuffleWriteB).sum / 1024}%7dK  ${j.desc.take(60)}")
+          rec("job", "job" -> j.id, "sec" -> j.sec, "stages" -> j.stages.size,
+            "tasks" -> j.stages.map(_.tasks).sum, "exec_ms" -> j.stages.map(_.runMs).sum,
+            "shuffle_read_kib" -> j.stages.map(_.shuffleReadB).sum / 1024,
+            "shuffle_write_kib" -> j.stages.map(_.shuffleWriteB).sum / 1024, "desc" -> j.desc)
           j.stages.filter(_.runMs >= 200).foreach { s =>
-            println(f"    stage=${s.id}%3d tasks=${s.tasks}%4d execMs=${s.runMs}%6d " +
-              f"cpuMs=${s.cpuNs / 1000000}%6d deserMs=${s.deserMs}%5d gcMs=${s.gcMs}%5d " +
-              s.name.take(90))
+            rec("stage", "job" -> j.id, "stage" -> s.id, "tasks" -> s.tasks,
+              "exec_ms" -> s.runMs, "cpu_ms" -> s.cpuNs / 1000000, "deser_ms" -> s.deserMs,
+              "gc_ms" -> s.gcMs, "name" -> s.name)
           }
         }
       }

@@ -10,17 +10,17 @@ import graft.kernel.Extractor
 
 /** Diagnoses where N→4N scaling is lost: raw JVM thread scaling of the
   * kernel against full-job scaling.
-  * Prints PROBE lines. Dev tool, not part of the driver contract.
+  * Records `"tool":"PROBE"` lines: per `face` (`raw_kernel`, `full_job`)
+  * the wall of each level, then the N→4N `efficiency` of every level pair
+  * both faces ran. Dev tool, not part of the Bench/Verify contract.
   * Env: PROBE_DOCS, PROBE_PARTS, PROBE_RAW, PROBE_RAW_DOCS, PROBE_LEVELS,
   * PROBE_REPS. */
 object ScaleProbe {
 
-  private def time(body: => Any): Double = Probe.time(body)._2
-
   // raw thread scaling: extract the same docs on a fixed thread pool
   private def rawKernel(threads: Int, docsPerThread: Int): Double = {
     val pool = Executors.newFixedThreadPool(threads)
-    val t = time {
+    val (_, t) = Probe.time {
       val futs = (0 until threads).map { t =>
         pool.submit(new Runnable {
           def run(): Unit = {
@@ -53,16 +53,22 @@ object ScaleProbe {
       val ts = (1 to 3).map(_ => rawKernel(th, rawDocs / th)).sorted
       th -> ts(1)
     }.toMap
-    rawLevels.foreach(th => println(f"PROBE raw kernel @ $th threads: ${raws(th)}%.2fs (${rawDocs / raws(th)}%.0f docs/s)"))
-    for (n <- rawLevels; if raws.contains(n) && raws.contains(n * 4))
-      println(f"PROBE raw efficiency $n->${n * 4}: ${raws(n) / raws(n * 4) / 4}%.3f")
+    rawLevels.foreach(th => Probe.record("PROBE", "face" -> "raw_kernel", "threads" -> th,
+      "sec" -> raws(th), "docs_per_sec" -> rawDocs / raws(th)))
+    efficiency("raw_kernel", raws)
 
     Probe.withTmpDir("scaleprobe")(base => jobLevels(base, nDocs, parts))
   }
 
+  /** One record per level pair n → 4n that `secs` holds: t(n) / t(4n) / 4. */
+  private def efficiency(face: String, secs: Map[Int, Double]): Unit =
+    for (n <- secs.keys.toSeq.sorted; if secs.contains(n * 4))
+      Probe.record("PROBE", "face" -> face, "from" -> n, "to" -> n * 4,
+        "efficiency" -> secs(n) / secs(n * 4) / 4)
+
   private def jobLevels(base: String, nDocs: Long, parts: Int): Unit = {
-    def fullJob(s: SparkSession, tag: String): Double =
-      time(ExtractJob.run(s, s"$base/corpus", s"$base/out_$tag", tag, parts))
+    def fullJob(s: SparkSession, tag: String): Unit =
+      ExtractJob.run(s, s"$base/corpus", s"$base/out_$tag", tag, parts)
 
     // deep-warm the shared JVM so later levels aren't flattered
     Probe.withSpark() { spark =>
@@ -78,15 +84,16 @@ object ScaleProbe {
     }
     val times = levels.map { c =>
       val ts = Probe.withSpark(c) { s =>
+        val stage = new Probe.Stages(new Probe.Tally(s))
         fullJob(s, s"w$c"); sync()
-        (1 to reps).map { r => val t = fullJob(s, s"m$c$r"); sync(); t }.sorted
+        (1 to reps).map { r => val (_, t) = stage(s"m$c$r")(fullJob(s, s"m$c$r")); sync(); t }
+          .sortBy(_.sec)
       }
       val med = ts(ts.length / 2)
-      println(f"PROBE full-job @ local[$c]: median=$med%.2fs all=${ts.map(t => f"$t%.2f").mkString(",")} (${nDocs / med}%.0f docs/s)")
-      c -> med
+      Probe.record("PROBE", "face" -> "full_job", "slots" -> c, "median_sec" -> med.sec,
+        "median_cpu" -> med.cpu, "secs" -> ts.map(_.sec), "docs_per_sec" -> nDocs / med.sec)
+      c -> med.sec
     }.toMap
-    for (n <- levels; if times.contains(n) && times.contains(n * 4))
-      println(f"PROBE efficiency $n->${n * 4}: ${times(n) / times(n * 4) / 4}%.3f " +
-        f"(t$n=${times(n)}%.2fs t${n * 4}=${times(n * 4)}%.2fs)")
+    efficiency("full_job", times)
   }
 }

@@ -19,11 +19,11 @@ object ScaleUp {
         val secs = (1 to reps).map { r =>
           val (rep, t) = Probe.time(ExtractJob.run(spark, s"$base/in", s"$base/out$r", s"m$r", parts))
           require(rep.docsOut == nDocs, s"docsOut=${rep.docsOut}")
-          println(f"SCALEUP rep $r: $t%.1f s")
+          Probe.record("SCALEUP", "rep" -> r, "sec" -> t)
           t
         }
-        println(f"SCALEUP docs=$nDocs parts=$parts cpus=${Probe.cpus} sec=${secs.min}%.1f " +
-          f"docs_per_sec=${nDocs / secs.min}%.0f")
+        Probe.record("SCALEUP", "docs" -> nDocs, "parts" -> parts, "cpus" -> Probe.cpus,
+          "sec" -> secs.min, "docs_per_sec" -> nDocs / secs.min)
       }
     }
   }

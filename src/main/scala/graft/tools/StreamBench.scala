@@ -11,7 +11,8 @@ import graft.streaming.StreamExtract
 /** Streaming throughput at bench scale — StreamingSpec proves batch/stream
   * parity and exactly-once restart at test scale (hundreds of docs); this
   * drives the SAME StreamExtract surface over the bench corpus (default
-  * 300k docs, the Bench extraction corpus size) and records:
+  * 300k docs, the Bench extraction corpus size) and records, one
+  * `"tool":"STREAMBENCH"` line per timed stage (wall, task cpu and run):
   *
   *  1. batch reference: one ExtractJob over the corpus (docs/s);
   *  2. stream drain: StreamExtract AvailableNow over the same files
@@ -28,7 +29,8 @@ import graft.streaming.StreamExtract
   */
 object StreamBench {
 
-  private def time(body: => Any): Double = Probe.time(body)._2
+  private def rec(t: Probe.Timing, fields: (String, Any)*): Unit =
+    Probe.record("STREAMBENCH", t.fields ++ fields: _*)
 
   def main(args: Array[String]): Unit =
     Probe.withTmpDir("graftstream")(base => Probe.withSpark()(run(_, base)))
@@ -38,6 +40,7 @@ object StreamBench {
     val parts = sys.env.getOrElse("STREAMBENCH_PARTS", "128").toInt
     val delta = sys.env.getOrElse("STREAMBENCH_DELTA", "10000").toLong
     import spark.implicits._
+    val stage = new Probe.Stages(new Probe.Tally(spark))
 
     val corpus = s"$base/corpus"
     CorpusWriter.write(spark, nDocs, corpus, parts)
@@ -45,21 +48,19 @@ object StreamBench {
     // 1. batch reference — the same job Bench times (warm pass first so
     // both paths are compared JIT-warm)
     ExtractJob.run(spark, corpus, s"$base/warm", "warm", parts)
-    val batchSec = time(ExtractJob.run(spark, corpus, s"$base/batch", "batch", parts))
-    println(f"STREAMBENCH batch docs=$nDocs%d sec=$batchSec%.1f " +
-      f"docs_per_sec=${nDocs / batchSec}%.0f")
+    val (_, batch) = stage("batch")(ExtractJob.run(spark, corpus, s"$base/batch", "batch", parts))
+    rec(batch, "docs" -> nDocs, "docs_per_sec" -> nDocs / batch.sec)
 
     // 2. stream drain over the same files
     val outDir = s"$base/stream_out"
     val ckpt = s"$base/ckpt"
-    val streamSec = time {
+    val (_, stream) = stage("stream") {
       val q = StreamExtract.run(spark, corpus, outDir, ckpt)
       q.awaitTermination()
     }
     val drained = spark.read.parquet(outDir).count()
-    println(f"STREAMBENCH stream docs=$drained%d sec=$streamSec%.1f " +
-      f"docs_per_sec=${drained / streamSec}%.0f " +
-      f"vs_batch=${streamSec / batchSec}%.2fx")
+    rec(stream, "docs" -> drained, "docs_per_sec" -> drained / stream.sec,
+      "vs_batch" -> stream.sec / batch.sec)
     require(drained == nDocs, s"stream drained $drained of $nDocs docs")
 
     // 3. restart-resume: append a delta, restart on the same checkpoint —
@@ -68,31 +69,30 @@ object StreamBench {
     TableIO.write(
       spark.range(nDocs, nDocs + delta).map(i => SpanGen.genDoc(SpanGen.docId(i))).toDF(),
       corpus, mode = "append")
-    val resumeSec = time {
+    val (_, resume) = stage("resume") {
       val q = StreamExtract.run(spark, corpus, outDir, ckpt)
       q.awaitTermination()
     }
     val out = spark.read.parquet(outDir)
     val rows = out.count()
     val distinct = out.select(countDistinct(col("doc_id"))).head().getLong(0)
-    println(f"STREAMBENCH resume delta=$delta%d sec=$resumeSec%.1f " +
-      f"rows=$rows%d distinct=$distinct%d " +
-      s"exactly_once=${rows == nDocs + delta && distinct == nDocs + delta}")
+    rec(resume, "delta" -> delta, "rows" -> rows, "distinct" -> distinct,
+      "exactly_once" -> (rows == nDocs + delta && distinct == nDocs + delta))
     require(rows == nDocs + delta && distinct == nDocs + delta,
       s"resume broke exactly-once: rows=$rows distinct=$distinct expected=${nDocs + delta}")
-    require(resumeSec < streamSec / 2,
-      f"resume took $resumeSec%.1fs — did the restart reprocess the drained corpus?")
+    require(resume.sec < stream.sec / 2,
+      f"resume took ${resume.sec}%.1fs — did the restart reprocess the drained corpus?")
 
     // 4. stateful dedup at scale (T20): flatMapGroupsWithState over the
     // same corpus volume with planted cross-micro-batch duplicates —
     // throughput vs the equivalent batch dedup, state row count, and an
     // exactly-once restart where dropping the delta's duplicates REQUIRES
     // the reloaded state (the dup originals drained before the restart)
-    statefulDedup(spark, base, nDocs, parts, delta)
+    statefulDedup(spark, stage, base, nDocs, parts, delta)
   }
 
-  private def statefulDedup(spark: SparkSession, base: String, nDocs: Long,
-      parts: Int, delta: Long): Unit = {
+  private def statefulDedup(spark: SparkSession, stage: Probe.Stages, base: String,
+      nDocs: Long, parts: Int, delta: Long): Unit = {
     import spark.implicits._
     import graft.streaming.StatefulDedup
     import graft.streaming.StatefulDedup.HashedDoc
@@ -108,7 +108,7 @@ object StreamBench {
     val distinctHashes = nDocs - nDocs / 10
 
     // batch reference: same semantics (first doc_id per hash), same input
-    val batchSec = time {
+    val (_, batch) = stage("dedup_batch") {
       val n = spark.read.parquet(dupDir).groupBy(col("h"))
         .agg(min(col("doc_id"))).count()
       require(n == distinctHashes, s"batch dedup $n != $distinctHashes")
@@ -131,15 +131,13 @@ object StreamBench {
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination(); q
     }
-    var stateRows = -1L
-    val streamSec = time {
-      val q = drain()
-      stateRows = q.lastProgress.stateOperators.head.numRowsTotal
+    rec(batch, "docs" -> nDocs)
+    val (stateRows, stream) = stage("dedup_stream") {
+      drain().lastProgress.stateOperators.head.numRowsTotal
     }
     val emitted = spark.read.parquet(outDir).count()
-    println(f"STREAMBENCH dedup docs=$nDocs%d emitted=$emitted%d " +
-      f"state_rows=$stateRows%d batch_sec=$batchSec%.1f stream_sec=$streamSec%.1f " +
-      f"docs_per_sec=${nDocs / streamSec}%.0f vs_batch=${streamSec / batchSec}%.2fx")
+    rec(stream, "docs" -> nDocs, "emitted" -> emitted, "state_rows" -> stateRows,
+      "docs_per_sec" -> nDocs / stream.sec, "vs_batch" -> stream.sec / batch.sec)
     require(emitted == distinctHashes,
       s"stateful dedup emitted $emitted of $distinctHashes distinct hashes")
     require(stateRows == distinctHashes,
@@ -156,12 +154,11 @@ object StreamBench {
     spark.range(nDocs, nDocs + delta)
       .map(i => HashedDoc(f"doc$i%09d", deltaHash(i)))
       .repartition(8).write.mode("append").parquet(dupDir)
-    val resumeSec = time(drain())
+    val (_, resume) = stage("dedup_resume")(drain())
     val after = spark.read.parquet(outDir).count()
     val expected = distinctHashes + delta / 2
-    println(f"STREAMBENCH dedup_resume delta=$delta%d sec=$resumeSec%.1f " +
-      f"rows=$after%d expected=$expected%d " +
-      s"state_reload_exactly_once=${after == expected}")
+    rec(resume, "delta" -> delta, "rows" -> after, "expected" -> expected,
+      "state_reload_exactly_once" -> (after == expected))
     require(after == expected,
       s"restart emitted $after, expected $expected — state not reloaded " +
         "or duplicates re-emitted")

@@ -30,7 +30,8 @@ import graft.queries.TrainingOps
   * interesting number — one scan + one bucketed shuffle); T36's pair
   * stage runs on the DISTINCT-word vocabulary, which this corpus caps at
   * ~5,012 words regardless of n, so its wall should be nearly FLAT while
-  * the corpus grows 10× (only the vocab-agg scan grows).
+  * the corpus grows 10× (only the vocab-agg scan grows). The growth
+  * record's α: 1.0 = linear.
   *
   * Env: SUBSTRSCALE_SIZES (csv, default "5000,20000,50000"),
   * SPARK_GRAFT_CPUS.
@@ -48,7 +49,7 @@ object SubstrScale {
       DedupScale.corpus(spark, 2000).where(pmod(col("doc_id"), lit(20)) < 5)).count()
     TrainingOps.bpePairCounts(spark, DedupScale.corpus(spark, 2000)).count()
 
-    val rows = sizes.map { n =>
+    Probe.sweep("SUBSTRSCALE", sizes) { n =>
       val docs = DedupScale.corpus(spark, n).cache()
       docs.count()
       // hashWindows = the scale posture (8-byte longs on the shuffle);
@@ -74,20 +75,8 @@ object SubstrScale {
         s"${r.getString(0)}${r.getString(1)}:${r.getLong(2)}"
       }
       docs.unpersist()
-      println(f"SUBSTRSCALE n=$n%d substr_flagged=${sub._1}%d (= expected) " +
-        f"substr_dup_tok=${sub._2}%d (= expected) substr_sec=$subSec%.1f " +
-        f"dsir_kept=$kept%d dsir_sec=$dsirSec%.1f " +
-        f"bpe_top=$topPair bpe_sec=$bpeSec%.1f")
-      (n, subSec, dsirSec, bpeSec)
-    }
-
-    if (rows.size >= 2) {
-      val (n0, s0, d0, b0) = rows.head
-      val (n1, s1, d1, b1) = rows.last
-      val alpha = Probe.alpha(n0, n1, _, _)
-      println(s"SUBSTRSCALE growth n=$n0->$n1: substr_sec_alpha=${alpha(s0, s1)} " +
-        s"dsir_sec_alpha=${alpha(d0, d1)} bpe_sec_alpha=${alpha(b0, b1)} " +
-        s"(1.0 = linear; flagged/dup-token counts asserted exact at every size)")
+      Seq("substr_flagged" -> sub._1, "substr_dup_tok" -> sub._2, "substr_sec" -> subSec,
+        "dsir_kept" -> kept, "dsir_sec" -> dsirSec, "bpe_top" -> topPair, "bpe_sec" -> bpeSec)
     }
   }
 }

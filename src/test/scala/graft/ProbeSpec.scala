@@ -41,4 +41,57 @@ class ProbeSpec extends AnyFunSuite {
     assert(a == 3 && b == "b")
     assert(aSec >= 0 && bSec >= 0)
   }
+
+  private def printed(body: => Unit): Seq[String] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(body)
+    out.toString("UTF-8").split("\n").toSeq.filter(_.nonEmpty)
+  }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def fields(line: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    json.readTree(line).fieldNames().asScala.toSeq
+  }
+
+  test("record: one JSON object per line, fields in order, numbers unquoted") {
+    val lines = printed {
+      Probe.record("DEDUPSCALE", "n" -> 5000L, "cap" -> 200, "minhash_sec" -> 1.25,
+        "parity" -> true, "top" -> "ab:3", "secs" -> Seq(0.5, 0.25))
+      Probe.record("EMPTY")
+    }
+    assert(lines.size == 2)
+    val r = json.readTree(lines.head)
+    assert(fields(lines.head) == Seq("tool", "n", "cap", "minhash_sec", "parity", "top", "secs"))
+    assert(r.get("tool").asText == "DEDUPSCALE")
+    assert(r.get("n").isNumber && r.get("n").asLong == 5000L)
+    assert(r.get("cap").isNumber && r.get("minhash_sec").asDouble == 1.25)
+    assert(r.get("parity").isBoolean && r.get("top").isTextual)
+    assert(r.get("secs").isArray && r.get("secs").get(1).asDouble == 0.25)
+    assert(lines.head.contains("\"n\":5000,\"cap\":200,"))
+    assert(fields(lines(1)) == Seq("tool"))
+  }
+
+  test("sweep: one record per rung, then first-vs-last alpha of each numeric field") {
+    val lines = printed {
+      Probe.sweep("LADDER", Seq(1000L, 2000L, 4000L)) { n =>
+        Seq("pairs" -> n * n, "sec" -> n / 1000.0, "dropped" -> 0L,
+          "ok" -> true, "label" -> s"r$n")
+      }
+    }
+    assert(lines.size == 4)
+    assert(lines.take(3).map(l => json.readTree(l).get("n").asLong) == Seq(1000L, 2000L, 4000L))
+    assert(fields(lines.head) == Seq("tool", "n", "pairs", "sec", "dropped", "ok", "label"))
+    val g = json.readTree(lines(3))
+    assert(fields(lines(3)) == Seq("tool", "growth", "from", "to",
+      "pairs_alpha", "sec_alpha", "dropped_alpha"))
+    assert(g.get("growth").asText == "n" && g.get("from").asLong == 1000L && g.get("to").asLong == 4000L)
+    assert(g.get("pairs_alpha").isNumber)
+    assert(g.get("pairs_alpha").asDouble == Probe.alpha(1000, 4000, 1e6, 1.6e7).toDouble)
+    assert(g.get("sec_alpha").asDouble == Probe.alpha(1000, 4000, 1.0, 4.0).toDouble)
+    assert(g.get("dropped_alpha").asText == "n/a")
+
+    val one = printed(Probe.sweep("LADDER", Seq(7L), key = "b")(b => Seq("sec" -> 1.0)))
+    assert(one.size == 1 && json.readTree(one.head).get("b").asLong == 7L)
+  }
 }
