@@ -1,5 +1,8 @@
 package graft.core
 
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
+
 /** Core data model for the extraction engine.
   *
   * Mirrors the `input_hint` shape from BASELINE.json exactly:
@@ -13,6 +16,11 @@ package graft.core
 final case class Span(kind: String, text: String, media_ref: String, offset: Int)
 
 final case class Doc(doc_id: String, spans: Seq[Span])
+
+object Doc {
+  /** The input_hint schema; lazy, so a kernel's `Doc(...)` skips it. */
+  lazy val schema: StructType = Encoders.product[Doc].schema
+}
 
 /** Per-partition lineage row (SURVEY.md §2 A9, §4.3).
   * checksum is an order-insensitive fold (XOR of per-doc digest prefixes) so

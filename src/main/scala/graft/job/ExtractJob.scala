@@ -1,6 +1,8 @@
 package graft.job
 
-import org.apache.spark.sql.{Dataset, Encoders, Observation, Row, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Checksums, Doc, LineageRow, Spec, TableIO}
@@ -11,12 +13,11 @@ import graft.kernel.Extractor
   * {{{
   * parquet scan as `Doc` (pruned to doc_id+spans; no inference job)
   *   → repartitionById(width, pid mod width) [the only shuffle]
-  *   → typed mapPartitions kernel (Doc => Doc), per-logical-pid lineage
-  *     trailer rows (tag=1)
-  *   → observe: collect_list(tag=1 lineage structs), count_if(tag=2)
-  *   → filter tag≠1 → single write: spans (tag=0) + quarantine (tag=2),
+  *   → typed mapPartitions kernel (Doc => Doc); each task adds one
+  *     LineageRow per logical pid it saw to the wave's accumulator
+  *   → single write: spans (tag=0) + quarantine (tag=2),
   *     dynamic-partition-overwritten by (tag, pid)
-  *   → driver: observed lineage → per-pid manifests (no read-back)
+  *   → driver: accumulated lineage → per-pid manifests (no read-back)
   * }}}
   *
   * Logical partition `pid = pmod(murmur3Hash(doc_id, Spec.Salt), P)` is a
@@ -27,11 +28,12 @@ import graft.kernel.Extractor
   * written by exactly one task (one file per (tag, pid)), and lineage is
   * grouped by *logical* pid inside the task.
   *
-  * The lineage trailers never reach storage: one `Dataset.observe` on the
-  * written dataset collects them (at most P structs) with the quarantine
-  * count. The observe node sits in the write's result stage, where Spark
-  * merges each partition's metrics once, so the counts are exact under
-  * task retry; the wave commits with ONE Spark action.
+  * Lineage never reaches the written rows: each kernel task adds it to the
+  * wave's named `CollectionAccumulator` (at most P rows) once its input
+  * runs out. The kernel sits in the write's result stage, where Spark
+  * merges a partition's accumulator updates once and drops failed
+  * attempts', so the counts are exact under task retry; the wave commits
+  * with ONE Spark action. Quarantined = Σ(docs_in − docs_out).
   *
   * The write and the manifests set their local-FS permissions without
   * forking `chmod` (`TableIO.ForkFreeLocalFs`).
@@ -48,8 +50,8 @@ import graft.kernel.Extractor
   */
 object ExtractJob {
 
-  /** Tagged union row out of the kernel. tag: 0=doc, 1=lineage (observed,
-    * never written), 2=quarantine. */
+  /** Tagged union row out of the kernel. tag: 0=doc, 2=quarantine. The
+    * lineage fields stay unset (lineage goes to the wave's accumulator). */
   final case class OutRow(
       tag: Int,
       pid: Int,
@@ -71,7 +73,6 @@ object ExtractJob {
       quarantined: Long)
 
   val TagDoc = 0
-  val TagLineage = 1
   val TagQuarantine = 2
 
   /** pid expression — MUST equal the kernel-side recomputation below.
@@ -113,14 +114,15 @@ object ExtractJob {
 
     // read as `Doc`: no schema-inference job per call, and the footer
     // check keeps a missing or mistyped column loud
-    val input = TableIO.read(spark, inputPath, Encoders.product[Doc].schema)
+    val input = TableIO.read(spark, inputPath, Doc.schema)
       .select(col("doc_id"), col("spans"))
       .withColumn("pid", pidCol(p))
 
-    var docsIn = 0L; var docsOut = 0L; var quarantined = 0L
+    var docsIn = 0L; var docsOut = 0L
     val processed = Seq.newBuilder[Int]
 
     for ((wave, w) <- waves.zipWithIndex if wave.nonEmpty) {
+      val lineageAcc = spark.sparkContext.collectionAccumulator[LineageRow](s"extract:$runId:$w")
       val filtered =
         if (wave.size == p) input
         else input.where(col("pid").isin(wave.map(Integer.valueOf): _*))
@@ -167,30 +169,20 @@ object ExtractJob {
                   s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(500)}", runId))
             }
           }
-          // `++` takes its suffix by name: the trailer is built only once
-          // `rows` is exhausted, so it sees every pid's final counts
-          rows ++ accs.iterator.map { case (pid, a) =>
-            OutRow(TagLineage, pid, "", Seq.empty, a.in, a.out, Checksums.render(a.xor), "", runId)
+          // `++` takes its suffix by name: the lineage is added only once
+          // `rows` is exhausted, so it holds every pid's final counts
+          rows ++ {
+            accs.foreach { case (pid, a) =>
+              lineageAcc.add(LineageRow(runId, pid, a.in, a.out, Checksums.render(a.xor)))
+            }
+            Iterator.empty
           }
         }
 
-      // Lineage is observed on the write, not stored and read back: the
-      // tag=1 trailers (≤ P) and the quarantine count come out of the same
-      // action that commits the data.
-      val obs = Observation(s"extract:$runId:$w")
-      val written = out
-        .observe(obs,
-          collect_list(when(col("tag") === TagLineage,
-            struct(col("pid"), col("docs_in"), col("docs_out"), col("checksum")))).as("lineage"),
-          count_if(col("tag") === TagQuarantine).as("quarantined"))
-        .where(col("tag") =!= TagLineage)
-        .drop("docs_in", "docs_out", "checksum")
-      TableIO.write(written, s"$outputPath/data", SaveMode.Overwrite.name(),
-        partitionBy = Seq("tag", "pid"))
+      TableIO.write(out.drop("docs_in", "docs_out", "checksum"), s"$outputPath/data",
+        SaveMode.Overwrite.name(), partitionBy = Seq("tag", "pid"))
 
-      val metrics = obs.get
-      val lineage = metrics("lineage").asInstanceOf[scala.collection.Seq[Row]].map(r =>
-        LineageRow(runId, r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
+      val lineage = lineageAcc.value.asScala.toSeq
       val seen = lineage.map(_.partition_id).toSet
       require(seen.size == lineage.size, s"a pid's lineage came from two tasks (width $width, P $p)")
       // pids with zero input rows still complete (empty manifest)
@@ -198,11 +190,10 @@ object ExtractJob {
       Checkpoint.write(outputPath, lineage ++ empty, hconf)
       docsIn += lineage.map(_.docs_in).sum
       docsOut += lineage.map(_.docs_out).sum
-      quarantined += metrics("quarantined").asInstanceOf[Long]
       processed ++= wave
     }
 
-    Report(runId, p, processed.result(), done0.toSeq.sorted, docsIn, docsOut, quarantined)
+    Report(runId, p, processed.result(), done0.toSeq.sorted, docsIn, docsOut, docsIn - docsOut)
   }
 
   /** The spans table as consumers read it (tag pruning is partition

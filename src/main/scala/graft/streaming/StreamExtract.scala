@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
 
 import graft.core.Doc
 import graft.kernel.Extractor
@@ -28,12 +27,6 @@ import graft.kernel.Extractor
   */
 object StreamExtract {
 
-  /** input_hint schema, for streaming sources that require an explicit one:
-    * the `Doc` encoder's own. A file source reads every field of it as
-    * nullable (`spark.sql.streaming.fileSource.schema.forceNullable`, on
-    * by default), as the batch job's read of the same files does. */
-  val docSchema: StructType = Encoders.product[Doc].schema
-
   /** The kernel over any Dataset[Doc] — batch or streaming; identical plan
     * shape either way. */
   def extract(docs: Dataset[Doc]): Dataset[Doc] = {
@@ -52,8 +45,10 @@ object StreamExtract {
       checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
     import spark.implicits._
+    // the file source reads every field as nullable (its default
+    // `fileSource.schema.forceNullable`), as the batch job's read does
     val in = spark.readStream
-      .schema(docSchema)
+      .schema(Doc.schema)
       .option("maxFilesPerTrigger", "16")
       .parquet(inputDir)
       .as[Doc]

@@ -10,8 +10,14 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{CollectMetricsExec, FilterExec, MapPartitionsExec, ProjectExec,
+  QueryExecution, SerializeFromObjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.concurrent.{Eventually, Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
@@ -22,9 +28,9 @@ import graft.job.{Checkpoint, ExtractJob}
 
 /** End-to-end job tests (SURVEY.md §5.2 items 2-4): span equality vs golden
   * at scale sf-test, lineage conservation, parallelism invariance, resume. */
-class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
+class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits with Eventually {
 
-  // an observation that never completes would block the run forever
+  // a wave that never completes would block the suite forever
   private implicit val signaler: Signaler = ThreadSignaler
 
   private lazy val spark = SparkSession.builder()
@@ -208,6 +214,54 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
         finally files.close()
       }
     }
+  }
+
+  test("the write plan carries no lineage: kernel output goes straight to the write's sort") {
+    // the executed tree, through AQE's final plan and its query stages
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _ => p.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    // only this run's write: an earlier test's events may still be queued
+    val out = s"$base/outPlan"
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (nodes(qe.executedPlan).exists {
+          case w: DataWritingCommandExec => w.cmd.toString.contains(s"$out/data")
+          case _ => false
+        }) writes.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val plan = try {
+      ExtractJob.run(spark, s"$base/in", out, "rplan", P)
+      // listener events arrive on the listener bus, after the action returns
+      eventually(timeout(Span(60, Seconds))) { assert(writes.size == 1) }
+      writes.peek()
+    } finally spark.listenerManager.unregister(listener)
+    // the nodes from `p` down to the first node `hit` accepts, both ends included
+    def pathTo(p: SparkPlan, hit: SparkPlan => Boolean): Option[List[SparkPlan]] =
+      if (hit(p)) Some(List(p)) else kids(p).iterator.flatMap(pathTo(_, hit)).nextOption().map(p :: _)
+    val shape = s"write plan:\n${nodes(plan).map(_.nodeName).mkString(" <- ")}"
+
+    assert(!nodes(plan).exists(_.isInstanceOf[CollectMetricsExec]), shape)
+    assert(!nodes(plan).exists {
+      case f: FilterExec => f.condition.references.exists(_.name == "tag")
+      case _ => false
+    }, shape)
+    val toSort = pathTo(plan, _.isInstanceOf[SortExec])
+    assert(toSort.isDefined, shape)
+    val sortToSerialize = pathTo(toSort.get.last, _.isInstanceOf[SerializeFromObjectExec])
+    assert(sortToSerialize.isDefined, shape)
+    assert(!sortToSerialize.get.exists(_.isInstanceOf[ProjectExec]), shape)
+    // the kernel runs in the write's result stage, where its lineage
+    // accumulator updates count once per partition
+    val toKernel = pathTo(plan, _.isInstanceOf[MapPartitionsExec])
+    assert(toKernel.isDefined, shape)
+    assert(!toKernel.get.exists(_.isInstanceOf[Exchange]), shape)
   }
 
   test("an extraction call forks no process: data write, commit and manifests") {
