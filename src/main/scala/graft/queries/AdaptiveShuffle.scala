@@ -1,13 +1,30 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, GraftFrames, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LogicalPlan, Project, Repartition, Sort, Window}
 
 /** Scale-adaptive shuffle sizing for the iterative operators (guide
   * §2.2/§2.4): partition counts are derived from MEASURED row counts —
   * never from the local core count — and session confs touched for the
-  * eager region are restored before the operator returns.
+  * eager region are restored before the operator returns. Small inputs,
+  * by the plan-statistics estimate, get their own shapes: a spread scan
+  * before a CPU-dense kernel, and a one-partition presentation sort.
   */
 private[graft] object AdaptiveShuffle {
+
+  /** Plan-statistics size at or under which an input is SMALL: its scan
+    * planned few tasks (split size floors at `files.openCostInBytes`) and
+    * one task holds and sorts it. The one bound [[spread]] and [[sortTail]]
+    * share. */
+  val smallInputBytes: Long = 8L << 20
+
+  /** `plan`'s plan-statistics size, `Long.MaxValue` when it has none. */
+  private def sizeEstimate(plan: => LogicalPlan): BigInt =
+    try plan.stats.sizeInBytes
+    catch { case NonFatal(_) => BigInt(Long.MaxValue) }
 
   /** Partition count for `rows` rows at 1,000,000 rows per partition (a
     * few tens of MB of narrow rows per task, inside the guide §2.2
@@ -47,12 +64,34 @@ private[graft] object AdaptiveShuffle {
     // typed 18–39 ms/task — and 100–200 ms for wide-encoder doc kernels in
     // the per-stage profile `tools/QueryTime` prints), so on a small input
     // many short tasks burn more than they parallelize.
-    val maxBytes = 8L << 20
-    val sizeEst =
-      try df.queryExecution.optimizedPlan.stats.sizeInBytes
-      catch { case scala.util.control.NonFatal(_) => BigInt(Long.MaxValue) }
     val target = math.max(2, df.sparkSession.sparkContext.defaultParallelism / 4)
-    if (sizeEst <= maxBytes) df.repartition(target) else df
+    if (sizeEstimate(df.queryExecution.optimizedPlan) <= smallInputBytes) df.repartition(target)
+    else df
+  }
+
+  /** A query's presentation sort, planned for its size. A root global
+    * `Sort` over a SMALL child becomes a local `Sort` over
+    * `Repartition(1)`: the same rows in the same total order through one
+    * single-partition exchange, instead of a range exchange whose bounds
+    * cost a sampling job of their own. A child that is larger, or of
+    * unknown size (`Long.MaxValue`: an RDD-built input, or a cut of one —
+    * a cut keeps its origin's estimate), keeps the range sort, so nothing
+    * changes at scale; so does a child already in one partition (a LIMIT
+    * under row-local operators), where the range sort plans no exchange
+    * at all. The estimate is the ANALYZED plan's: no optimizer pass and no
+    * job while the query is built. */
+  def sortTail(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case s @ Sort(_, true, child, _) if sizeEstimate(child) <= smallInputBytes && !limited(child) =>
+      GraftFrames.ofRows(df.sparkSession,
+        s.copy(global = false, child = Repartition(1, shuffle = true, child)))
+    case _ => df
+  }
+
+  /** A LIMIT under row-local operators only: one partition's rows. */
+  @tailrec private def limited(plan: LogicalPlan): Boolean = plan match {
+    case _: GlobalLimit => true
+    case p @ (_: Project | _: Filter | _: Window) => limited(p.children.head)
+    case _ => false
   }
 
   private val pinLocks = java.util.Collections.synchronizedMap(

@@ -124,12 +124,17 @@ object Probe {
   final case class Stage(id: Int, name: String, tasks: Int, runMs: Long, cpuNs: Long,
       deserMs: Long, gcMs: Long, shuffleReadB: Long, shuffleWriteB: Long)
 
-  /** One job: description, wall seconds and the stages credited to it (a
-    * stage several jobs list goes to the last one that registered it). */
-  final case class Job(id: Int, desc: String, sec: Double, stages: Seq[Stage])
+  /** One job: description, start and end (epoch ms) and the stages
+    * credited to it (a stage several jobs list goes to the last one that
+    * registered it). */
+  final case class Job(id: Int, desc: String, startMs: Long, endMs: Long, stages: Seq[Stage]) {
+    def sec: Double = (endMs - startMs) / 1e3
+  }
 
-  /** The jobs and stages one measured body ran. */
-  final case class Window(jobs: Seq[Job], stages: Seq[Stage]) {
+  /** The jobs and stages one measured body ran, and `driverSec`: the
+    * body's wall that no job's `[start, end]` covers (planning, codegen
+    * and driver-side work before, between and after the jobs). */
+  final case class Window(jobs: Seq[Job], stages: Seq[Stage], driverSec: Double) {
     def tasks: Int = stages.map(_.tasks).sum
     def cpuSec: Double = stages.map(_.cpuNs).sum / 1e9
     def runSec: Double = stages.map(_.runMs).sum / 1e3
@@ -173,15 +178,29 @@ object Probe {
     def measure[T](body: => T): (T, Double, Window) = {
       GraftBus.drain(sc)
       synchronized { stages.clear(); jobs.clear(); owner.clear() }
+      val from = System.currentTimeMillis()
       val (r, sec) = time(body)
+      val until = System.currentTimeMillis()
       GraftBus.drain(sc)
       synchronized {
         val js = jobs.toSeq.map { case (id, (desc, t0, t1)) =>
-          Job(id, desc, (t1 - t0) / 1e3, stages.values.filter(s => owner.get(s.id).contains(id)).toSeq)
+          Job(id, desc, t0, t1, stages.values.filter(s => owner.get(s.id).contains(id)).toSeq)
         }
-        (r, sec, Window(js, stages.values.toSeq))
+        (r, sec, Window(js, stages.values.toSeq, uncoveredSec(from, until, js)))
       }
     }
+  }
+
+  /** Seconds of `[from, until]` (epoch ms) that no job's `[start, end]`
+    * covers. */
+  private[graft] def uncoveredSec(from: Long, until: Long, jobs: Seq[Job]): Double = {
+    var covered = 0L
+    var reach = from
+    jobs.map(j => (j.startMs max from, j.endMs min until)).sortBy(_._1).foreach { case (a, b) =>
+      val lo = a max reach
+      if (b > lo) { covered += b - lo; reach = b }
+    }
+    (until - from - covered) / 1e3
   }
 
   /** One named stage's wall seconds and the jobs and stages it ran;
@@ -207,6 +226,7 @@ object Probe {
     }
 
     def total: Timing = Timing("total", done.map(_.sec).sum,
-      Window(done.flatMap(_.window.jobs).toSeq, done.flatMap(_.window.stages).toSeq))
+      Window(done.flatMap(_.window.jobs).toSeq, done.flatMap(_.window.stages).toSeq,
+        done.map(_.window.driverSec).sum))
   }
 }

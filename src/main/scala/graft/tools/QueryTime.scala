@@ -13,7 +13,9 @@ package graft.tools
   *    second rep reads 20-60% high.
   *  - `profile`: jobs, stages and tasks as the min and max over those same
   *    warm reps (one build's task count can flip between reps), then the
-  *    LAST rep's summed task CPU and run time and shuffle bytes.
+  *    LAST rep's summed task CPU and run time, shuffle bytes, and
+  *    `driver_s`: its wall that no job's `[start, end]` covers (query
+  *    build, planning and the gaps between jobs).
   *  - `job`: per job of the last rep, its wall, stages, tasks and shuffle.
   *  - `stage`: every stage of the last rep that ran ≥ 200 ms of task time.
   */
@@ -53,7 +55,7 @@ object QueryTime {
         rec("profile", range("jobs", _.jobs.size) ++ range("stages", _.stages.size) ++
           range("tasks", _.tasks) ++ Seq("cpu" -> w.cpuSec, "run" -> w.runSec,
             "shuffle_read_kib" -> w.shuffleReadB / 1024,
-            "shuffle_write_kib" -> w.shuffleWriteB / 1024): _*)
+            "shuffle_write_kib" -> w.shuffleWriteB / 1024, "driver_s" -> w.driverSec): _*)
         w.jobs.foreach { j =>
           rec("job", "job" -> j.id, "sec" -> j.sec, "stages" -> j.stages.size,
             "tasks" -> j.stages.map(_.tasks).sum, "exec_ms" -> j.stages.map(_.runMs).sum,

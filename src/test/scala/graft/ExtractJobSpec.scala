@@ -12,7 +12,6 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{CollectMetricsExec, FilterExec, MapPartitionsExec, ProjectExec,
   QueryExecution, SerializeFromObjectExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -217,13 +216,7 @@ class ExtractJobSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
   }
 
   test("the write plan carries no lineage: kernel output goes straight to the write's sort") {
-    // the executed tree, through AQE's final plan and its query stages
-    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: QueryStageExec => Seq(q.plan)
-      case _ => p.children
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    import ExecutedPlan.{kids, nodes}
     // only this run's write: an earlier test's events may still be queued
     val out = s"$base/outPlan"
     val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]

@@ -1,13 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.Materialize
 import graft.kernel.Chunker
 import graft.multimodal.MediaOps
-import graft.queries.{Blocking, EntityLink, TrainingOps}
+import graft.queries.{AdaptiveShuffle, Blocking, EntityLink, TrainingOps}
 
 /** Unit + small-cluster tests for the training-data / multimodal / linking
   * operators (the non-extraction half of the surface). */
@@ -1223,6 +1227,34 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = SparkEntry.queries("j5_golden_compare")(spark, "").collect().head
     assert(r.getLong(0) == 300L, "full outer join covers every doc")
     assert(r.getLong(1) == 0L, "kernel == golden through the Spark surface")
+  }
+
+  private def exchanges(nodes: Seq[SparkPlan], part: Partitioning => Boolean) =
+    nodes.collect { case e: ShuffleExchangeExec if part(e.outputPartitioning) => e }
+
+  test("a small query's presentation sort runs in one partition: same rows, no range exchange, no job to build") {
+    val sf = "/root/testdata/sf0.001"
+    val tally = new graft.tools.Probe.Tally(spark)
+    Seq("q1_agg", "mm_resize_plan").foreach { name =>
+      val (df, _, build) = tally.measure(SparkEntry.queries(name)(spark, sf))
+      assert(build.jobs.isEmpty, s"$name: building it ran ${build.jobs.size} jobs")
+      val rows = df.collect().toSeq
+      assert(rows.nonEmpty && rows == SparkEntry.rawQueries(name)(spark, sf).collect().toSeq,
+        s"$name: rows differ from the range-sorted form")
+      val nodes = ExecutedPlan.nodes(df.queryExecution.executedPlan)
+      assert(exchanges(nodes, _.isInstanceOf[RangePartitioning]).isEmpty, s"$name: range exchange left")
+      assert(exchanges(nodes, _ == SinglePartition).size == 1, s"$name: expected one single-partition exchange")
+      assert(nodes.exists {
+        case s: SortExec => !s.global && exchanges(ExecutedPlan.nodes(s), _ == SinglePartition).nonEmpty
+        case _ => false
+      }, s"$name: the single-partition exchange is not under a local sort")
+    }
+    // a cut of unknown size (its origin has no statistics) keeps the range sort
+    val cut = Materialize.truncate(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(3L, 1L, 2L).map(Row(_)), 2), spark.range(0L).schema))
+    val sorted = AdaptiveShuffle.sortTail(cut.orderBy(col("id")))
+    assert(sorted.collect().map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
+    assert(exchanges(ExecutedPlan.nodes(sorted.queryExecution.executedPlan), _.isInstanceOf[RangePartitioning]).size == 1)
   }
 
   // ------------------------------------------------------------- lang id

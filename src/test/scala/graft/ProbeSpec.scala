@@ -21,7 +21,18 @@ class ProbeSpec extends AnyFunSuite {
       val (_, _, wide) = tally.measure(spark.range(0L, 7000L, 1L, 7).repartition(3).collect())
       assert(wide.shuffleWriteB > 0L && wide.shuffleReadB > 0L)
       assert(wide.jobs.flatMap(_.stages).map(_.id).toSet == wide.stages.map(_.id).toSet)
+
+      val (_, sec, slept) = tally.measure { Thread.sleep(300); spark.range(0L, 10L, 1L, 2).collect() }
+      assert(slept.driverSec >= 0.29 && slept.driverSec <= sec + 0.01, s"driver ${slept.driverSec} of $sec s")
     }
+  }
+
+  test("uncoveredSec: the wall no job's [start, end] covers, overlaps counted once") {
+    def job(start: Long, end: Long) = Probe.Job(0, "", start, end, Nil)
+    assert(Probe.uncoveredSec(0L, 1000L, Nil) == 1.0)
+    // 100-400 covered once although two jobs overlap; the last job is clipped at 1000
+    assert(Probe.uncoveredSec(0L, 1000L, Seq(job(900, 1200), job(100, 300), job(200, 400))) == 0.6)
+    assert(Probe.uncoveredSec(0L, 1000L, Seq(job(-50, 1100))) == 0.0)
   }
 
   test("alpha: log-log growth exponent, n/a without a cost") {

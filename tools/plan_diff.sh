@@ -14,10 +14,8 @@
 #   SPARK_GRAFT_SF_DIR  warehouse the queries read (Plans' default if unset)
 #
 # Prints the names of the queries whose plans differ, then the diff.
-# Exits 0 iff every plan is identical. Known false positives: the `Expand`
-# of a query with several distinct aggregates (`a11_distinct`,
-# `j7_entity_aliases`) lists its groups in expression-id order, which can
-# flip between two runs of the whole list; re-run such a query alone.
+# Exits 0 iff every plan is identical (see expand_norm for the one
+# order-insensitive case).
 set -euo pipefail
 
 repo=$(git -C "$(dirname "$0")/.." rev-parse --show-toplevel)
@@ -41,13 +39,69 @@ plans() { # <checkout> <log>
   mv "$2.tmp" "$2"
 }
 
+# A plan with several distinct aggregates holds an `Expand` whose groups,
+# the columns they fill and their group ids follow expression-id order,
+# which can flip between two runs of the whole list (`a11_distinct`,
+# `j7_entity_aliases`). In each plan whose Expand fills such a `gid`
+# column, blank the group ids and sort the items of every bracketed list
+# and of every `hashpartitioning(...)`, so such a flip prints identically;
+# a real order change inside those plans is not seen. The Expand of a
+# rollup, cube or grouping set (`spark_grouping_id`) follows the query's
+# own order and is compared as printed.
+expand_norm() {
+  python3 -c '
+import re, sys
+
+def items(s):
+    out, depth, cur = [], 0, ""
+    for ch in s:
+        depth += ch in "([\x02"
+        depth -= ch in ")]\x03"
+        if ch == "," and depth == 0:
+            out.append(cur.strip()); cur = ""
+        else:
+            cur += ch
+    return out + [cur.strip()]
+
+def canon(line, expand_args):
+    line = re.sub(r"gid# = [0-9]+", "gid# = ?", line)
+    if expand_args:
+        line = re.sub(r", [0-9]+\]", ", ?]", line)
+    line = re.sub(r"hashpartitioning\(([^()]*)\)",
+                  lambda m: "hashpartitioning(" + ", ".join(sorted(items(m.group(1)))) + ")", line)
+    prev = None
+    while prev != line:
+        prev = line
+        line = re.sub(r"\[([^\[\]]*)\]",
+                      lambda m: "\x02" + ", ".join(sorted(items(m.group(1)))) + "\x03", line)
+    return line.replace("\x02", "[").replace("\x03", "]")
+
+def flush(block):
+    if not (any(re.match(r"\([0-9]+\) Expand", l) for l in block) and
+            any("gid# = " in l for l in block)):
+        return block
+    out, in_expand = [], False
+    for l in block:
+        in_expand = bool(re.match(r"\([0-9]+\) Expand", l)) or (in_expand and l.strip() != "")
+        out.append(canon(l, in_expand and l.startswith("Arguments:")))
+    return out
+
+block = []
+for line in sys.stdin:
+    if line.startswith("===== PLAN") and block:
+        sys.stdout.writelines(flush(block)); block = []
+    block.append(line)
+sys.stdout.writelines(flush(block))
+'
+}
+
 norm() {
   sed -n '/^===== PLAN/,$p' "$1" | grep -v '^\[\(info\|success\|warn\)\]' |
     sed -E 's/#[0-9]+L?/#/g
       s/(ExistingRDD|LogicalRDD|MapPartitionsRDD|ParallelCollectionRDD|RDD)\[[0-9]+\]/\1[]/g
       s/Lambda\$?[0-9]+\/0x[0-9a-f]+/Lambda/g; s/@[0-9a-f]{5,8}\b/@/g
       s/\$anonfun\$[^ ,)\]]*/$anonfun/g; s#(/tmp|/dev/shm)/[^ ,)\]]*#TMP#g
-      s/plan_id=[0-9]+/plan_id=/g; s/id=[0-9]+/id=/g'
+      s/plan_id=[0-9]+/plan_id=/g; s/id=[0-9]+/id=/g' | expand_norm
 }
 
 base_log="$work/base-$sha-$tag.log"
